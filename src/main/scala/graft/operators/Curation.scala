@@ -1114,9 +1114,10 @@ object Curation {
     * BigramMatSweep measured, materializing it wins here (review r14;
     * measured at sf0.1 in BENCHNOTES). */
   private[graft] def perDocIds(docs: DataFrame, tokDir: String): DataFrame = {
-    val spark = docs.sparkSession
-    val eos = 36 + TokenizerStore.loadMerges(spark, tokDir).size
-    TokenizerStore.encodeBpeIds(docs, tokDir)
+    // ONE merge-table load feeds both the encode and the EOS id
+    val merges = TokenizerStore.loadMerges(docs.sparkSession, tokDir)
+    val eos = 36 + merges.size
+    TokenizerStore.encodeBpeIdsWith(docs, merges)
       .groupBy(col("doc_id"))
       .agg(
         concat_ws(",", transform(

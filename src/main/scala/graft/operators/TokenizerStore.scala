@@ -34,7 +34,9 @@ import org.apache.spark.sql.types.IntegerType
   * vocabulary-bounded either way, so serving cost never scales with
   * the training corpus. Scoring/encoding reads are `_SUCCESS`-gated
   * with explicit schemas (the [[IndexStore.load]] job-budget
-  * discipline: schema inference is a Spark job per read).
+  * discipline: schema inference is a Spark job per read), and every
+  * BPE encode loads its merge table exactly once — one Spark job per
+  * encode, however many derived values (vocabulary, EOS id) it needs.
   *
   * Freshness rides the same fingerprint/marker warehouse protocol as
   * the index tier ([[IndexStore.ensureArtifactFor]], layout tag `t1`):
@@ -67,13 +69,20 @@ object TokenizerStore {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/merges")
 
   /** The frozen ordered merge table (≤ rounds rows — the bounded
-    * driver-side collect every encode needs anyway). */
+    * driver-side collect every encode needs anyway) in ONE Spark job:
+    * the read schema is explicit (no inference job) and the rows sort
+    * by rank on the driver (an `orderBy` would add a range-sampling
+    * job and a shuffle for a KB-sized table). The table is immutable,
+    * so each encode loads it ONCE and derives everything else — the
+    * vocabulary ([[vocabOf]]), the EOS id ([[Curation.perDocIds]]) —
+    * from that one `Seq`. */
   def loadMerges(spark: SparkSession, dir: String): Seq[(String, String)] = {
     import spark.implicits._
     spark.read.schema("rank INT, pair STRING, merged STRING, cnt BIGINT")
       .parquet(IndexStore.requireTable(spark, dir, "merges"))
-      .orderBy(col("rank")).select(col("pair"), col("merged"))
-      .as[(String, String)].collect().toSeq
+      .select(col("rank"), col("pair"), col("merged"))
+      .as[(Int, String, String)].collect().toSeq
+      .sortBy(_._1).map { case (_, pair, merged) => (pair, merged) }
   }
 
   /** Encode a corpus against the PERSISTED merge table: one tiny
@@ -98,9 +107,13 @@ object TokenizerStore {
     * whose concatenations collide on the same SURFACE string (("ab","c")
     * and ("a","bc") both yield "abc") are indistinguishable in the
     * symbol text, so the surface keeps its FIRST (lowest-rank) id. */
-  def bpeVocab(spark: SparkSession, dir: String): Map[String, Int] = {
+  def bpeVocab(spark: SparkSession, dir: String): Map[String, Int] =
+    vocabOf(loadMerges(spark, dir))
+
+  /** [[bpeVocab]] of an already-loaded merge table — no Spark job. */
+  private[graft] def vocabOf(merges: Seq[(String, String)]): Map[String, Int] = {
     val chars = (('a' to 'z') ++ ('0' to '9')).map(_.toString).zipWithIndex.toMap
-    loadMerges(spark, dir).zipWithIndex.foldLeft(chars) {
+    merges.zipWithIndex.foldLeft(chars) {
       case (m, ((_, merged), r)) =>
         if (m.contains(merged)) m else m + (merged -> (36 + r))
     }
@@ -112,12 +125,16 @@ object TokenizerStore {
     * one word explode: the replace-chain encode plus a literal-map id
     * lookup, all whole-stage codegen, no training, no shuffle beyond
     * the explode. */
-  def encodeBpeIds(docs: DataFrame, dir: String): DataFrame = {
-    val spark = docs.sparkSession
+  def encodeBpeIds(docs: DataFrame, dir: String): DataFrame =
+    encodeBpeIdsWith(docs, loadMerges(docs.sparkSession, dir))
+
+  /** [[encodeBpeIds]] against an already-loaded merge table, for callers
+    * that derive more from the same table (the EOS id, the inverse
+    * vocabulary) — the vocabulary comes from `merges`, no second load. */
+  private[graft] def encodeBpeIdsWith(docs: DataFrame,
+      merges: Seq[(String, String)]): DataFrame =
     // same §2.5/§2.6 parallelism floor as [[encodeBpe]]
-    TextAnalysis.bpeEncodeIdsWith(graft.core.Par.widen(docs),
-      loadMerges(spark, dir), bpeVocab(spark, dir))
-  }
+    TextAnalysis.bpeEncodeIdsWith(graft.core.Par.widen(docs), merges, vocabOf(merges))
 
   /** DETOKENIZE — the inverse leg that completes the tokenizer chain
     * (train → encode → ids → DECODE): run the frozen artifact's encode,
@@ -135,9 +152,9 @@ object TokenizerStore {
     * the inverse vocab is the same ≤ 36+rounds-entry driver literal as
     * the forward one. */
   def decodeBpeIds(docs: DataFrame, dir: String): DataFrame = {
-    val spark = docs.sparkSession
-    val inv: Map[Int, String] = bpeVocab(spark, dir).map(_.swap)
-    val detok = encodeBpeIds(docs, dir)
+    val merges = loadMerges(docs.sparkSession, dir)
+    val inv: Map[Int, String] = vocabOf(merges).map(_.swap)
+    val detok = encodeBpeIdsWith(docs, merges)
       .select(col("doc_id"), col("pos"),
         concat_ws("", transform(split(col("ids"), ","),
           s => element_at(typedLit(inv), s.cast(IntegerType)))).as("w"))

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
@@ -79,13 +79,18 @@ import graft.operators.{Curation, Declared, Dedup, IndexStore}
   */
 object CurateStream {
 
-  private val keysSchema = StructType(Seq(
-    StructField("_key", StringType), StructField("batch_id", LongType)))
+  /** The key and band stores' DATA columns — the schema a store fold
+    * ([[Maintenance.compactBatchStore]]) reads its partition dirs with;
+    * the batch reads below add the `batch_id` partition column. */
+  private[streaming] val keysData = StructType(Seq(StructField("_key", StringType)))
 
-  private val bandsSchema = StructType(Seq(
+  private[streaming] val bandsData = StructType(Seq(
     StructField("doc_id", LongType),
-    StructField("bands", ArrayType(LongType)),
-    StructField("batch_id", LongType)))
+    StructField("bands", ArrayType(LongType))))
+
+  private val keysSchema = keysData.add("batch_id", LongType)
+
+  private val bandsSchema = bandsData.add("batch_id", LongType)
 
   private def keyed(docs: DataFrame): DataFrame =
     docs.withColumn("_key", md5(Dedup.normText(col("text")).cast("binary")))
@@ -238,6 +243,18 @@ object CurateStream {
         .write.mode("overwrite").parquet(d)
       d
     }
+    // READ-AFTER-OVERWRITE assumption of the read-back: the gate and the
+    // stats below trust that a read of `d` sees exactly the files the
+    // overwrite above just committed. That holds because (a) the write
+    // has returned, so its job commit (overwrite deletes the old
+    // partition first) is done before `readScored` lists `d`, and the
+    // listing is taken when the frame is built, not re-taken later;
+    // (b) the filesystem lists and reads after a write consistently
+    // (HDFS, local, and today's S3 do; an eventually consistent store
+    // could list a replay's stale files and gate on them); (c) the
+    // stream is the dir's single writer, so nothing overwrites batch
+    // N's ledger between the write and its reads; and (d) a crashed
+    // attempt leaves only `_temporary` debris, which readers skip.
     def readScored(d: String): DataFrame = sp.read
       .schema("doc_id BIGINT, logw_e6 BIGINT, passed INT").parquet(d)
     val filtered2 = dsirScored match {
@@ -480,14 +497,21 @@ object CurateStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-          Maintenance.compactBatchStore(spark, keysDir, upTo = batchId - 1)
-          Maintenance.compactBatchStore(spark, bandsDirOf(dataDir), upTo = batchId - 1)
-        }
+        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+          compactKeysAndBands(spark, keysDir, dataDir, upTo = batchId - 1)
         processBatch(batch, batchId, keysDir, dataDir, minWords, maxDupWordFrac,
           nearDupJaccard, tombstoneIndex, lmGate, dsirGate)
       }
       .start()
+  }
+
+  /** The in-stream fold of the key and band stores ([[start]]'s and
+    * [[startCurateAndPack]]'s cadence), each read with its declared
+    * data schema. */
+  private def compactKeysAndBands(spark: SparkSession, keysDir: String,
+      dataDir: String, upTo: Long): Unit = {
+    Maintenance.compactBatchStore(spark, keysDir, upTo, keysData)
+    Maintenance.compactBatchStore(spark, bandsDirOf(dataDir), upTo, bandsData)
   }
 
   /** Run one AvailableNow pass to completion (test / cron entry). */
@@ -564,7 +588,8 @@ object CurateStream {
         // FINISH the swap first — processBatch's layout gate would
         // otherwise refuse the batch forever
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          Maintenance.compactBatchStore(spark, keysDir, upTo = batchId - 1)
+          Maintenance.compactBatchStore(spark, keysDir, upTo = batchId - 1,
+            schema = keysData)
         processBatch(batch, batchId, keysDir, dataDir, minWords, maxDupWordFrac)
         // this batch's survivors, re-read from the partition the write
         // above just created (explicit pruned schema: the vectorizer
@@ -651,8 +676,7 @@ object CurateStream {
             ((compactEvery > 0 && batchId % compactEvery == 0) ||
               (autoCompactFragDirs > 0 &&
                 PackStream.fragDirCount(spark, packDir) >= autoCompactFragDirs))) {
-          Maintenance.compactBatchStore(spark, keysDir, upTo = batchId - 1)
-          Maintenance.compactBatchStore(spark, bandsDirOf(dataDir), upTo = batchId - 1)
+          compactKeysAndBands(spark, keysDir, dataDir, upTo = batchId - 1)
           PackStream.compactAt(spark, packDir, upTo = batchId - 1)
         }
         processBatch(batch, batchId, keysDir, dataDir, minWords, maxDupWordFrac,
@@ -677,19 +701,18 @@ object CurateStream {
     * stream the row starts, with its checkpoint/outputs under the same
     * root). Returns the scratch root; outputs under it are read lazily,
     * so the tree is reaped at JVM exit via the SHARED hook (one per
-    * JVM, not one hook thread per invocation; ADVICE r11). The min/max
-    * collect is one row (drop-boundary arithmetic); stream-vs-batch
-    * parity holds for ANY ordered cut, so the boundary choice affects
-    * batch sizes, never results. */
+    * JVM, not one hook thread per invocation; ADVICE r11). The cut
+    * points are `cuts`, or [[terciles]] of `docs` (one 1-row min/max
+    * job) when the caller has none; stream-vs-batch parity holds for
+    * ANY ordered cut, so the boundary choice affects batch sizes, never
+    * results. */
   private[streaming] def threeOrderedDrops(docs: DataFrame, prefix: String,
-      idCol: String = "doc_id")(pass: String => Unit): String = {
+      idCol: String = "doc_id", cuts: Option[Terciles] = None)(
+      pass: String => Unit): String = {
     val rootPath = java.nio.file.Files.createTempDirectory(prefix)
     graft.core.TempReaper.reapAtExit(rootPath)
     val root = rootPath.toString
-    val r = docs.agg(min(col(idCol)), max(col(idCol))).head
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
-    val cut1 = lo + (hi - lo) / 3
-    val cut2 = lo + 2 * ((hi - lo) / 3)
+    val drop = cuts.getOrElse(terciles(docs, idCol)).batchId(col(idCol))
     // ONE source scan lands all three drops, partitioned by drop index,
     // into a staging dir (r20 optimization: the per-drop filter+write
     // form re-scanned the full source once per drop — 3 scans + the
@@ -701,8 +724,7 @@ object CurateStream {
     // drops `_drop` from the data files, so the landed schema is
     // unchanged too.
     val stage = s"$root/stage"
-    docs.withColumn("_drop",
-        when(col(idCol) <= cut1, 0).when(col(idCol) <= cut2, 1).otherwise(2))
+    docs.withColumn("_drop", drop)
       .coalesce(2)
       .write.partitionBy("_drop").parquet(stage)
     val fs = new Path(root).getFileSystem(
@@ -832,7 +854,8 @@ object CurateStream {
     val dsirDir = graft.operators.TokenizerStore.ensureTokenizerFor(spark,
       s"$dir/documents.parquet", "dsir-en-a05",
       d => Curation.trainDsir(docs, col("lang") === "en", d))
-    val root = threeOrderedDrops(docs, "xs-dsir-drift") { root =>
+    val cuts = terciles(docs)
+    val root = threeOrderedDrops(docs, "xs-dsir-drift", cuts = Some(cuts)) { root =>
       runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck",
         dsirGate = Some((dsirDir, 0.0)))
     }
@@ -863,7 +886,7 @@ object CurateStream {
     spark.read
       .schema("doc_id BIGINT, logw_e6 BIGINT, passed INT, batch_id BIGINT")
       .parquet(dsirScoredDirOf(s"$root/out/data"))
-      .withColumn("batch_id", tercileBatchId(docs, col("doc_id")))
+      .withColumn("batch_id", cuts.batchId(col("doc_id")))
       .groupBy(col("batch_id"))
       .agg(count(lit(1)).as("n_scored"),
         sum(when(col("passed") === 1, 1L).otherwise(0L)).as("n_passed"),
@@ -934,7 +957,8 @@ object CurateStream {
     val dsirDir = graft.operators.TokenizerStore.ensureTokenizerFor(spark,
       s"$dir/documents.parquet", "dsir-en-a05",
       d => Curation.trainDsir(docs, col("lang") === "en", d))
-    val root = threeOrderedDrops(docs, "xs-dsir-memb") { root =>
+    val cuts = terciles(docs)
+    val root = threeOrderedDrops(docs, "xs-dsir-memb", cuts = Some(cuts)) { root =>
       runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck",
         dsirGate = Some((dsirDir, 0.0)))
     }
@@ -945,23 +969,29 @@ object CurateStream {
     spark.read
       .schema("doc_id BIGINT, logw_e6 BIGINT, passed INT, batch_id BIGINT")
       .parquet(dsirScoredDirOf(s"$root/out/data"))
-      .select(tercileBatchId(docs, col("doc_id")).as("batch_id"),
+      .select(cuts.batchId(col("doc_id")).as("batch_id"),
         col("doc_id"), col("logw_e6"), col("passed"))
       .orderBy(col("doc_id"))
   }
 
-  /** The oracle's `memb` arithmetic as a Column: which of the three
-    * ordered drops a doc_id belongs to, derived from the CORPUS bounds
-    * — [[threeOrderedDrops]]'s own cut points, so a scored doc's drop
-    * is a pure function of the data and no trigger accounting (a
-    * no-data micro-batch shifting the counter, VERDICT r20 #1) can
-    * move it. */
-  private[streaming] def tercileBatchId(docs: DataFrame,
-      idCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val b = docs.agg(min(col("doc_id")), max(col("doc_id"))).head
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    when(idCol <= lo + (hi - lo) / 3, 0L)
-      .when(idCol <= lo + 2 * ((hi - lo) / 3), 1L).otherwise(2L)
+  /** [[threeOrderedDrops]]'s cut points over the CORPUS id bounds
+    * `[lo, hi]` — the oracle's `memb` arithmetic. */
+  private[streaming] final case class Terciles(lo: Long, hi: Long) {
+    /** Which of the three ordered drops an id belongs to: a pure
+      * function of the data, so no trigger accounting (a no-data
+      * micro-batch shifting the counter, VERDICT r20 #1) can move a
+      * scored doc's drop. */
+    def batchId(id: Column): Column =
+      when(id <= lo + (hi - lo) / 3, 0L)
+        .when(id <= lo + 2 * ((hi - lo) / 3), 1L).otherwise(2L)
+  }
+
+  /** The id bounds of `docs` — one 1-row min/max job. A row that both
+    * drops `docs` and re-derives each doc's drop computes them once
+    * and passes them to [[threeOrderedDrops]]. */
+  private[streaming] def terciles(docs: DataFrame, idCol: String = "doc_id"): Terciles = {
+    val r = docs.agg(min(col(idCol)), max(col(idCol))).head
+    Terciles(r.getLong(0), r.getLong(1))
   }
 
   /** Per-doc restatement of [[xsDsirDriftSql]]'s `scored` set with doc

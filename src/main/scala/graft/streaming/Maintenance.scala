@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types._
 
 /** Sink maintenance jobs.
@@ -151,6 +151,16 @@ object Maintenance {
     * listing cost and the anti-join's file count degrade with it —
     * this is the fix, run periodically like any sink maintenance.
     *
+    * `schema` is the store's DATA columns — required, never inferred:
+    * the partition directories are read as roots, so `batch_id` is not
+    * a column there (and is refused here), and a column the schema
+    * omits is dropped from the compacted partition. Job budget: the
+    * fold's shuffles plus its ONE write — no schema-inference job, and
+    * no read-back of the installed partition (the returned count rides
+    * the write through an [[org.apache.spark.sql.Observation]]). The
+    * in-stream callers fold once per cadence hit, so every job here is
+    * a trigger's fixed cost.
+    *
     * REPLAY CONTRACT: the store is read with `batch_id < N`, so the
     * compacted partition keeps the LARGEST compacted id (`upTo`) and
     * `upTo` must be strictly below any batch that may still replay —
@@ -176,10 +186,14 @@ object Maintenance {
     * sequence fragments pre-merge per seq_id); it must be a pure
     * function of the union (re-running it on recovery is not possible:
     * the tmp is already folded), which the fully-written-before-marker
-    * ordering guarantees is never needed. */
+    * ordering guarantees is never needed. The returned count is of the
+    * FOLDED rows — what the installed partition holds. */
   def compactBatchStore(spark: SparkSession, storeDir: String, upTo: Long,
-      targetFiles: Int = 1,
+      schema: StructType, targetFiles: Int = 1,
       fold: DataFrame => DataFrame = identity): Long = {
+    require(!schema.fieldNames.contains("batch_id"),
+      s"compactBatchStore: the schema of $storeDir must list data columns only " +
+        "— batch_id is the partition directory, not a column of its files")
     val root = new Path(storeDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new Path(root, CompactMarker)
@@ -213,9 +227,13 @@ object Maintenance {
       .sortBy(_._2)
     if (srcs.length <= 1) return -1L
     fs.delete(tmp, true)
-    fold(spark.read.parquet(srcs.map { case (n, _) => s"$storeDir/$n" }.toIndexedSeq: _*))
+    val written = Observation()
+    fold(spark.read.schema(schema)
+        .parquet(srcs.map { case (n, _) => s"$storeDir/$n" }.toIndexedSeq: _*))
+      .observe(written, count(lit(1)).as("rows"))
       .repartition(targetFiles)
       .write.mode("overwrite").parquet(tmp.toString)
+    val rows = written.get("rows").asInstanceOf[Long]
     val out = fs.create(marker, true)
     try out.write((s"batch_id=$upTo" +: srcs.map(_._1).toSeq).mkString("\n").getBytes("UTF-8"))
     finally out.close()
@@ -223,6 +241,6 @@ object Maintenance {
     val target = new Path(root, s"batch_id=$upTo")
     require(fs.rename(tmp, target), s"compaction swap failed: $tmp -> $target (marker at $marker)")
     fs.delete(marker, false)
-    spark.read.parquet(target.toString).count()
+    rows
   }
 }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 
 import graft.core.Tables
 import graft.operators.{Curation, Declared, TokenizerStore}
@@ -464,6 +464,17 @@ object PackStream {
           array_sort(collect_list(struct(col("start"), col("doc_starts")))),
           x => x.getField("doc_starts"))).as("doc_starts"))
 
+  /** A fragment store: its directory under the pack dir, its data
+    * columns ([[fragmentsOf]] / [[boundsOf]] output) and its per-seq_id
+    * merge — the one declaration serving ([[served]]) and the fold
+    * ([[foldStore]]) both read with. */
+  private[streaming] final case class Store(name: String, cols: String,
+      merge: DataFrame => DataFrame)
+  private[streaming] val Frag =
+    Store("frag", "seq_id BIGINT, start BIGINT, n_tokens INT, ids STRING", mergeFrags)
+  private[streaming] val Bnd =
+    Store("bnd", "seq_id BIGINT, start BIGINT, n_docs INT, doc_starts STRING", mergeBounds)
+
   /** Fold every fragment partition `batch_id ≤ upTo` (of BOTH stores)
     * into ONE pre-MERGED partition each — [[Maintenance.compactBatchStore]]'s
     * crash-safe fold with packing's reduction: fragments of the same
@@ -501,9 +512,18 @@ object PackStream {
     * discipline — see [[compactStats]]). */
   private[streaming] def compactAt(spark: SparkSession, outDir: String, upTo: Long): Long = {
     compactStats(spark, outDir, upTo)
-    Maintenance.compactBatchStore(spark, s"$outDir/bnd", upTo, fold = mergeBounds)
-    Maintenance.compactBatchStore(spark, s"$outDir/frag", upTo, fold = mergeFrags)
+    foldStore(spark, outDir, Bnd, upTo)
+    foldStore(spark, outDir, Frag, upTo)
   }
+
+  /** One store's pre-merging fold: [[Maintenance.compactBatchStore]]
+    * with the store's declared columns (no inference) and its merge.
+    * Returns the folded partition's row count, or -1 with nothing to
+    * fold. */
+  private[streaming] def foldStore(spark: SparkSession, outDir: String,
+      store: Store, upTo: Long): Long =
+    Maintenance.compactBatchStore(spark, s"$outDir/${store.name}", upTo,
+      StructType.fromDDL(store.cols), fold = store.merge)
 
   /** Default `autoCompactFragDirs`: fold once the fragment store holds
     * this many batch directories. Sized from PackServeSweep's measured
@@ -579,31 +599,30 @@ object PackStream {
     * as [[Curation.packIds]]; an uncommitted fragment dir (crash after
     * the write, before the state swap) is invisible until its replay
     * commits it. */
-  private def served(spark: SparkSession, outDir: String, store: String,
-      dataCols: String, merge: DataFrame => DataFrame): DataFrame = {
+  private def served(spark: SparkSession, outDir: String, store: Store): DataFrame = {
     val st = readState(spark, outDir).getOrElse(throw new IllegalArgumentException(
       s"PackStream: $outDir has no pack_state.json — run the stream first"))
-    val marker = new Path(s"$outDir/$store/${Maintenance.CompactMarker}")
+    val marker = new Path(s"$outDir/${store.name}/${Maintenance.CompactMarker}")
     require(!marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .exists(marker),
-      s"PackStream: $outDir/$store is mid-compaction (crashed fold) — re-invoke " +
+      s"PackStream: $outDir/${store.name} is mid-compaction (crashed fold) — re-invoke " +
         "compact (or replay the stream, whose pre-work compaction finishes the " +
         "plan) before serving")
-    merge(spark.read
-      .schema(s"seq_id BIGINT, start BIGINT, $dataCols, batch_id BIGINT")
-      .parquet(s"$outDir/$store")
+    store.merge(spark.read
+      .schema(s"${store.cols}, batch_id BIGINT")
+      .parquet(s"$outDir/${store.name}")
       .filter(col("batch_id") <= st.batchId))
       .drop("start")
   }
 
   def packed(spark: SparkSession, outDir: String): DataFrame =
-    served(spark, outDir, "frag", "n_tokens INT, ids STRING", mergeFrags)
+    served(spark, outDir, Frag)
 
   /** The attention-mask metadata as of the last committed batch —
     * [[Curation.packBounds]]'s contract, served from the incremental
     * bounds store under the same commit gate as [[packed]]. */
   def packedBounds(spark: SparkSession, outDir: String): DataFrame =
-    served(spark, outDir, "bnd", "n_docs INT, doc_starts STRING", mergeBounds)
+    served(spark, outDir, Bnd)
 
   // ----------------------------------------------------------- declared
   /** Stream-vs-batch parity, driver-oracled: the fixture lands as three

@@ -179,12 +179,21 @@ class CurateStreamSpec extends SparkSpec {
     assert(ids() == Seq(1L, 2L, 3L, 4L))
 
     // compact batches 0..1 (strictly below the newest committed batch 2)
-    assert(Maintenance.compactBatchStore(spark, keysDir, upTo = 1) == 3L)
-    assert(Maintenance.compactBatchStore(spark, bandsDir, upTo = 1) == 3L)
+    // the store schema is data columns only: batch_id is the partition dir
+    intercept[IllegalArgumentException] {
+      Maintenance.compactBatchStore(spark, keysDir, upTo = 1,
+        CurateStream.keysData.add("batch_id", "bigint"))
+    }
+    assert(Maintenance.compactBatchStore(spark, keysDir, upTo = 1, CurateStream.keysData) == 3L)
+    assert(Maintenance.compactBatchStore(spark, bandsDir, upTo = 1, CurateStream.bandsData) == 3L)
     assert(parts(keysDir) == Seq("batch_id=1", "batch_id=2"))
     assert(parts(bandsDir) == Seq("batch_id=1", "batch_id=2"))
+    // the installed partitions hold exactly the returned counts, and the
+    // band rows kept their array column through the declared schema
+    assert(spark.read.parquet(s"$keysDir/batch_id=1").count() == 3L)
+    assert(spark.read.parquet(s"$bandsDir/batch_id=1").columns.toSeq == Seq("doc_id", "bands"))
     // idempotent: nothing left to compact below upTo
-    assert(Maintenance.compactBatchStore(spark, keysDir, upTo = 1) == -1L)
+    assert(Maintenance.compactBatchStore(spark, keysDir, upTo = 1, CurateStream.keysData) == -1L)
 
     // replay of batch 2 after compaction: batch_id=1 < 2 keeps every
     // compacted key visible, batch 2's own keys still excluded
@@ -230,7 +239,8 @@ class CurateStreamSpec extends SparkSpec {
     assert(e.getMessage.contains(Maintenance.CompactMarker))
 
     // re-invoking compaction finishes the interrupted plan losslessly
-    Maintenance.compactBatchStore(spark, keysDir, upTo = 1)
+    // (and then has a single partition left, so nothing more to fold)
+    assert(Maintenance.compactBatchStore(spark, keysDir, upTo = 1, CurateStream.keysData) == -1L)
     assert(spark.read.parquet(keysDir).count() == 2)
     // and an exact dup of the doc whose partition was deleted mid-swap
     // is still caught — no key was lost
@@ -267,7 +277,7 @@ class CurateStreamSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$keysDir/${Maintenance.CompactMarker}"),
       "batch_id=1\nbatch_id=0\nbatch_id=1".getBytes("UTF-8"))
 
-    Maintenance.compactBatchStore(spark, keysDir, upTo = 1)
+    Maintenance.compactBatchStore(spark, keysDir, upTo = 1, CurateStream.keysData)
     assert(!new java.io.File(s"$keysDir/${Maintenance.CompactMarker}").exists())
     assert(spark.read.parquet(keysDir).count() == 3,
       "post-rename recovery deleted the installed compacted partition")
@@ -278,6 +288,50 @@ class CurateStreamSpec extends SparkSpec {
       == Seq(1L, 2L, 3L, 5L))
 
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
+  test("marker recovery then fold: the returned count is the installed partition's row count") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("curatecomprecount").toString
+    val keysDir = s"$root/out/_keys"; val dataDir = s"$root/out/data"
+    val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
+    CurateStream.processBatch(Seq(doc(1, bigText(1)), doc(2, bigText(2))).toDF(cols: _*),
+      0, keysDir, dataDir, 30, 0.5)
+    CurateStream.processBatch(Seq(doc(3, bigText(3))).toDF(cols: _*), 1, keysDir, dataDir, 30, 0.5)
+    CurateStream.processBatch(Seq(doc(4, bigText(4)), doc(5, bigText(5))).toDF(cols: _*),
+      2, keysDir, dataDir, 30, 0.5)
+
+    // crash at the worst point of a fold at upTo = 1: tmp written, the
+    // marker down, batch_id=0 already deleted, the swap rename never ran
+    spark.read.parquet(s"$keysDir/batch_id=0", s"$keysDir/batch_id=1")
+      .repartition(1).write.parquet(s"$keysDir/.compact-tmp")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$keysDir/${Maintenance.CompactMarker}"),
+      "batch_id=1\nbatch_id=0\nbatch_id=1".getBytes("UTF-8"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$keysDir/batch_id=0"))
+
+    // the next fold (upTo = 2) first finishes that plan, then folds the
+    // recovered batch_id=1 with batch_id=2: its count comes from the
+    // write itself, and must match what a re-read of the install finds
+    val n = Maintenance.compactBatchStore(spark, keysDir, upTo = 2, CurateStream.keysData)
+    assert(n == 5L)
+    assert(spark.read.parquet(s"$keysDir/batch_id=2").count() == n)
+    assert(new java.io.File(keysDir).list().filter(_.startsWith("batch_id=")).toSeq ==
+      Seq("batch_id=2"))
+    assert(!new java.io.File(s"$keysDir/${Maintenance.CompactMarker}").exists())
+
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
+  test("a fold of empty partitions installs an empty partition and counts 0") {
+    import spark.implicits._
+    // every doc of both batches rejected: each partition is one empty file
+    val dir = java.nio.file.Files.createTempDirectory("curatecompempty").toString
+    Seq.empty[String].toDF("_key").write.parquet(s"$dir/batch_id=0")
+    Seq.empty[String].toDF("_key").write.parquet(s"$dir/batch_id=1")
+    assert(Maintenance.compactBatchStore(spark, dir, upTo = 1, CurateStream.keysData) == 0L)
+    assert(spark.read.parquet(s"$dir/batch_id=1").count() == 0L)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("non-partitioned key-store layout fails the batch instead of silently skipping dedup") {
@@ -713,7 +767,7 @@ class CurateStreamSpec extends SparkSpec {
     // every scored doc's batch IS its tercile — a pure function of the
     // data, so no trigger-counter shift can move it
     val tc = docs.select($"doc_id",
-        CurateStream.tercileBatchId(docs, $"doc_id").as("b"))
+        CurateStream.terciles(docs).batchId($"doc_id").as("b"))
       .as[(Long, Long)].collect().toMap
     memb.foreach { case (b, id, _, _) =>
       assert(b == tc(id), s"doc $id attributed to batch $b, tercile ${tc(id)}")

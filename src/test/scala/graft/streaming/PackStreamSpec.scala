@@ -163,6 +163,27 @@ class PackStreamSpec extends SparkSpec {
       .orderBy(col("seq_id")).collect().toSeq == batch)
   }
 
+  test("frag and bnd folds return the row count of the partition they install") {
+    val root = java.nio.file.Files.createTempDirectory("packfoldcount").toString
+    val out = s"$root/out"
+    val tok = trainTok()
+    dropConds.zipWithIndex.foreach { case (cond, i) =>
+      writeDrop(root, i, cond)
+      PackStream.runOnce(spark, s"$root/in/*", out, s"$root/ck", tok,
+        autoCompactFragDirs = 0)
+    }
+    val served = PackStream.packed(spark, out).orderBy(col("seq_id")).collect().toSeq
+    // the count rides the fold's write; a re-read of the install agrees
+    val nBnd = PackStream.foldStore(spark, out, PackStream.Bnd, upTo = 1L)
+    assert(nBnd > 0 && nBnd == spark.read.parquet(s"$out/bnd/batch_id=1").count())
+    // compactAt's bounds fold now has one partition left (-1); its frag
+    // fold is the returned count
+    val nFrag = PackStream.compactAt(spark, out, upTo = 1L)
+    assert(nFrag > 0 && nFrag == spark.read.parquet(s"$out/frag/batch_id=1").count())
+    assert(PackStream.packed(spark, out).orderBy(col("seq_id")).collect().toSeq == served)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
   test("autoCompactFragDirs folds on the measured signal: fragment dirs stay bounded, " +
       "served sequences unchanged") {
     val root = java.nio.file.Files.createTempDirectory("packauto").toString
