@@ -9,10 +9,10 @@ import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst form of the Go-%q projection (reference main.go:113):
-  * a codegen'd unary expression calling the same quoting kernel as the
-  * [[GoQuote]] UDF, but inlined into whole-stage codegen — no UDF
-  * closure dispatch, no encoder round-trip, and the projection stays
-  * inside the generated stage instead of breaking it.
+  * a codegen'd unary expression over the [[GoQuote.quoteUtf8]] byte
+  * kernel, inlined into whole-stage codegen — no UDF closure dispatch, no
+  * encoder round-trip, and the kernel's UTF-8 bytes become the
+  * `UTF8String` as they are, with no String decode and re-encode.
   */
 case class GoQuoteExpr(child: Expression) extends UnaryExpression {
 
@@ -24,11 +24,11 @@ case class GoQuoteExpr(child: Expression) extends UnaryExpression {
   override def prettyName: String = "go_quote"
 
   override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(GoQuote.quote(input.asInstanceOf[Array[Byte]]))
+    UTF8String.fromBytes(GoQuote.quoteUtf8(input.asInstanceOf[Array[Byte]]))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(graft.functions.GoQuote.quote($c))")
+      s"org.apache.spark.unsafe.types.UTF8String.fromBytes(graft.functions.GoQuote.quoteUtf8($c))")
 
   override protected def withNewChildInternal(newChild: Expression): GoQuoteExpr =
     copy(child = newChild)

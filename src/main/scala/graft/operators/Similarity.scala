@@ -1412,7 +1412,13 @@ object Similarity {
   /** Approximate top-k via IVF: probes search their nprobe lists only.
     * `kmeansIters` > 0 Lloyd-refines the sampled centroids first —
     * better-balanced lists and higher recall for the same nprobe.
-    * `nlist` ≤ 0 auto-sizes to √n (see [[autoNlist]]). */
+    * `nlist` ≤ 0 auto-sizes to √n (see [[autoNlist]]).
+    *
+    * Contract: `probes` is a small set. Its routes (probes × `nprobe`
+    * rows, each with the probe's vector widened to doubles) are always
+    * broadcast to every executor, with no size check, so the probe set
+    * must fit comfortably in driver and executor memory: split a large
+    * probe set into slices before calling. */
   def ivfTopK(emb: DataFrame, probes: DataFrame,
       nlist: Int, nprobe: Int, k: Int, kmeansIters: Int = 0): DataFrame = {
     val nl = resolveNlist(emb, nlist, 16)
@@ -1442,13 +1448,14 @@ object Similarity {
       .withColumn("pn", normU(col("pv")))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
-    // broadcast the probe-routes side (r21, guide §3.1/§2.4): probes are
-    // driver-collected for routing in this family anyway (the
-    // hardNegativesIvfCore posture), and without the hint the planner
-    // can shuffle BOTH sides on `cluster` — nlist≈16 distinct keys over
-    // 32 partitions, i.e. a skewed exchange now carrying the corpus's
-    // WIDENED double[] vectors (the r20 per-side hoist doubled that
-    // exchange's bytes, §2.3). Broadcasting pc removes the corpus-side
+    // broadcast the probe-routes side (r21, guide §3.1/§2.4): only the
+    // centroids are driver-collected here, not the probes, so the hint
+    // holds only under ivfTopK's small-probe-set contract (one row per
+    // probe × nprobe, widened vectors included). Without the hint the
+    // planner can shuffle BOTH sides on `cluster` — nlist≈16 distinct
+    // keys over 32 partitions, i.e. a skewed exchange now carrying the
+    // corpus's WIDENED double[] vectors (the r20 per-side hoist doubled
+    // that exchange's bytes, §2.3). Broadcasting pc removes the corpus-side
     // exchange entirely: assignment streams map-side into the scoring
     // join and only the window's probe_id exchange remains.
     broadcast(pc).join(assigned, Seq("cluster"))

@@ -1,5 +1,6 @@
 // NOTE: package graft.streaming (not .tools) for private[streaming]
-// processBatch access — the SemSweep/WinnowProbe precedent: measurement
+// processBatch access — the SemSweep precedent (and the winnowing sweep's,
+// whose numbers are in BENCHNOTES "Substring-level dedup"): measurement
 // drivers live in tools/ but keep the package of what they measure.
 package graft.streaming
 

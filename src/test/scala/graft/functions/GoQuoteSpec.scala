@@ -79,4 +79,49 @@ class GoQuoteSpec extends AnyFunSuite {
       assert(!out.exists(c => c < 0x20)) // all control bytes escaped
     }
   }
+
+  test("exhaustive: byte kernel and quote are byte-identical to the oracle") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    var checked = 0L
+    def check(in: Array[Byte]): Unit = {
+      val want = GoQuoteOracle.quote(in)
+      val got = GoQuote.quoteUtf8(in)
+      if (!java.util.Arrays.equals(got, want.getBytes(UTF_8)) || GoQuote.quote(in) != want)
+        fail(s"input ${in.map(b => f"${b & 0xff}%02x").mkString(" ")}: " +
+          s"oracle $want, kernel ${new String(got, UTF_8)}")
+      checked += 1
+    }
+    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    // every 1- and 2-byte input
+    for (a <- 0 until 256) {
+      check(bytes(a))
+      for (b <- 0 until 256) check(bytes(a, b))
+    }
+    // every 3-byte input with a non-ASCII lead and a continuation second byte
+    for (a <- 0xc0 to 0xff; b <- 0x80 to 0xbf; c <- 0 until 256) check(bytes(a, b, c))
+    // 4-byte leads with continuations at and around the valid band's edges
+    val edges = Seq(0x00, 0x7f, 0x80, 0x8f, 0x90, 0x9f, 0xa0, 0xbf, 0xc0)
+    for (a <- 0xf0 to 0xf7; b <- edges; c <- edges; d <- edges) check(bytes(a, b, c, d))
+    // the encoding of every scalar value, then every distinct truncation
+    // of those encodings between ASCII neighbours
+    val tails = scala.collection.mutable.LinkedHashSet[Seq[Byte]]()
+    for (cp <- 0 to 0x10ffff if cp < 0xd800 || cp > 0xdfff) {
+      val enc = new String(Character.toChars(cp)).getBytes(UTF_8)
+      check(enc)
+      for (k <- 1 until enc.length) tails += enc.take(k).toSeq
+    }
+    for (t <- tails) check(('a'.toByte +: t :+ 'b'.toByte).toArray)
+    // random payloads with the ingest frame generator's size mix
+    val rnd = new scala.util.Random(3)
+    for (_ <- 1 to 400) {
+      val u = rnd.nextDouble()
+      val size =
+        if (u < 0.10) 0
+        else if (u < 0.45) 32 + rnd.nextInt(1024 - 32 + 1)
+        else if (u < 0.90) 3072 + rnd.nextInt(5120 - 3072 + 1)
+        else 8192 + rnd.nextInt(16384 - 8192 + 1)
+      check(Array.fill(size)(rnd.nextInt(256).toByte))
+    }
+    assert(checked > 2200000L)
+  }
 }
