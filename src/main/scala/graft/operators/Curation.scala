@@ -1110,9 +1110,10 @@ object Curation {
     * localCheckpoint, not recompute: THIS lineage (encode chain + a
     * corpus-wide groupBy/collect_list) is consumed three times —
     * packOffsets' quantile sketch, its bucket-totals collect, and the
-    * final explode job — and unlike the cheap map-only lineages the
-    * BigramMatSweep measured, materializing it wins here (review r14;
-    * measured at sf0.1 in BENCHNOTES). */
+    * final explode job — and unlike the cheap map-only lineages of
+    * BENCHNOTES Round 14 "Bigram-LM materialize crossover",
+    * materializing it wins here (review r14; measured at sf0.1 in
+    * BENCHNOTES Round 14 "xc_pack_ids"). */
   private[graft] def perDocIds(docs: DataFrame, tokDir: String): DataFrame = {
     // ONE merge-table load feeds both the encode and the EOS id
     val merges = TokenizerStore.loadMerges(docs.sparkSession, tokDir)

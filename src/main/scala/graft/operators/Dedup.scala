@@ -863,7 +863,8 @@ object Dedup {
     * O(n²/nlist) cosines instead of O(n²), and the work is partitioned
     * by cluster — exactly how SemDeDup runs at corpus scale (Abbas et
     * al. 2023 cluster before comparing for the same reason).
-    * Multi-assignment (`nassign` = 3 of `nlist` = 32, SemSweep-swept) is
+    * Multi-assignment (`nassign` = 3 of `nlist` = 32, swept in BENCHNOTES
+    * "Semantic-dedup scale path") is
     * the standard boundary fix: a near-dup pair split by a Voronoi edge
     * still shares one of its 2nd/3rd clusters almost always; duplicate
     * co-locations are collapsed by the final distinct. Recall is NOT
@@ -923,8 +924,9 @@ object Dedup {
   /** Declared bound row (the x2_ann pattern, strengthened: the true
     * pair count is ALSO hash-matched against DuckDB's exact O(n²) SQL).
     * recall_ok: cluster-pruned pairs recover ≥ 60 % of the exact cosine
-    * ≥ 0.45 pairs (SemSweep-measured 1.00/0.86/0.69 at sf0.001/0.01/0.1
-    * with nlist 32 × nassign 3 — isotropic gaussian fixtures are the
+    * ≥ 0.45 pairs (measured 1.00/0.86/0.69 at sf0.001/0.01/0.1 with
+    * nlist 32 × nassign 3, BENCHNOTES "Semantic-dedup scale path" —
+    * isotropic gaussian fixtures are the
     * adversarial case, every qualifying pair sits at a Voronoi boundary
     * in generic position; real near-dup clusters are tighter than their
     * cluster radius, the same worst-case argument as x2_ann_lsh's 0.5
@@ -1186,9 +1188,10 @@ object Dedup {
     // localCheckpoint): the checkpoint measured SLOWER in the driver's
     // r20 bench (this family 0.90-0.93×) and in this round's warm A/B —
     // the map-only gram flatMap is cheaper to run twice than to
-    // materialize to executor storage and read back (the BigramMatSweep
-    // crossover again), and the eager non-reliable checkpoint added an
-    // executor-loss failure mode on clusters for nothing (ADVICE r20)
+    // materialize to executor storage and read back (BENCHNOTES Round 14
+    // "Bigram-LM materialize crossover" again), and the eager
+    // non-reliable checkpoint added an executor-loss failure mode on
+    // clusters for nothing (ADVICE r20)
     grams.select(col("gram"), col("doc_id").as("doc_a"))
       .join(grams.select(col("gram"), col("doc_id").as("doc_b")), Seq("gram"))
       .filter(col("doc_a") < col("doc_b"))

@@ -1541,7 +1541,8 @@ object Similarity {
   private def x2Ivf(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
     val probes = emb.filter(col("vec_id") < 10)
-    // 1 Lloyd round + nprobe 5 (sweep-measured, KmSweep): recall
+    // 1 Lloyd round + nprobe 5 (swept, BENCHNOTES "Round 3 vs round
+    // 2", x2_ann_ivf): recall
     // 0.96/0.94/1.00 across sf0.001/0.01/0.1 vs 0.94/0.92/1.00 for the
     // raw sample at nprobe 4, so the declared floor rises 0.8 → 0.85.
     // More rounds HURT at fixed nprobe (tighter balanced lists spread a

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.Tables
 import graft.operators.{Declared, Similarity}
@@ -119,8 +119,9 @@ object BitextStream {
     // (often 1-2 tiny splits) while the scoring work is |S|·|t_N| PAIRS,
     // so a corpus-sized src against a byte-small drop would run on 2 of
     // N cores. Repartition the drop to the cluster's parallelism before
-    // the forward pass (batch-sized shuffle — cheap; found by
-    // BitextStreamSweep: 134 s/drop → the pair-proportional cost)
+    // the forward pass (batch-sized shuffle — cheap; BENCHNOTES r20
+    // "the incremental-mining claim, priced": 134 s/drop → the
+    // pair-proportional cost)
     val tgtCorpus = tgtBatch.repartition(sp.sparkContext.defaultParallelism)
     val fwdFresh = fwdSliceSize match {
       case Some(sz) => Similarity.slicedTopKAcross(tgtCorpus, src, sz, k,
@@ -167,24 +168,11 @@ object BitextStream {
     require(k >= 1, s"BitextStream: k must be >= 1, got $k")
     require(minMargin > 0,
       s"BitextStream: minMargin must be positive, got $minMargin")
-    spark.readStream
-      .schema(Tables.embeddings)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Drops.availableNow(spark, Tables.embeddings, inDir, checkpoint) {
+      (batch, batchId) =>
         processBatch(batch, batchId, src, outDir, k, minMargin, fwdSliceSize)
-      }
-      .start()
+    }
   }
-
-  /** Run one AvailableNow pass to completion (test / cron entry). */
-  def runOnce(spark: SparkSession, inDir: String, outDir: String,
-      checkpoint: String, src: DataFrame, k: Int, minMargin: Double,
-      fwdSliceSize: Option[Long] = None): Unit =
-    start(spark, inDir, outDir, checkpoint, src, k, minMargin, fwdSliceSize)
-      .awaitTermination()
 
   // ----------------------------------------------------------- declared
   /** Stream-vs-batch parity, driver-oracled: the x2_bitext_mine fixture
@@ -200,9 +188,9 @@ object BitextStream {
     // the shared three-drops discipline (one source of truth for the
     // cut arithmetic the batch-assignment oracles restate), keyed on
     // vec_id instead of doc_id
-    val root = CurateStream.threeOrderedDrops(tgt, "xs-bitext-stream",
-      idCol = "vec_id") { root =>
-      runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", src, 4, 1.0)
+    val root = Drops.three(tgt, "xs-bitext-stream", idCol = "vec_id") { root =>
+      start(spark, s"$root/in/*", s"$root/out", s"$root/ck", src, k = 4,
+        minMargin = 1.0).awaitTermination()
     }
     // after the final pass only the last batch's mined partition
     // remains (earlier ones pruned in-stream)

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 import graft.core.Tables
@@ -190,7 +190,8 @@ object CurateStream {
         // scoring input); recompute is DELIBERATE — persisting the
         // text-bearing frame measured SLOWER (warm mins 7.07 vs 6.18 s
         // at sf0.1: the lineage is map-only + small aggs, cheaper to
-        // re-run than to materialize — the BigramMatSweep finding again)
+        // re-run than to materialize — BENCHNOTES Round 14 "Bigram-LM
+        // materialize crossover" again)
         repFiltered.join(
           graft.operators.TokenizerStore.scoreBigramLm(
               repFiltered.select(col("doc_id"), col("text")), tokDir)
@@ -490,19 +491,13 @@ object CurateStream {
       dsirGate: Option[(String, Double)] = None): StreamingQuery = {
     val keysDir = s"$outDir/_keys"
     val dataDir = s"$outDir/data"
-    spark.readStream
-      .schema(Tables.documents)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+    Drops.availableNow(spark, Tables.documents, inDir, checkpoint) {
+      (batch, batchId) =>
+        if (Maintenance.foldDue(batchId, compactEvery))
           compactKeysAndBands(spark, keysDir, dataDir, upTo = batchId - 1)
         processBatch(batch, batchId, keysDir, dataDir, minWords, maxDupWordFrac,
           nearDupJaccard, tombstoneIndex, lmGate, dsirGate)
-      }
-      .start()
+    }
   }
 
   /** The in-stream fold of the key and band stores ([[start]]'s and
@@ -512,18 +507,6 @@ object CurateStream {
       dataDir: String, upTo: Long): Unit = {
     Maintenance.compactBatchStore(spark, keysDir, upTo, keysData)
     Maintenance.compactBatchStore(spark, bandsDirOf(dataDir), upTo, bandsData)
-  }
-
-  /** Run one AvailableNow pass to completion (test / cron entry). */
-  def runOnce(spark: SparkSession, inDir: String, outDir: String,
-      checkpoint: String, nearDupJaccard: Option[Double] = None,
-      compactEvery: Int = 0, tombstoneIndex: Option[String] = None,
-      lmGate: Option[(String, Double)] = None,
-      dsirGate: Option[(String, Double)] = None): Unit = {
-    val q = start(spark, inDir, outDir, checkpoint, nearDupJaccard = nearDupJaccard,
-      compactEvery = compactEvery, tombstoneIndex = tombstoneIndex,
-      lmGate = lmGate, dsirGate = dsirGate)
-    q.awaitTermination()
   }
 
   /** Hashed-text vectors of a curated-store slice — the loop's
@@ -575,19 +558,14 @@ object CurateStream {
       rebuildWhen: Double = 0.0): StreamingQuery = {
     val keysDir = s"$outDir/_keys"
     val dataDir = s"$outDir/data"
-    spark.readStream
-      .schema(Tables.documents)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Drops.availableNow(spark, Tables.documents, inDir, checkpoint) {
+      (batch, batchId) =>
         // the key store's small-files control runs BEFORE the batch's
         // own work, exactly as in [[start]]: a compaction that crashed
         // mid-swap strands the marker, and the replayed batch must
         // FINISH the swap first — processBatch's layout gate would
         // otherwise refuse the batch forever
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+        if (Maintenance.foldDue(batchId, compactEvery))
           Maintenance.compactBatchStore(spark, keysDir, upTo = batchId - 1,
             schema = keysData)
         processBatch(batch, batchId, keysDir, dataDir, minWords, maxDupWordFrac)
@@ -608,8 +586,7 @@ object CurateStream {
             .schema("doc_id BIGINT, text STRING, batch_id BIGINT")
             .parquet(dataDir)
             .select(col("doc_id"), col("text"))))
-      }
-      .start()
+    }
   }
 
   /** The COMPLETE streaming training-data loop — curate THEN pack
@@ -662,20 +639,13 @@ object CurateStream {
     val keysDir = s"$outDir/_keys"
     val dataDir = s"$outDir/data"
     val packDir = s"$outDir/pack"
-    spark.readStream
-      .schema(Tables.documents)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Drops.availableNow(spark, Tables.documents, inDir, checkpoint) {
+      (batch, batchId) =>
         // explicit cadence, or the load-based one ([[PackStream.start]]'s
         // autoCompactFragDirs default): either folds ALL the loop's
         // stores together, so key/band stores never outgrow the pack one
-        if (batchId > 0 &&
-            ((compactEvery > 0 && batchId % compactEvery == 0) ||
-              (autoCompactFragDirs > 0 &&
-                PackStream.fragDirCount(spark, packDir) >= autoCompactFragDirs))) {
+        if (PackStream.foldDue(spark, packDir, batchId, compactEvery,
+            autoCompactFragDirs)) {
           compactKeysAndBands(spark, keysDir, dataDir, upTo = batchId - 1)
           PackStream.compactAt(spark, packDir, upTo = batchId - 1)
         }
@@ -689,60 +659,11 @@ object CurateStream {
             .parquet(s"$dataDir/batch_id=$batchId"),
           batchId, tokDir, packDir, seqLen, buckets,
           staleWhen, staleTpwAbs, requireOrdered)
-      }
-      .start()
+    }
   }
 
   // ----------------------------------------------------------- declared
-  /** The xs-family harness, shared by every declared streaming row:
-    * land `docs` as three doc_id-ordered drops under `<root>/in/`,
-    * invoking `pass(root)` after each (one AvailableNow pass over the
-    * in-dir glob — three real micro-batches through whatever
-    * stream the row starts, with its checkpoint/outputs under the same
-    * root). Returns the scratch root; outputs under it are read lazily,
-    * so the tree is reaped at JVM exit via the SHARED hook (one per
-    * JVM, not one hook thread per invocation; ADVICE r11). The cut
-    * points are `cuts`, or [[terciles]] of `docs` (one 1-row min/max
-    * job) when the caller has none; stream-vs-batch parity holds for
-    * ANY ordered cut, so the boundary choice affects batch sizes, never
-    * results. */
-  private[streaming] def threeOrderedDrops(docs: DataFrame, prefix: String,
-      idCol: String = "doc_id", cuts: Option[Terciles] = None)(
-      pass: String => Unit): String = {
-    val rootPath = java.nio.file.Files.createTempDirectory(prefix)
-    graft.core.TempReaper.reapAtExit(rootPath)
-    val root = rootPath.toString
-    val drop = cuts.getOrElse(terciles(docs, idCol)).batchId(col(idCol))
-    // ONE source scan lands all three drops, partitioned by drop index,
-    // into a staging dir (r20 optimization: the per-drop filter+write
-    // form re-scanned the full source once per drop — 3 scans + the
-    // min/max pass). Each drop's files are then MOVED (a rename, no
-    // data copy) into the streamed in-dir right before its pass, so the
-    // file source still sees exactly the same three incremental file
-    // sets through the same checkpoint, and each drop's rows are
-    // byte-identical to the filtered write it replaces. partitionBy
-    // drops `_drop` from the data files, so the landed schema is
-    // unchanged too.
-    val stage = s"$root/stage"
-    docs.withColumn("_drop", drop)
-      .coalesce(2)
-      .write.partitionBy("_drop").parquet(stage)
-    val fs = new Path(root).getFileSystem(
-      docs.sparkSession.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(s"$root/in"))
-    (0 until 3).foreach { i =>
-      val src = new Path(s"$stage/_drop=$i")
-      val dst = new Path(s"$root/in/drop$i.parquet")
-      if (fs.exists(src)) require(fs.rename(src, dst),
-        s"threeOrderedDrops: moving $src to $dst failed")
-      else fs.mkdirs(dst) // empty tercile: same empty-dir shape as before
-      pass(root)
-    }
-    fs.delete(new Path(stage), true)
-    root
-  }
-
-  /** Stream-vs-batch parity, driver-oracled: [[threeOrderedDrops]]
+  /** Stream-vs-batch parity, driver-oracled: [[Drops.three]]
     * through [[start]] (one shared checkpoint and key store), the
     * accumulated curated output returned per-doc. Because the drops
     * are doc_id-ordered, the stream's keep-first (min doc_id within a
@@ -756,9 +677,10 @@ object CurateStream {
       lmGate: Option[(String, Double)] = None,
       dsirGate: Option[(String, Double)] = None): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val root = threeOrderedDrops(docs, "xs-curate-stream") { root =>
-      runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", nearDupJaccard,
-        tombstoneIndex = tombstoneIndex, lmGate = lmGate, dsirGate = dsirGate)
+    val root = Drops.three(docs, "xs-curate-stream") { root =>
+      start(spark, s"$root/in/*", s"$root/out", s"$root/ck",
+        nearDupJaccard = nearDupJaccard, tombstoneIndex = tombstoneIndex,
+        lmGate = lmGate, dsirGate = dsirGate).awaitTermination()
     }
     spark.read.parquet(s"$root/out/data")
       .select(col("doc_id"), col("lang"), col("n_words"), col("split"))
@@ -854,10 +776,10 @@ object CurateStream {
     val dsirDir = graft.operators.TokenizerStore.ensureTokenizerFor(spark,
       s"$dir/documents.parquet", "dsir-en-a05",
       d => Curation.trainDsir(docs, col("lang") === "en", d))
-    val cuts = terciles(docs)
-    val root = threeOrderedDrops(docs, "xs-dsir-drift", cuts = Some(cuts)) { root =>
-      runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck",
-        dsirGate = Some((dsirDir, 0.0)))
+    val cuts = Drops.terciles(docs)
+    val root = Drops.three(docs, "xs-dsir-drift", cuts = Some(cuts)) { root =>
+      start(spark, s"$root/in/*", s"$root/out", s"$root/ck",
+        dsirGate = Some((dsirDir, 0.0))).awaitTermination()
     }
     // hash surface is PURE BIGINTs (VERDICT r19 #1): r17's davg fix and
     // r18's integer-carrier fix both passed every in-sandbox drive yet
@@ -957,10 +879,10 @@ object CurateStream {
     val dsirDir = graft.operators.TokenizerStore.ensureTokenizerFor(spark,
       s"$dir/documents.parquet", "dsir-en-a05",
       d => Curation.trainDsir(docs, col("lang") === "en", d))
-    val cuts = terciles(docs)
-    val root = threeOrderedDrops(docs, "xs-dsir-memb", cuts = Some(cuts)) { root =>
-      runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck",
-        dsirGate = Some((dsirDir, 0.0)))
+    val cuts = Drops.terciles(docs)
+    val root = Drops.three(docs, "xs-dsir-memb", cuts = Some(cuts)) { root =>
+      start(spark, s"$root/in/*", s"$root/out", s"$root/ck",
+        dsirGate = Some((dsirDir, 0.0))).awaitTermination()
     }
     // batch_id re-derived from the doc_id tercile, not the ledger's
     // trigger-keyed partition — the same data-derived attribution the
@@ -972,26 +894,6 @@ object CurateStream {
       .select(cuts.batchId(col("doc_id")).as("batch_id"),
         col("doc_id"), col("logw_e6"), col("passed"))
       .orderBy(col("doc_id"))
-  }
-
-  /** [[threeOrderedDrops]]'s cut points over the CORPUS id bounds
-    * `[lo, hi]` — the oracle's `memb` arithmetic. */
-  private[streaming] final case class Terciles(lo: Long, hi: Long) {
-    /** Which of the three ordered drops an id belongs to: a pure
-      * function of the data, so no trigger accounting (a no-data
-      * micro-batch shifting the counter, VERDICT r20 #1) can move a
-      * scored doc's drop. */
-    def batchId(id: Column): Column =
-      when(id <= lo + (hi - lo) / 3, 0L)
-        .when(id <= lo + 2 * ((hi - lo) / 3), 1L).otherwise(2L)
-  }
-
-  /** The id bounds of `docs` — one 1-row min/max job. A row that both
-    * drops `docs` and re-derives each doc's drop computes them once
-    * and passes them to [[threeOrderedDrops]]. */
-  private[streaming] def terciles(docs: DataFrame, idCol: String = "doc_id"): Terciles = {
-    val r = docs.agg(min(col(idCol)), max(col(idCol))).head
-    Terciles(r.getLong(0), r.getLong(1))
   }
 
   /** Per-doc restatement of [[xsDsirDriftSql]]'s `scored` set with doc
@@ -1053,23 +955,17 @@ object CurateStream {
     * batch composition verbatim. */
   def startSignals(spark: SparkSession, inDir: String, outDir: String,
       checkpoint: String): StreamingQuery =
-    spark.readStream
-      .schema(Tables.documents)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Drops.availableNow(spark, Tables.documents, inDir, checkpoint) {
+      (batch, batchId) =>
         // same §2.5/§2.6 parallelism floor as processBatch: the signal
         // table is one heavy per-doc projection over a 1-2-split batch
         Curation.signalTable(graft.core.Par.widen(batch)).write.mode("overwrite")
           .parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
+    }
 
   private def xsSignalStream(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val root = threeOrderedDrops(docs, "xs-signal-stream") { root =>
+    val root = Drops.three(docs, "xs-signal-stream") { root =>
       startSignals(spark, s"$root/in/*", s"$root/out", s"$root/ck")
         .awaitTermination()
     }
@@ -1233,7 +1129,7 @@ object CurateStream {
     * serving path are all value-checked in one row. */
   private def xsCurateToIndex(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val root = threeOrderedDrops(docs, "xs-curate-to-index") { root =>
+    val root = Drops.three(docs, "xs-curate-to-index") { root =>
       startCurateAndIndex(spark, s"$root/in/*", s"$root/out", s"$root/ck",
         s"$root/ix").awaitTermination()
     }
@@ -1272,7 +1168,7 @@ object CurateStream {
     val tokDir = graft.operators.TokenizerStore.ensureTokenizerFor(spark,
       s"$dir/documents.parquet", "bpe-r8v256",
       d => graft.operators.TokenizerStore.trainBpe(docs, d, 8, 256))
-    val root = threeOrderedDrops(docs, "xs-curate-pack") { root =>
+    val root = Drops.three(docs, "xs-curate-pack") { root =>
       startCurateAndPack(spark, s"$root/in/*", s"$root/out", s"$root/ck",
         tokDir).awaitTermination()
     }
@@ -1310,7 +1206,7 @@ object CurateStream {
     val lmTok = graft.operators.TokenizerStore.ensureTokenizerFor(spark,
       s"$dir/documents.parquet", "biglm-a1-cd",
       d => graft.operators.TokenizerStore.trainBigramLm(docs, d))
-    val root = threeOrderedDrops(docs, "xs-curate-pack-gated") { root =>
+    val root = Drops.three(docs, "xs-curate-pack-gated") { root =>
       startCurateAndPack(spark, s"$root/in/*", s"$root/out", s"$root/ck",
         packTok, nearDupJaccard = Some(0.8), lmGate = Some((lmTok, 3.41)),
         staleWhen = 100.0, staleTpwAbs = 100.0, requireOrdered = true)

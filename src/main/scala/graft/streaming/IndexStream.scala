@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.Tables
 import graft.operators.{Declared, IndexStore}
@@ -44,11 +44,11 @@ object IndexStream {
     * that-many batches, INSIDE the stream and BEFORE the batch's own
     * append — the small-files control for a long-running stream (a
     * year of appends is one `codes/batch_id=N/` dir per micro-batch at
-    * exactly the scale the index exists for), lifted verbatim from the
-    * [[CurateStream]] key-store discipline: `upTo = batchId − 1` is
-    * derived from the checkpoint itself, so only batches that are
-    * committed — and can therefore never replay — are folded, and the
-    * current batch's append lands after as its own directory. A
+    * exactly the scale the index exists for), on the cadence every
+    * in-stream store fold shares ([[Maintenance.foldDue]]): `upTo =
+    * batchId − 1` is derived from the checkpoint itself, so only batches
+    * that are committed — and can therefore never replay — are folded,
+    * and the current batch's append lands after as its own directory. A
     * compaction crash leaves the manifest untouched — queries keep
     * serving the pre-compaction snapshot — and the checkpoint replays
     * this batch, whose compact call GCs the stranded fold attempt and
@@ -69,17 +69,11 @@ object IndexStream {
       checkpoint: String, nlist: Int = 16, m: Int = 4, k: Int = 16,
       iters: Int = 1, compactEvery: Int = 0,
       rebuildWhen: Double = 0.0): StreamingQuery =
-    spark.readStream
-      .schema(Tables.embeddings)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Drops.availableNow(spark, Tables.embeddings, inDir, checkpoint) {
+      (batch, batchId) =>
         maintain(spark, inDir, ixDir, batch, batchId,
           nlist, m, k, iters, compactEvery, rebuildWhen)
-      }
-      .start()
+    }
 
   /** One micro-batch of index maintenance — the foreachBatch body,
     * factored out so the replay shapes are spec-drivable without crash
@@ -131,7 +125,7 @@ object IndexStream {
       corpus: () => DataFrame): Unit =
     if (batchId == 0L) IndexStore.buildIvfPq(batch, ixDir, nlist, m, k, iters)
     else {
-      if (compactEvery > 0 && batchId % compactEvery == 0)
+      if (Maintenance.foldDue(batchId, compactEvery))
         IndexStore.compactIvfPq(spark, ixDir, upTo = batchId - 1)
       val fresh = batchId > IndexStore.readManifest(spark, ixDir).subsumed
       IndexStore.appendIvfPq(batch, ixDir, batchId)
@@ -142,10 +136,6 @@ object IndexStream {
             .join(IndexStore.liveVecIds(spark, ixDir), Seq("vec_id"), "left_semi"),
           ixDir, nlist, m, k, iters, subsume = batchId)
     }
-
-  def runOnce(spark: SparkSession, inDir: String, ixDir: String,
-      checkpoint: String): Unit =
-    start(spark, inDir, ixDir, checkpoint).awaitTermination()
 
   // ----------------------------------------------------------- declared
   /** Stream-vs-replay parity, driver-oracled: the embeddings fixture
@@ -161,9 +151,8 @@ object IndexStream {
     // the shared three-drops harness (one source of truth for the cut
     // arithmetic the oracle restates, and the r20 single-scan staging
     // write); scratch is reaped at JVM exit by the harness
-    val root = CurateStream.threeOrderedDrops(emb, "xs-index-stream",
-      idCol = "vec_id") { root =>
-      runOnce(spark, s"$root/in/*", s"$root/ix", s"$root/ck")
+    val root = Drops.three(emb, "xs-index-stream", idCol = "vec_id") { root =>
+      start(spark, s"$root/in/*", s"$root/ix", s"$root/ck").awaitTermination()
     }
     IndexStore.searchIvfPq(spark, s"$root/ix",
         emb.filter(col("vec_id") < 10), 4, 5)

@@ -142,6 +142,14 @@ object Maintenance {
     * layout gate fails any batch that sees it. */
   private[streaming] val CompactMarker = "_compact_inprogress"
 
+  /** The fixed fold cadence of the in-stream store compactions: with
+    * `every` > 0, batch N folds first when N is a positive multiple of
+    * `every`. Batch 0 never folds (nothing is committed before it), and
+    * the fold's `upTo = N − 1` is then derived from the checkpoint —
+    * only committed batches, which can never replay, are folded. */
+  private[streaming] def foldDue(batchId: Long, every: Int): Boolean =
+    every > 0 && batchId > 0 && batchId % every == 0
+
   /** Compact every `batch_id ≤ upTo` partition of a per-batch store
     * ([[CurateStream]]'s key store or band store — any parquet store
     * laid out as `batch_id=N` directories) into ONE `batch_id=upTo`

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.Tables
 import graft.operators.{Declared, Multimodal}
@@ -23,25 +23,18 @@ object MediaStream {
 
   def start(spark: SparkSession, inDir: String, outDir: String,
       checkpoint: String): StreamingQuery =
-    spark.readStream
-      .schema(Tables.documents)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Drops.availableNow(spark, Tables.documents, inDir, checkpoint) {
+      (batch, batchId) =>
         Multimodal.jpegFeaturesOf(Multimodal.jpegRecordsOf(batch))
           .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
+    }
 
   /** Three ordered drops through the real checkpointed stream, the
     * landed per-batch feature tables read back with their batch ids. */
   private def xsMediaFeatures(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val root = CurateStream.threeOrderedDrops(docs, "xs-media-features") { root =>
-      val q = start(spark, s"$root/in/*", s"$root/out", s"$root/ck")
-      q.awaitTermination()
+    val root = Drops.three(docs, "xs-media-features") { root =>
+      start(spark, s"$root/in/*", s"$root/out", s"$root/ck").awaitTermination()
     }
     spark.read
       .schema("media_id BIGINT, width INT, height INT, mean_r DOUBLE, " +

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 
 import graft.core.Tables
@@ -308,6 +308,27 @@ object PackStream {
       seqLen, bl._1, bl._2, bl._3, maxDoc))
   }
 
+  /** Fragment-store directory count — one driver-side listing, no Spark
+    * job. The fold-cadence signal: [[writeStats]] reports it per batch
+    * and [[foldDue]] acts on it. */
+  private def fragDirCount(spark: SparkSession, outDir: String): Int = {
+    val frag = new Path(s"$outDir/frag")
+    val fs = frag.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(frag)) 0
+    else fs.listStatus(frag).count(_.getPath.getName.startsWith("batch_id="))
+  }
+
+  /** Whether batch `batchId` folds the pack store at `outDir` first:
+    * on the fixed `compactEvery` cadence ([[Maintenance.foldDue]]), or
+    * once the fragment store has grown to `autoCompactFragDirs`
+    * directories — [[start]]'s and
+    * [[CurateStream.startCurateAndPack]]'s cadence. */
+  private[streaming] def foldDue(spark: SparkSession, outDir: String,
+      batchId: Long, compactEvery: Int, autoCompactFragDirs: Int): Boolean =
+    Maintenance.foldDue(batchId, compactEvery) ||
+      (batchId > 0 && autoCompactFragDirs > 0 &&
+        fragDirCount(spark, outDir) >= autoCompactFragDirs)
+
   /** One JSON line per committed batch under `stats/batch_id=N/` (the
     * [[graft.operators.IndexStore]] stats-artifact shape) — the numbers
     * are free (they ride the offsets collect) and give a pack
@@ -320,19 +341,9 @@ object PackStream {
     * driver-side listing, no Spark job) — the fold-cadence signal: a
     * long-lived deployment watches it grow between compactions the way
     * the index tier watches its stats rows, and sizes `compactEvery`
-    * from the measured serve cost (PackServeSweep: serving stays flat
-    * ~0.28 s folded vs 0.55 s and growing at 48 unfolded drops). */
-  /** Fragment-store directory count — one driver-side listing, no Spark
-    * job. The fold-cadence signal: [[writeStats]] reports it per batch
-    * and [[start]]'s / [[CurateStream.startCurateAndPack]]'s
-    * `autoCompactFragDirs` act on it. */
-  private[streaming] def fragDirCount(spark: SparkSession, outDir: String): Int = {
-    val frag = new Path(s"$outDir/frag")
-    val fs = frag.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(frag)) 0
-    else fs.listStatus(frag).count(_.getPath.getName.startsWith("batch_id="))
-  }
-
+    * from the measured serve cost (BENCHNOTES Round 14 "Pack-store
+    * compaction, measured": serving stays flat ~0.28 s folded vs 0.55 s
+    * and growing at 48 unfolded drops). */
   private def writeStats(spark: SparkSession, outDir: String, batchId: Long,
       nDocs: Long, nWords: Long, nTokens: Long): Unit = {
     val nFragDirs = fragDirCount(spark, outDir)
@@ -526,9 +537,10 @@ object PackStream {
       StructType.fromDDL(store.cols), fold = store.merge)
 
   /** Default `autoCompactFragDirs`: fold once the fragment store holds
-    * this many batch directories. Sized from PackServeSweep's measured
-    * serve costs (sf0.01 warm mins: ~0.28 s folded and FLAT vs 0.55 s
-    * and GROWING at 48 unfolded drops; at ~16 dirs the unfolded serve
+    * this many batch directories. Sized from the measured serve costs
+    * of BENCHNOTES Round 14 "Pack-store compaction, measured" (sf0.01
+    * warm mins: ~0.28 s folded and FLAT vs 0.55 s and GROWING at 48
+    * unfolded drops; at ~16 dirs the unfolded serve
     * is still within ~1.2× of folded) — folding at 16 keeps serving in
     * the flat band while paying the fold at most once per 15 drops.
     * Set 0 to disable, or use `compactEvery` for an explicit cadence. */
@@ -565,34 +577,13 @@ object PackStream {
       staleWhen: Double = 0.0, staleTpwAbs: Double = 0.0,
       requireOrdered: Boolean = false,
       autoCompactFragDirs: Int = DefaultAutoFoldFragDirs): StreamingQuery =
-    spark.readStream
-      .schema(Tables.documents)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > 0 &&
-            ((compactEvery > 0 && batchId % compactEvery == 0) ||
-              (autoCompactFragDirs > 0 &&
-                fragDirCount(spark, outDir) >= autoCompactFragDirs)))
+    Drops.availableNow(spark, Tables.documents, inDir, checkpoint) {
+      (batch, batchId) =>
+        if (foldDue(spark, outDir, batchId, compactEvery, autoCompactFragDirs))
           compactAt(spark, outDir, upTo = batchId - 1)
         processBatch(batch, batchId, tokDir, outDir, seqLen, buckets,
           staleWhen, staleTpwAbs, requireOrdered)
-      }
-      .start()
-
-  /** Run one AvailableNow pass to completion (test / cron entry). */
-  def runOnce(spark: SparkSession, inDir: String, outDir: String,
-      checkpoint: String, tokDir: String, seqLen: Int = 512,
-      buckets: Int = 32, compactEvery: Int = 0,
-      staleWhen: Double = 0.0, staleTpwAbs: Double = 0.0,
-      requireOrdered: Boolean = false,
-      autoCompactFragDirs: Int = DefaultAutoFoldFragDirs): Unit =
-    start(spark, inDir, outDir, checkpoint, tokDir, seqLen, buckets,
-      compactEvery, staleWhen, staleTpwAbs, requireOrdered,
-      autoCompactFragDirs)
-      .awaitTermination()
+    }
 
   /** The packed sequences as of the last COMMITTED batch — fragments
     * merged per seq_id in global-position order. Same output contract
@@ -638,11 +629,11 @@ object PackStream {
     val tokDir = TokenizerStore.ensureTokenizerFor(spark,
       s"$dir/documents.parquet", "bpe-r8v256",
       d => TokenizerStore.trainBpe(docs, d, 8, 256))
-    val root = CurateStream.threeOrderedDrops(docs, "xs-pack-stream") { root =>
+    val root = Drops.three(docs, "xs-pack-stream") { root =>
       // ordered-ingest tripwire ARMED (the drops are doc_id-ordered by
       // construction, so arming must be invisible — which is the claim)
-      runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", tokDir,
-        requireOrdered = true)
+      start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tokDir,
+        requireOrdered = true).awaitTermination()
     }
     packed(spark, s"$root/out").orderBy(col("seq_id"))
   }
@@ -657,12 +648,13 @@ object PackStream {
     val tokDir = TokenizerStore.ensureTokenizerFor(spark,
       s"$dir/documents.parquet", "bpe-r8v256",
       d => TokenizerStore.trainBpe(docs, d, 8, 256))
-    val root = CurateStream.threeOrderedDrops(docs, "xs-pack-stats") { root =>
+    val root = Drops.three(docs, "xs-pack-stats") { root =>
       // tripwires ARMED (far from tripping on the fixture): the oracled
       // composition exercises the baseline carry + fertility comparison,
       // the absolute ceiling, and the ordered-ingest watermark
-      runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", tokDir,
+      start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tokDir,
         staleWhen = 100.0, staleTpwAbs = 100.0, requireOrdered = true)
+        .awaitTermination()
     }
     // pricing rows only: the oracle prices docs, so a drop whose third
     // of the doc_id range holds no gated docs has no SQL row — the

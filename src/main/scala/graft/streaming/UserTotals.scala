@@ -95,30 +95,12 @@ object UserTotals {
     import spark.implicits._
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val rootPath = java.nio.file.Files.createTempDirectory("s7-user-totals")
-    // the returned DataFrame reads $root/out LAZILY — JVM-exit cleanup,
-    // not eager deletion (the declared-streaming-row convention)
-    graft.core.TempReaper.reapAtExit(rootPath)
-    val root = rootPath.toString
+    // the drop cuts ride the key-cardinality aggregate the store sizing
+    // below needs anyway, so the harness runs no min/max job of its own
     val r = events.agg(min(col("event_id")), max(col("event_id")),
       countDistinct(col("user_id"))).head
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    val cuts = Drops.Terciles(r.getLong(0), r.getLong(1))
     val nUsers = r.getLong(2)
-    val (cut1, cut2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-    // one source scan lands all three drops (the threeOrderedDrops r20
-    // staging discipline): stage partitioned by drop index, then move
-    // each drop's files into the streamed in-dir right before its pass
-    // — same three incremental file sets, one events scan instead of
-    // three
-    val stage = s"$root/stage"
-    events.withColumn("_drop",
-        when(col("event_id") <= cut1, 0)
-          .when(col("event_id") <= cut2, 1).otherwise(2))
-      .coalesce(1)
-      .write.partitionBy("_drop").parquet(stage)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/in"))
     val prev = spark.conf.getOption(ProviderKey)
     // State-store partition sizing (r21, VERDICT r20 #6 / guide §2.1):
     // a stateful streaming query instantiates one RocksDB store PER
@@ -144,7 +126,7 @@ object UserTotals {
     val clogKey =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     val prevClog = spark.conf.getOption(clogKey)
-    try {
+    val root = try {
       spark.conf.set(ProviderKey, RocksDb)
       spark.conf.set(shufKey, nStores)
       // changelog checkpointing: commit per-batch DELTAS to the
@@ -153,13 +135,9 @@ object UserTotals {
       // counter (state is one row per user; snapshots re-upload all of
       // it every batch)
       spark.conf.set(clogKey, "true")
-      (0 until 3).foreach { i =>
-        val src = new org.apache.hadoop.fs.Path(s"$stage/_drop=$i")
-        val dst = new org.apache.hadoop.fs.Path(s"$root/in/d$i.parquet")
-        if (fs.exists(src)) require(fs.rename(src, dst),
-          s"UserTotals: moving $src to $dst failed")
-        else fs.mkdirs(dst)
-        val q = totals(
+      Drops.three(events, "s7-user-totals", idCol = "event_id",
+          cuts = Some(cuts)) { root =>
+        totals(
             spark.readStream
               .schema("event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
               .parquet(s"$root/in/*")
@@ -174,7 +152,7 @@ object UserTotals {
             batch.write.mode("overwrite").parquet(s"$root/out/batch_id=$batchId")
           }
           .start()
-        q.awaitTermination()
+          .awaitTermination()
       }
     } finally {
       spark.conf.set(shufKey, prevShuf)
@@ -187,7 +165,6 @@ object UserTotals {
         case None => spark.conf.unset(ProviderKey)
       }
     }
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
     spark.read
       .schema("user_id BIGINT, n_events BIGINT, total_value DOUBLE, batch_id BIGINT")
       .parquet(s"$root/out")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.functions._
 
 /** Dev probe (r19): where does the ~4 s/batch FIXED cost of the gated
   * curate→pack micro-batch go? Counts Spark jobs and their wall time
@@ -31,14 +30,8 @@ object BatchCostProbe {
         Option(jobs.get(e.jobId)).foreach(_.t1 = e.time)
       }
     })
-    val root = java.nio.file.Files.createTempDirectory("bcp").toString
-    val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).head
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
-    val cut1 = lo + (hi - lo) / 3; val cut2 = lo + 2 * ((hi - lo) / 3)
-    Seq(col("doc_id") <= cut1,
-        col("doc_id") > cut1 && col("doc_id") <= cut2,
-        col("doc_id") > cut2).zipWithIndex.foreach { case (cond, i) =>
-      docs.filter(cond).coalesce(2).write.parquet(s"$root/in/drop$i.parquet")
+    var i = 0
+    graft.streaming.Drops.three(docs, "bcp") { root =>
       println(s"=== PASS $i")
       val mark = order.size()
       val t0 = System.nanoTime()
@@ -56,8 +49,8 @@ object BatchCostProbe {
       val durs = js.map(j => (j.t1 - j.t0) / 1e3).sorted.reverse
       println("  top job durations: " + durs.take(15).map(d => f"$d%.2f").mkString(", "))
       println(f"  jobs >0.3s: ${durs.count(_ > 0.3)}, 0.1-0.3s: ${durs.count(d => d > 0.1 && d <= 0.3)}, <=0.1s: ${durs.count(_ <= 0.1)}")
+      i += 1
     }
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     spark.stop()
   }
 }

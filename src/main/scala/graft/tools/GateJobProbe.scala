@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.{CurateStream, Drops}
+
 /** Dev tool (r21, VERDICT r20 #5): per-JOB cost breakdown of the gated
   * curate streams — one row per Spark job with wall duration and the
   * job group's running description, so the per-micro-batch overhead of
@@ -48,46 +50,20 @@ object GateJobProbe {
       s"$dir/documents.parquet", "bpe-r8v256",
       d => graft.operators.TokenizerStore.trainBpe(docs, d, 8, 256))
 
-    // local copy of CurateStream.threeOrderedDrops (private[streaming])
-    def threeDrops(pass: String => Unit): String = {
-      val rootPath = java.nio.file.Files.createTempDirectory(s"gatejob-$mode")
-      val root = rootPath.toString
-      val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).head
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-      val stage = s"$root/stage"
-      docs.withColumn("_drop",
-          when(col("doc_id") <= c1, 0).when(col("doc_id") <= c2, 1).otherwise(2))
-        .coalesce(2).write.partitionBy("_drop").parquet(stage)
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/in"))
-      (0 until 3).foreach { i =>
-        val src = new org.apache.hadoop.fs.Path(s"$stage/_drop=$i")
-        val dst = new org.apache.hadoop.fs.Path(s"$root/in/drop$i.parquet")
-        if (fs.exists(src)) require(fs.rename(src, dst))
-        else fs.mkdirs(dst)
-        println(s"DROP $i begins")
-        pass(root)
-      }
-      root
-    }
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    val root = threeDrops { root =>
-      mode match {
-        case "dsir" => graft.streaming.CurateStream.runOnce(spark,
-          s"$root/in/*", s"$root/out", s"$root/ck", dsirGate = Some((dsirDir, 0.0)))
-        case "lm" => graft.streaming.CurateStream.runOnce(spark,
-          s"$root/in/*", s"$root/out", s"$root/ck", lmGate = Some((lmDir, 3.41)))
-        case "neardup" => graft.streaming.CurateStream.runOnce(spark,
-          s"$root/in/*", s"$root/out", s"$root/ck", nearDupJaccard = Some(0.8))
-        case "plain" => graft.streaming.CurateStream.runOnce(spark,
-          s"$root/in/*", s"$root/out", s"$root/ck")
-        case "pack" =>
-          graft.streaming.CurateStream.startCurateAndPack(spark, s"$root/in/*",
-            s"$root/out", s"$root/ck", packTok).awaitTermination()
-      }
+    val root = Drops.three(docs, s"gatejob-$mode") { root =>
+      val (in, out, ck) = (s"$root/in/*", s"$root/out", s"$root/ck")
+      (mode match {
+        case "dsir" => CurateStream.start(spark, in, out, ck,
+          dsirGate = Some((dsirDir, 0.0)))
+        case "lm" => CurateStream.start(spark, in, out, ck,
+          lmGate = Some((lmDir, 3.41)))
+        case "neardup" => CurateStream.start(spark, in, out, ck,
+          nearDupJaccard = Some(0.8))
+        case "plain" => CurateStream.start(spark, in, out, ck)
+        case "pack" => CurateStream.startCurateAndPack(spark, in, out, ck, packTok)
+      }).awaitTermination()
     }
     val total = (System.nanoTime() - t0) / 1e9
     Thread.sleep(800)

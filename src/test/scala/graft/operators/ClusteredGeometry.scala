@@ -2,20 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-/** Residual-vs-raw IVF-PQ on the geometry residual encoding EXISTS for
-  * (VERDICT r13 item 5): well-separated Gaussian clusters — the FAISS
-  * regime, where the coarse quantizer absorbs the between-cluster
-  * displacement and PQ spends its code budget on the small
-  * within-cluster residuals. The graft fixture's unit-norm
-  * near-isotropic embeddings provably cannot show the recall win
-  * (BENCHNOTES r13 adjudication: the 9 % reconstruction-MSE gain is
-  * invisible to 50-sample top-k there); this sweep generates the
-  * clustered corpus, A/Bs the SHIPPED residual composition
-  * ([[Similarity.ivfPqSearch]]) against the reconstructed r12
-  * raw-vector path at the same nlist/m/k, and reports
-  * distance-tolerance recall@5 + reconstruction MSE.
-  * [[ClusteredGeometrySpec]] pins the direction as a tripwire. */
-object ClusterGeomSweep {
+/** The measurement harness of [[ClusteredGeometrySpec]]: a seeded
+  * clustered corpus (the FAISS regime residual encoding exists for),
+  * exact k-th-NN distances, distance-tolerance recall, the r12
+  * raw-vector IVF-PQ composition the shipped residual path is A/B'd
+  * against, and both paths' reconstruction MSE. The sigma sweep these
+  * produced is in BENCHNOTES.md (Round 14, "Residual-vs-raw recall on
+  * clustered geometry"). */
+object ClusteredGeometry {
 
   /** Deterministic clustered corpus: `nClusters` centers at uniform
     * ±`spread` per dim, `n` points round-robin across clusters with
@@ -34,10 +28,6 @@ object ClusterGeomSweep {
     rows.toDF("vec_id", "embedding").repartition(8)
   }
 
-  // --- the shared measurement harness (ONE copy: this sweep, the
-  // --- NprobeSweep, and ClusteredGeometrySpec's tripwire all pin the
-  // --- SAME computation — a tolerance or raw-path fix here moves all
-  // --- three in lockstep; review r14)
   private[operators] def l2(p: Array[Float], c: Array[Float]): Double = {
     var pp = 0.0; var pc = 0.0; var cc = 0.0; var i = 0
     while (i < p.length) {
@@ -47,8 +37,8 @@ object ClusterGeomSweep {
     pp - 2.0 * pc + cc
   }
 
-  /** True k-th-NN distance per probe (driver-side exact — sweep/spec
-    * corpora are small by design). */
+  /** True k-th-NN distance per probe (driver-side exact — spec corpora
+    * are small by design). */
   private[operators] def kthDist(corpusArr: Array[(Long, Array[Float])],
       corpus: Map[Long, Array[Float]], nProbes: Int, topK: Int): Map[Long, Double] =
     (0L until nProbes.toLong).map { p =>
@@ -105,32 +95,5 @@ object ClusterGeomSweep {
     val (sub, books) = Similarity.pqTrainD(
       resid.select(col("vec_id"), col("v")), m, k, iters).get
     mseOf(Similarity.pqEncodeD(resid, sub, books))
-  }
-
-  def main(a: Array[String]): Unit = {
-    val spark = graft.core.GraftSession.builder("local[8]", 8).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    val (n, dim, nClusters) = (2000, 64, 16)
-    val (nlist, m, k, iters) = (16, 4, 16, 1)
-    val topK = 5; val nProbes = 20
-    for (sigma <- Seq(0.1, 0.3, 1.0)) {
-      val emb = clusteredCorpus(spark, n, dim, nClusters, spread = 5.0,
-        sigma = sigma, seed = 42L)
-      val probes = emb.filter(col("vec_id") < nProbes)
-      val corpusArr = emb.as[(Long, Array[Float])].collect()
-      val corpus = corpusArr.toMap
-      val dk = kthDist(corpusArr, corpus, nProbes, topK)
-      val recRaw = recallTol(
-        rawIvfPq(emb, probes, nlist, m, k, iters, 4, topK), corpus, dk, nProbes, topK)
-      val recResid = recallTol(
-        Similarity.ivfPqSearch(emb, probes, nlist, 4, m, k, iters, topK),
-        corpus, dk, nProbes, topK)
-      println(f"CLUSTERGEOM sigma=$sigma%.1f " +
-        f"mseRAW=${mseRaw(emb, m, k, iters)}%.4f " +
-        f"mseRESID=${mseResid(emb, nlist, m, k, iters)}%.4f " +
-        f"recallRAW=$recRaw%.2f recallRESID=$recResid%.2f")
-    }
-    spark.stop()
   }
 }

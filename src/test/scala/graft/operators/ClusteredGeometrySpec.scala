@@ -13,9 +13,8 @@ import graft.SparkSpec
   * shipped residual composition beats the r12 raw-vector path there:
   * the coarse quantizer absorbs between-cluster displacement and PQ
   * spends its budget on small within-cluster residuals. Measured via
-  * [[ClusterGeomSweep]] (whose harness this spec SHARES — one copy of
-  * the tolerance/raw-path machinery, so the tripwire pins exactly the
-  * sweep's computation): residual 0.45 vs raw 0.22 distance-tolerance
+  * [[ClusteredGeometry]]'s harness (one copy of the tolerance/raw-path
+  * machinery, the one the sigma sweep ran): residual 0.45 vs raw 0.22 distance-tolerance
   * recall@5, MSE 20 % lower, stable across sigma ∈ {0.1, 0.3, 1.0}.
   * A regression that quietly drops the residual mechanism (e.g.
   * training codebooks on raw vectors again) fails here even though
@@ -27,16 +26,16 @@ class ClusteredGeometrySpec extends SparkSpec {
     val (n, dim, nClusters) = (1000, 64, 16)
     val (nlist, m, k, iters) = (16, 4, 16, 1)
     val topK = 5; val nProbes = 10
-    val emb = ClusterGeomSweep.clusteredCorpus(spark, n, dim, nClusters,
+    val emb = ClusteredGeometry.clusteredCorpus(spark, n, dim, nClusters,
       spread = 5.0, sigma = 0.3, seed = 42L)
     val probes = emb.filter(col("vec_id") < nProbes)
     val corpusArr = emb.as[(Long, Array[Float])].collect()
     val corpus = corpusArr.toMap
-    val dk = ClusterGeomSweep.kthDist(corpusArr, corpus, nProbes, topK)
-    val recRaw = ClusterGeomSweep.recallTol(
-      ClusterGeomSweep.rawIvfPq(emb, probes, nlist, m, k, iters, 4, topK),
+    val dk = ClusteredGeometry.kthDist(corpusArr, corpus, nProbes, topK)
+    val recRaw = ClusteredGeometry.recallTol(
+      ClusteredGeometry.rawIvfPq(emb, probes, nlist, m, k, iters, 4, topK),
       corpus, dk, nProbes, topK)
-    val recResid = ClusterGeomSweep.recallTol(
+    val recResid = ClusteredGeometry.recallTol(
       Similarity.ivfPqSearch(emb, probes, nlist, 4, m, k, iters, topK),
       corpus, dk, nProbes, topK)
     assert(recResid >= recRaw,
@@ -45,8 +44,8 @@ class ClusteredGeometrySpec extends SparkSpec {
       s"the clustered-geometry recall win disappeared: residual $recResid vs raw $recRaw " +
         "(did the residual mechanism regress to raw-vector training?)")
     // and the reconstruction-MSE ordering that drives it
-    val mseR = ClusterGeomSweep.mseRaw(emb, m, k, iters)
-    val mseD = ClusterGeomSweep.mseResid(emb, nlist, m, k, iters)
+    val mseR = ClusteredGeometry.mseRaw(emb, m, k, iters)
+    val mseD = ClusteredGeometry.mseResid(emb, nlist, m, k, iters)
     assert(mseD < mseR,
       s"residual reconstruction must beat raw on clustered geometry: $mseD vs $mseR")
   }

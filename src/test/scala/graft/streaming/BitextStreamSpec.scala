@@ -33,8 +33,8 @@ class BitextStreamSpec extends SparkSpec {
         col("vec_id") > cut1 && col("vec_id") <= cut2,
         col("vec_id") > cut2).zipWithIndex.foreach { case (cond, i) =>
       tgt.filter(cond).coalesce(1).write.parquet(s"$root/in/drop$i.parquet")
-      BitextStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck",
-        src, 4, 1.0)
+      BitextStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck",
+        src, 4, 1.0).awaitTermination()
     }
     val streamed = minedRows(s"$root/out")
     val batch = graft.operators.Similarity.bitextMine(src, tgt, 4, 1.0)

@@ -29,7 +29,7 @@ class CurateStreamSpec extends SparkSpec {
         doc(4, "  " + longText(1).toUpperCase + " "), doc(5, "too short"))
       .toDF(cols: _*).write.parquet(s"$inDir/drop1.parquet")
     // each drop is a parquet directory under inDir → glob one level down
-    CurateStream.runOnce(spark, s"$inDir/*", outDir, ck)
+    CurateStream.start(spark, s"$inDir/*", outDir, ck).awaitTermination()
 
     val after1 = spark.read.parquet(s"$outDir/data")
     assert(after1.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
@@ -38,7 +38,7 @@ class CurateStreamSpec extends SparkSpec {
     // drop 2: doc 6 re-posts doc 2's text (cross-batch dup), doc 7 is new
     Seq(doc(6, longText(2)), doc(7, longText(7)))
       .toDF(cols: _*).write.parquet(s"$inDir/drop2.parquet")
-    CurateStream.runOnce(spark, s"$inDir/*", outDir, ck)
+    CurateStream.start(spark, s"$inDir/*", outDir, ck).awaitTermination()
 
     val after2 = spark.read.parquet(s"$outDir/data")
     assert(after2.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 7L))
@@ -404,9 +404,9 @@ class CurateStreamSpec extends SparkSpec {
       s"fixture not a chain at J>=0.8: $exactPairs")
 
     Seq(doc(1, ta), doc(2, tb)).toDF(cols: _*).write.parquet(s"$inDir/drop1.parquet")
-    CurateStream.runOnce(spark, s"$inDir/*", outDir, ck, nearDupJaccard = Some(0.8))
+    CurateStream.start(spark, s"$inDir/*", outDir, ck, nearDupJaccard = Some(0.8)).awaitTermination()
     Seq(doc(3, tc)).toDF(cols: _*).write.parquet(s"$inDir/drop2.parquet")
-    CurateStream.runOnce(spark, s"$inDir/*", outDir, ck, nearDupJaccard = Some(0.8))
+    CurateStream.start(spark, s"$inDir/*", outDir, ck, nearDupJaccard = Some(0.8)).awaitTermination()
 
     val streamIds = spark.read.parquet(s"$outDir/data")
       .select("doc_id").as[Long].collect().sorted.toSeq
@@ -431,9 +431,9 @@ class CurateStreamSpec extends SparkSpec {
 
     Seq(doc(1, longText(1)), doc(2, longText(2))).toDF(cols: _*)
       .write.parquet(s"$inDir/drop1.parquet")
-    CurateStream.runOnce(spark, s"$inDir/*", outDir, ck, compactEvery = 2)
+    CurateStream.start(spark, s"$inDir/*", outDir, ck, compactEvery = 2).awaitTermination()
     Seq(doc(3, longText(3))).toDF(cols: _*).write.parquet(s"$inDir/drop2.parquet")
-    CurateStream.runOnce(spark, s"$inDir/*", outDir, ck, compactEvery = 2)
+    CurateStream.start(spark, s"$inDir/*", outDir, ck, compactEvery = 2).awaitTermination()
     assert(keyPartitions() == Seq("batch_id=0", "batch_id=1"),
       "no compaction may run before the schedule fires")
 
@@ -442,7 +442,7 @@ class CurateStreamSpec extends SparkSpec {
     // re-posts doc 1's text and must be suppressed BY THE COMPACTED store
     Seq(doc(4, longText(1)), doc(5, longText(5))).toDF(cols: _*)
       .write.parquet(s"$inDir/drop3.parquet")
-    CurateStream.runOnce(spark, s"$inDir/*", outDir, ck, compactEvery = 2)
+    CurateStream.start(spark, s"$inDir/*", outDir, ck, compactEvery = 2).awaitTermination()
     assert(keyPartitions() == Seq("batch_id=1", "batch_id=2"),
       s"expected pre-batch partitions collapsed into batch_id=1: ${keyPartitions()}")
     val ids = spark.read.parquet(s"$outDir/data")
@@ -523,8 +523,8 @@ class CurateStreamSpec extends SparkSpec {
       s"${sf("sf0.001")}/documents.parquet", "biglm-a1-cd",
       d => graft.operators.TokenizerStore.trainBigramLm(docs, d))
     val maxCe = 3.41
-    def pass() = CurateStream.runOnce(spark, s"$inDir/*", outDir, ck,
-      lmGate = Some((tokDir, maxCe)))
+    def pass() = CurateStream.start(spark, s"$inDir/*", outDir, ck,
+      lmGate = Some((tokDir, maxCe))).awaitTermination()
     val r = docs.agg(min($"doc_id"), max($"doc_id")).head
     val cut = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
     docs.filter($"doc_id" <= cut).coalesce(1).write.parquet(s"$inDir/d0.parquet")
@@ -571,8 +571,8 @@ class CurateStreamSpec extends SparkSpec {
     val dsirDir = graft.operators.TokenizerStore.ensureTokenizerFor(spark,
       s"${sf("sf0.001")}/documents.parquet", "dsir-en-a05",
       d => graft.operators.Curation.trainDsir(docs, col("lang") === "en", d))
-    def pass() = CurateStream.runOnce(spark, s"$inDir/*", outDir, ck,
-      dsirGate = Some((dsirDir, 0.0)))
+    def pass() = CurateStream.start(spark, s"$inDir/*", outDir, ck,
+      dsirGate = Some((dsirDir, 0.0))).awaitTermination()
     val r = docs.agg(min($"doc_id"), max($"doc_id")).head
     val cut = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
     docs.filter($"doc_id" <= cut).coalesce(1).write.parquet(s"$inDir/d0.parquet")
@@ -621,8 +621,8 @@ class CurateStreamSpec extends SparkSpec {
     val dsirDir = graft.operators.TokenizerStore.ensureTokenizerFor(spark,
       s"${sf("sf0.001")}/documents.parquet", "dsir-en-a05",
       d => graft.operators.Curation.trainDsir(docs, col("lang") === "en", d))
-    def pass() = CurateStream.runOnce(spark, s"$inDir/*", outDir, ck,
-      dsirGate = Some((dsirDir, 0.0)))
+    def pass() = CurateStream.start(spark, s"$inDir/*", outDir, ck,
+      dsirGate = Some((dsirDir, 0.0))).awaitTermination()
     // drop 0: target-like (en) docs; drop 1: the non-target slice — the
     // drifted stream the frozen λ was NOT fit to favor
     docs.filter($"lang" === "en").coalesce(1).write.parquet(s"$inDir/d0.parquet")
@@ -686,8 +686,8 @@ class CurateStreamSpec extends SparkSpec {
       try {
         spark.conf.set("spark.sql.shuffle.partitions", shuffleParts)
         docs.repartition(nFiles).write.parquet(s"$root/in/d0.parquet")
-        CurateStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck",
-          dsirGate = Some((dsirDir, 0.0)))
+        CurateStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck",
+          dsirGate = Some((dsirDir, 0.0))).awaitTermination()
         val p = new org.apache.hadoop.fs.Path(
           s"${CurateStream.dsirStatsDirOf(s"$root/out/data")}/batch_id=0/stats.json")
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -715,8 +715,8 @@ class CurateStreamSpec extends SparkSpec {
       s"${sf("sf0.001")}/documents.parquet", "dsir-en-a05",
       d => graft.operators.Curation.trainDsir(docs, col("lang") === "en", d))
     docs.coalesce(1).write.parquet(s"$root/in/d0.parquet")
-    CurateStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck",
-      dsirGate = Some((dsirDir, 0.0)))
+    CurateStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck",
+      dsirGate = Some((dsirDir, 0.0))).awaitTermination()
     val ledger = spark.read
       .schema("doc_id BIGINT, logw_e6 BIGINT, passed INT, batch_id BIGINT")
       .parquet(CurateStream.dsirScoredDirOf(s"$root/out/data"))
@@ -767,7 +767,7 @@ class CurateStreamSpec extends SparkSpec {
     // every scored doc's batch IS its tercile — a pure function of the
     // data, so no trigger-counter shift can move it
     val tc = docs.select($"doc_id",
-        CurateStream.terciles(docs).batchId($"doc_id").as("b"))
+        Drops.terciles(docs).batchId($"doc_id").as("b"))
       .as[(Long, Long)].collect().toMap
     memb.foreach { case (b, id, _, _) =>
       assert(b == tc(id), s"doc $id attributed to batch $b, tercile ${tc(id)}")
@@ -960,14 +960,14 @@ class CurateStreamSpec extends SparkSpec {
     assert(served() == Set(1L, 2L, 3L, 4L, 5L, 6L, 7L))
 
     allDocs.filter($"doc_id" <= 5).write.parquet(s"$inDir/drop1.parquet")
-    CurateStream.runOnce(spark, s"$inDir/*", outDir, ck,
-      tombstoneIndex = Some(ixDir))
+    CurateStream.start(spark, s"$inDir/*", outDir, ck,
+      tombstoneIndex = Some(ixDir)).awaitTermination()
     assert(served() == Set(1L, 2L, 3L, 6L, 7L),
       "batch-0 rejects (dup 4, short 5) must leave retrieval; uncurated 6/7 stay")
 
     allDocs.filter($"doc_id" > 5).write.parquet(s"$inDir/drop2.parquet")
-    CurateStream.runOnce(spark, s"$inDir/*", outDir, ck,
-      tombstoneIndex = Some(ixDir))
+    CurateStream.start(spark, s"$inDir/*", outDir, ck,
+      tombstoneIndex = Some(ixDir)).awaitTermination()
     assert(served() == Set(1L, 2L, 3L, 7L),
       "the cross-batch dup 6 must leave retrieval after batch 1")
     // the curated output and the index agree on the living set

@@ -14,9 +14,9 @@ class IndexStreamSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("ixstream").toString
     val cut = n / 2
     emb.filter(col("vec_id") < cut).coalesce(1).write.parquet(s"$root/in/drop0.parquet")
-    IndexStream.runOnce(spark, s"$root/in/*", s"$root/ix", s"$root/ck")
+    IndexStream.start(spark, s"$root/in/*", s"$root/ix", s"$root/ck").awaitTermination()
     emb.filter(col("vec_id") >= cut).coalesce(1).write.parquet(s"$root/in/drop1.parquet")
-    IndexStream.runOnce(spark, s"$root/in/*", s"$root/ix", s"$root/ck")
+    IndexStream.start(spark, s"$root/in/*", s"$root/ix", s"$root/ck").awaitTermination()
     // every vector is indexed, across two batch partitions
     val codes = spark.read.parquet(s"$root/ix/codes")
     assert(codes.count() == n)
@@ -33,7 +33,7 @@ class IndexStreamSpec extends SparkSpec {
     assert(got.nonEmpty && got == want)
     // an AvailableNow pass with no new files replays nothing: same
     // batches, same rows (checkpoint-exactly-once, not re-append)
-    IndexStream.runOnce(spark, s"$root/in/*", s"$root/ix", s"$root/ck")
+    IndexStream.start(spark, s"$root/in/*", s"$root/ix", s"$root/ck").awaitTermination()
     assert(spark.read.parquet(s"$root/ix/codes").count() == n)
     assert(spark.read.parquet(s"$root/ix/codes")
       .select("batch_id").distinct().count() == 2)

@@ -7,8 +7,9 @@ import graft.SparkSpec
 import graft.core.Tables
 import graft.operators.{Curation, TokenizerStore}
 
-/** Exact Spark-job budgets of the curate-then-pack trigger's fixed
-  * costs. A micro-batch's latency is mostly the fixed cost of the jobs
+/** Exact Spark-job budgets of the stream triggers' fixed costs (the
+  * curate-then-pack trigger, and one trigger each of the curate, pack
+  * and index streams). A micro-batch's latency is mostly the fixed cost of the jobs
   * it launches, so a regression that adds one (a schema inference, a
   * second merge-table load, a read-back) fails here by count instead of
   * surfacing as wall-clock drift on the streaming rows. Counts are for
@@ -60,7 +61,7 @@ class JobBudgetSpec extends SparkSpec {
   test("startCurateAndPack: exact jobs for a trigger without and with the store fold") {
     val root = java.nio.file.Files.createTempDirectory("jobbudget-stream").toString
     val tok = trainTok()
-    val drop = CurateStream.terciles(docs).batchId(col("doc_id"))
+    val drop = Drops.terciles(docs).batchId(col("doc_id"))
     // one drop per pass; compactEvery = 2 folds the key and pack stores
     // before batch 2, so batch 1 is a plain trigger and batch 2 a fold
     def trigger(i: Int): Seq[String] = {
@@ -75,6 +76,53 @@ class JobBudgetSpec extends SparkSpec {
     val folding = trigger(2)
     assert(plain.size == 22, plain.mkString("\n"))
     assert(folding.size == 30, folding.mkString("\n"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
+  /** Lands tercile `i` of `df` (by `idCol`) under `root`, then counts the
+    * jobs of one AvailableNow pass of `pass`. */
+  private def dropAndCount(root: String, df: org.apache.spark.sql.DataFrame,
+      idCol: String, i: Int)(pass: => Unit): Seq[String] = {
+    val drop = Drops.terciles(df, idCol).batchId(col(idCol))
+    df.filter(drop === i).coalesce(2).write.parquet(s"$root/in/drop$i.parquet")
+    jobs(pass)
+  }
+
+  test("CurateStream.start: exact jobs for a plain trigger") {
+    val root = java.nio.file.Files.createTempDirectory("jobbudget-curate").toString
+    def pass(i: Int) = dropAndCount(root, docs, "doc_id", i) {
+      CurateStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck")
+        .awaitTermination()
+    }
+    pass(0)
+    val plain = pass(1)
+    assert(plain.size == 6, plain.mkString("\n"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
+  test("PackStream.start: exact jobs for a plain trigger") {
+    val root = java.nio.file.Files.createTempDirectory("jobbudget-pack").toString
+    val tok = trainTok()
+    def pass(i: Int) = dropAndCount(root, docs, "doc_id", i) {
+      PackStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok)
+        .awaitTermination()
+    }
+    pass(0)
+    val plain = pass(1)
+    assert(plain.size == 16, plain.mkString("\n"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
+  test("IndexStream.start: exact jobs for an append trigger") {
+    val root = java.nio.file.Files.createTempDirectory("jobbudget-index").toString
+    val emb = Tables.load(spark, sf("sf0.001"), "embeddings")
+    def pass(i: Int) = dropAndCount(root, emb, "vec_id", i) {
+      IndexStream.start(spark, s"$root/in/*", s"$root/ix", s"$root/ck")
+        .awaitTermination()
+    }
+    pass(0)
+    val append = pass(1)
+    assert(append.size == 4, append.mkString("\n"))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 }

@@ -42,7 +42,7 @@ class PackStreamSpec extends SparkSpec {
     val tok = trainTok()
     dropConds.zipWithIndex.foreach { case (cond, i) =>
       writeDrop(root, i, cond)
-      PackStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok)
+      PackStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok).awaitTermination()
     }
     val streamed = PackStream.packed(spark, s"$root/out")
       .orderBy(col("seq_id")).collect().toSeq
@@ -70,9 +70,9 @@ class PackStreamSpec extends SparkSpec {
     val tok = trainTok()
     val conds = dropConds
     val drop0 = writeDrop(root, 0, conds(0))
-    PackStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok)
+    PackStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok).awaitTermination()
     val drop1 = writeDrop(root, 1, conds(1))
-    PackStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok)
+    PackStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok).awaitTermination()
     val before = PackStream.packed(spark, s"$root/out")
       .orderBy(col("seq_id")).collect().toSeq
     // replay batch 1 by hand — the only replay foreachBatch can produce
@@ -106,8 +106,8 @@ class PackStreamSpec extends SparkSpec {
     val tok = trainTok()
     dropConds.zipWithIndex.foreach { case (cond, i) =>
       writeDrop(root, i, cond)
-      PackStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok,
-        compactEvery = 2)
+      PackStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok,
+        compactEvery = 2).awaitTermination()
     }
     val batch = Curation.packIds(docs, tok)
       .orderBy(col("seq_id")).collect().toSeq
@@ -169,8 +169,8 @@ class PackStreamSpec extends SparkSpec {
     val tok = trainTok()
     dropConds.zipWithIndex.foreach { case (cond, i) =>
       writeDrop(root, i, cond)
-      PackStream.runOnce(spark, s"$root/in/*", out, s"$root/ck", tok,
-        autoCompactFragDirs = 0)
+      PackStream.start(spark, s"$root/in/*", out, s"$root/ck", tok,
+        autoCompactFragDirs = 0).awaitTermination()
     }
     val served = PackStream.packed(spark, out).orderBy(col("seq_id")).collect().toSeq
     // the count rides the fold's write; a re-read of the install agrees
@@ -199,8 +199,8 @@ class PackStreamSpec extends SparkSpec {
       Seq(col("doc_id") > cuts.last)).toSeq
     conds.zipWithIndex.foreach { case (cond, i) =>
       writeDrop(root, i, cond)
-      PackStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok,
-        autoCompactFragDirs = 3)
+      PackStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok,
+        autoCompactFragDirs = 3).awaitTermination()
     }
     // bounded: every time the store reached 3 dirs the next batch
     // folded first (3 dirs → fold → fold dir + the new batch = 2, ...)
@@ -322,8 +322,8 @@ class PackStreamSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("packstale").toString
     val tok = trainTok()
     writeDrop(root, 0, dropConds(0))
-    PackStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok,
-      staleWhen = 2.0)
+    PackStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok,
+      staleWhen = 2.0).awaitTermination()
     val before = PackStream.packed(spark, s"$root/out")
       .orderBy(col("seq_id")).collect().toSeq
     val stats0 = PackStream.packStats(spark, s"$root/out").head
@@ -356,8 +356,8 @@ class PackStreamSpec extends SparkSpec {
     val conds = dropConds
     // ingest the MIDDLE third first — legal while nothing precedes it
     val drop1 = writeDrop(root, 1, conds(1))
-    PackStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok,
-      requireOrdered = true)
+    PackStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok,
+      requireOrdered = true).awaitTermination()
     val before = PackStream.packed(spark, s"$root/out")
       .orderBy(col("seq_id")).collect().toSeq
     // a replay of the committed batch must stay exempt (its ids
@@ -415,8 +415,8 @@ class PackStreamSpec extends SparkSpec {
     // the same ceiling passes ordinary text (fixture prices in low
     // single digits against its own tokenizer)
     writeDrop(root, 0, dropConds(0))
-    PackStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok,
-      staleWhen = 2.0, staleTpwAbs = 8.0)
+    PackStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok,
+      staleWhen = 2.0, staleTpwAbs = 8.0).awaitTermination()
     assert(PackStream.packStats(spark, s"$root/out").count() == 1)
   }
 
@@ -425,7 +425,7 @@ class PackStreamSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("packcrc").toString
     val tok = trainTok()
     writeDrop(root, 0, dropConds(0))
-    PackStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok)
+    PackStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok).awaitTermination()
     val stPath = java.nio.file.Paths.get(s"$root/out/pack_state.json")
     // Hadoop LocalFileSystem keeps a `.pack_state.json.crc` checksum
     // sidecar next to files written through `fs.create`; a java.nio
@@ -469,7 +469,7 @@ class PackStreamSpec extends SparkSpec {
     val tok = trainTok()
     val conds = dropConds
     writeDrop(root, 0, conds(0))
-    PackStream.runOnce(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok)
+    PackStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok).awaitTermination()
     val committed = PackStream.packed(spark, s"$root/out")
       .orderBy(col("seq_id")).collect().toSeq
     // simulate a crash AFTER batch 1's fragment write, BEFORE its state
