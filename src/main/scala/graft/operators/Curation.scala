@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -997,26 +997,31 @@ object Curation {
     * the scale-correct substitute for `SUM() OVER (ORDER BY doc_id)`,
     * which Spark plans as a SINGLE-partition window (the whole corpus
     * through one task):
-    *   1. docs map to `buckets` contiguous doc_id ranges cut at the
-    *      doc_id quantiles (Greenwald-Khanna sketch via
-    *      `stat.approxQuantile` — one extra corpus pass, collected and
-    *      broadcast as an explicit boundary list; no sampled
-    *      RangePartitioner boundaries, which differ between jobs and
-    *      would silently corrupt the offsets). Quantile cuts keep
-    *      buckets balanced for ANY id distribution — clustered epochs,
-    *      snowflake-style sparse ids — where fixed (max−min)/buckets
-    *      widths would collapse most rows into a few buckets, and the
-    *      (id−min)×buckets arithmetic would overflow Long on wide id
-    *      ranges;
-    *   2. per-bucket token totals (one tiny partially-aggregated
-    *      groupBy) are exclusive-scanned on the driver — `buckets`
-    *      longs — and broadcast-joined back;
-    *   3. within each bucket a parallel window computes the local
-    *      prefix; global offset = bucket offset + local prefix.
+    *   1. the input is materialized once; an `Observation` on that
+    *      action carries the row count, the token/word sums, the doc_id
+    *      range and the `buckets`−1 doc_id quantile cuts
+    *      (`percentile_approx`, relative error 0.001) — no separate
+    *      sketch or totals job. The cuts become an explicit boundary
+    *      list (no sampled RangePartitioner boundaries, which differ
+    *      between jobs and would silently corrupt the offsets).
+    *      Quantile cuts keep buckets balanced for ANY id distribution —
+    *      clustered epochs, snowflake-style sparse ids — where fixed
+    *      (max−min)/buckets widths would collapse most rows into a few
+    *      buckets, and the (id−min)×buckets arithmetic would overflow
+    *      Long on wide id ranges;
+    *   2. docs map to `buckets` contiguous doc_id ranges at those cuts;
+    *      within each bucket a parallel window computes the local
+    *      exclusive prefix, and that frame is materialized once with a
+    *      second `Observation` of the per-bucket token sums;
+    *   3. the per-bucket sums are exclusive-scanned on the driver —
+    *      `buckets` longs — and attached as a literal CASE over the
+    *      bucket id: global offset = bucket base + local prefix, with
+    *      no join, broadcast or collect.
     * One corpus shuffle (the per-bucket window sort). Offsets are
     * boundary-independent — any consistent bucketing yields the same
-    * prefix sums — so sketch precision only affects balance, never
-    * correctness. */
+    * prefix sums — so the sketch's precision (and its run-to-run
+    * variation: partial sketches merge in task-completion order) only
+    * affects balance, never correctness. */
   def pack(docs: DataFrame, seqLen: Int = 512, buckets: Int = 32): DataFrame = {
     val d = docs.select(col("doc_id"), size(tokens(col("text"))).as("n_words"))
     packOffsets(d, "n_words", buckets)
@@ -1026,67 +1031,70 @@ object Curation {
 
   /** Global doc-order prefix sum of `nCol` WITHOUT a global sort — the
     * [[pack]] machinery, factored so any token-accounting column can
-    * ride it ([[packIds]] uses BPE token counts): bucket by doc_id
-    * quantile cuts, per-bucket window prefix sums, bucket base offsets
-    * via a `buckets`-row collect. Returns the input plus
+    * ride it ([[packIds]] uses BPE token counts). Returns the input plus
     * `offset_tokens` (empty input → empty output, schema preserved). */
   private[graft] def packOffsets(d: DataFrame, nCol: String,
       buckets: Int): DataFrame = packOffsetsWithTotal(d, nCol, buckets).offsets
 
   /** [[packOffsetsWithTotal]]'s driver-side by-products: the offsets
-    * frame plus the batch's token/doc/word totals and its doc_id range
-    * — all read off the one bucket-totals collect, so callers that
-    * need them ([[graft.streaming.PackStream]]'s carry advance,
-    * per-batch stats, and ordered-ingest tripwire) pay zero extra
-    * aggregation jobs. `minDoc`/`maxDoc` are `Long.MaxValue`/
-    * `Long.MinValue` on an empty input. */
+    * frame plus the batch's token/doc/word totals, its doc_id range and
+    * the bucket cuts — all read off the observations of the two
+    * materializations the offsets need anyway, so callers that need
+    * them ([[graft.streaming.PackStream]]'s carry advance, per-batch
+    * stats, and ordered-ingest tripwire) pay zero extra jobs.
+    * `minDoc`/`maxDoc` are `Long.MaxValue`/`Long.MinValue` and `cuts`
+    * is empty on an empty input. */
   private[graft] case class PackTotals(offsets: DataFrame, tokens: Long,
-      docs: Long, words: Long, minDoc: Long, maxDoc: Long)
+      docs: Long, words: Long, minDoc: Long, maxDoc: Long, cuts: Array[Long])
 
-  /** [[packOffsets]] plus the totals/range by-products above. */
+  /** [[packOffsets]] plus the totals/range by-products above. The
+    * offsets frame is materialized (a `localCheckpoint`), so every
+    * consumer reads it without re-running the encode or the window.
+    *
+    * Exactness: each `Observation` here sits ABOVE the last exchange of
+    * its action, in the result stage. The scheduler merges a result
+    * task's accumulator updates once per partition, but a shuffle-map
+    * task's on every successful attempt — an observation in a map stage
+    * would double-count under a stage retry and silently re-base every
+    * later offset and the stream's carry. */
   private[graft] def packOffsetsWithTotal(d: DataFrame, nCol: String,
       buckets: Int, wordsCol: Option[String] = None): PackTotals = {
     import org.apache.spark.sql.expressions.Window
-    val cuts = packCuts(d, buckets)
-    if (cuts.isEmpty)
-      return PackTotals(d.limit(0).withColumn("offset_tokens", lit(0L)),
-        0L, 0L, 0L, Long.MaxValue, Long.MinValue)
+    val b = math.max(buckets, 2)
+    val probs = (1 until b).map(_.toDouble / b)
+    val in = Observation()
+    val m = d.observe(in, count(lit(1)).as("c"), sum(col(nCol)).as("t"),
+        sum(wordsCol.map(col).getOrElse(lit(0L))).as("w"),
+        min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"),
+        percentile_approx(col("doc_id"), typedLit(probs), lit(1000)).as("cuts"))
+      .localCheckpoint()
+    val r = in.get
+    if (r("c") == 0L)
+      return PackTotals(m.withColumn("offset_tokens", lit(0L)),
+        0L, 0L, 0L, Long.MaxValue, Long.MinValue, Array.empty)
+    val cuts = r("cuts").asInstanceOf[scala.collection.Seq[Long]]
+      .distinct.sorted.toArray
     // bucket id = number of boundary cuts strictly below doc_id: a chain
     // of `buckets`−1 codegen'd comparisons, no division, no overflow.
-    val db = d.withColumn("_b",
-      cuts.map(c => when(col("doc_id") > c, 1L).otherwise(0L))
-        .reduceOption(_ + _).getOrElse(lit(0L)).cast(LongType))
-    val spark = d.sparkSession
-    import spark.implicits._
-    val totals = db.groupBy(col("_b"))
-      .agg(sum(col(nCol)).as("t"), count(lit(1)).as("c"),
-        sum(wordsCol.map(col).getOrElse(lit(0L))).as("w"),
-        min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-      .as[(Long, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
-    val offs = totals.scanLeft((-1L, 0L)) {
-      case ((_, acc), (b, t, _, _, _, _)) => (b, acc + t)
-    }.sliding(2).map { case Array((_, acc), (b, _)) => (b, acc) }.toSeq
-    val offDf = offs.toDF("_b", "_boff")
+    val bucket = cuts.map(c => when(col("doc_id") > c, 1L).otherwise(0L))
+      .reduce(_ + _).cast(LongType)
+    val nb = cuts.length + 1
     val w = Window.partitionBy(col("_b")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    PackTotals(db.join(broadcast(offDf), Seq("_b"))
-      .withColumn("offset_tokens",
-        col("_boff") + coalesce(sum(col(nCol)).over(w), lit(0L)))
-      .drop("_b", "_boff"),
-      totals.map(_._2).sum, totals.map(_._3).sum, totals.map(_._4).sum,
-      totals.map(_._5).min, totals.map(_._6).max)
-  }
-
-  /** Interior bucket boundaries for [[pack]]: the 1/b … (b−1)/b doc_id
-    * quantiles from a deterministic Greenwald-Khanna sketch (relative
-    * error 0.001), deduplicated. Returns an empty array iff the input
-    * has no rows (approxQuantile ignores nothing else here — doc_id is
-    * non-null), so callers can use emptiness as the empty-corpus
-    * signal: all-identical ids still yield one cut. */
-  private[operators] def packCuts(d: DataFrame, buckets: Int): Array[Long] = {
-    val b = math.max(buckets, 2)
-    val probs = (1 until b).map(_.toDouble / b).toArray
-    d.stat.approxQuantile("doc_id", probs, 0.001).map(_.toLong).distinct.sorted
+    val bt = Observation()
+    val bucketSums = (0 until nb).map(i =>
+      sum(when(col("_b") === i, col(nCol)).otherwise(0L)).as(s"t$i"))
+    val local = m.withColumn("_b", bucket)
+      .withColumn("_loc", coalesce(sum(col(nCol)).over(w), lit(0L)))
+      .observe(bt, bucketSums.head, bucketSums.tail: _*)
+      .localCheckpoint()
+    val t = bt.get
+    val bases = (0 until nb).scanLeft(0L)((acc, i) => acc + t(s"t$i").asInstanceOf[Long])
+    val base = expr((0 until nb).map(i => s"WHEN $i THEN ${bases(i)}L")
+      .mkString("CASE _b ", " ", " END"))
+    PackTotals(local.withColumn("offset_tokens", base + col("_loc")).drop("_b", "_loc"),
+      r("t").asInstanceOf[Long], r("c").asInstanceOf[Long], r("w").asInstanceOf[Long],
+      r("lo").asInstanceOf[Long], r("hi").asInstanceOf[Long], cuts)
   }
 
   private def xcPack(spark: SparkSession, dir: String): DataFrame =
@@ -1107,13 +1115,13 @@ object Curation {
     * equal the last merge's real token id, silently aliasing document
     * boundaries with content (review r14).
     *
-    * localCheckpoint, not recompute: THIS lineage (encode chain + a
-    * corpus-wide groupBy/collect_list) is consumed three times —
-    * packOffsets' quantile sketch, its bucket-totals collect, and the
-    * final explode job — and unlike the cheap map-only lineages of
-    * BENCHNOTES Round 14 "Bigram-LM materialize crossover",
-    * materializing it wins here (review r14; measured at sf0.1 in
-    * BENCHNOTES Round 14 "xc_pack_ids"). */
+    * Lazy: the one materialization of this lineage (encode chain + a
+    * corpus-wide groupBy/collect_list) is [[packOffsetsWithTotal]]'s
+    * first `localCheckpoint`, whose observation also carries the
+    * quantile cuts and totals — so the encode runs once per pack
+    * (materializing it wins over recompute here: BENCHNOTES Round 14
+    * "xc_pack_ids"). No parallelism floor: batch callers widen their
+    * input, a micro-batch does not. */
   private[graft] def perDocIds(docs: DataFrame, tokDir: String): DataFrame = {
     // ONE merge-table load feeds both the encode and the EOS id
     val merges = TokenizerStore.loadMerges(docs.sparkSession, tokDir)
@@ -1127,7 +1135,6 @@ object Curation {
         (sum(col("n_sym")) + 1L).as("n"),
         count(lit(1)).as("n_words"))
       .withColumn("docids", concat(col("docids"), lit(s",$eos")))
-      .localCheckpoint()
   }
 
   /** Pack the corpus's TOKEN-ID stream into fixed-length training
@@ -1141,14 +1148,16 @@ object Curation {
     * 100 TB shape: per-doc id streams come from one word-level
     * aggregation (per-doc sorted collect of ≤doc-length word arrays —
     * bounded by document size, never corpus); global token offsets ride
-    * [[packOffsets]]'s bucketed prefix sum (no global sort, one
-    * `buckets`-row collect); the final explode shuffles one row per
+    * [[packOffsets]]'s bucketed prefix sum (no global sort, no
+    * collect); the final explode shuffles one row per
     * token ONCE, keyed on seq_id — the honest cost of materializing
     * training sequences, and exactly the shuffle a packing job exists
     * to pay. Output is sequence-count-sized. */
   def packIds(docs: DataFrame, tokDir: String, seqLen: Int = 512,
       buckets: Int = 32): DataFrame = {
-    val perDoc = perDocIds(docs, tokDir)
+    // the encode's parallelism floor (TokenizerStore.encodeBpe): a
+    // fixture file arrives as 1-2 byte-sized splits
+    val perDoc = perDocIds(graft.core.Par.widen(docs), tokDir)
     // fan the explode input out (r21, §2.6): one doc-level row expands
     // to thousands of per-token rows, so the explode's cost is invisible
     // to AQE's size-based coalescing, which collapsed the offsets
@@ -1253,7 +1262,7 @@ object Curation {
     * output: masks cost a doc pass, sequences cost the token pass. */
   def packBounds(docs: DataFrame, tokDir: String, seqLen: Int = 512,
       buckets: Int = 32): DataFrame = {
-    val perDoc = perDocIds(docs, tokDir)
+    val perDoc = perDocIds(graft.core.Par.widen(docs), tokDir)
     packOffsets(perDoc, "n", buckets)
       .select(expr(s"offset_tokens DIV $seqLen").as("seq_id"),
         (col("offset_tokens") % seqLen).cast(IntegerType).as("p"))

@@ -126,15 +126,17 @@ object TokenizerStore {
     * lookup, all whole-stage codegen, no training, no shuffle beyond
     * the explode. */
   def encodeBpeIds(docs: DataFrame, dir: String): DataFrame =
-    encodeBpeIdsWith(docs, loadMerges(docs.sparkSession, dir))
+    // same §2.5/§2.6 parallelism floor as [[encodeBpe]]
+    encodeBpeIdsWith(graft.core.Par.widen(docs), loadMerges(docs.sparkSession, dir))
 
   /** [[encodeBpeIds]] against an already-loaded merge table, for callers
     * that derive more from the same table (the EOS id, the inverse
-    * vocabulary) — the vocabulary comes from `merges`, no second load. */
+    * vocabulary) — the vocabulary comes from `merges`, no second load.
+    * No parallelism floor: the caller decides — batch callers widen
+    * their input, a micro-batch pays no RoundRobin shuffle per trigger. */
   private[graft] def encodeBpeIdsWith(docs: DataFrame,
       merges: Seq[(String, String)]): DataFrame =
-    // same §2.5/§2.6 parallelism floor as [[encodeBpe]]
-    TextAnalysis.bpeEncodeIdsWith(graft.core.Par.widen(docs), merges, vocabOf(merges))
+    TextAnalysis.bpeEncodeIdsWith(docs, merges, vocabOf(merges))
 
   /** DETOKENIZE — the inverse leg that completes the tokenizer chain
     * (train → encode → ids → DECODE): run the frozen artifact's encode,
@@ -154,7 +156,7 @@ object TokenizerStore {
   def decodeBpeIds(docs: DataFrame, dir: String): DataFrame = {
     val merges = loadMerges(docs.sparkSession, dir)
     val inv: Map[Int, String] = vocabOf(merges).map(_.swap)
-    val detok = encodeBpeIdsWith(docs, merges)
+    val detok = encodeBpeIdsWith(graft.core.Par.widen(docs), merges)
       .select(col("doc_id"), col("pos"),
         concat_ws("", transform(split(col("ids"), ","),
           s => element_at(typedLit(inv), s.cast(IntegerType)))).as("w"))

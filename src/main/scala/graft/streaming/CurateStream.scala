@@ -514,10 +514,10 @@ object CurateStream {
     * rebuild's corpus provider so the two can never diverge (a rebuild
     * that re-vectorized differently would re-mean every code). */
   private def vectorized(docs: DataFrame): DataFrame =
-    // parallelism floor (r21): the per-batch re-read of the just-landed
-    // partition is 1-2 files; the per-doc hash vectorization is the
-    // heavy stage (same §2.5/§2.6 posture as processBatch's floor)
-    graft.operators.TextAnalysis.hashVectors(graft.core.Par.widen(docs))
+    // no parallelism floor: per micro-batch the RoundRobin shuffle's
+    // extra job costs more than the vectorization of a drop-sized
+    // partition, and a large drop lands as many files anyway
+    graft.operators.TextAnalysis.hashVectors(docs)
       .filter(col("l2") > 0)
       .select(col("doc_id").as("vec_id"),
         expr("transform(vec, x -> CAST(x AS FLOAT))").as("embedding"))
@@ -857,7 +857,7 @@ object CurateStream {
        |    WHERE q.logw < 0.0))
        |SELECT CAST(batch_id AS BIGINT) AS batch_id,
        |  COUNT(*) AS n_scored,
-       |  SUM(CASE WHEN logw >= 0.0 THEN 1 ELSE 0 END) AS n_passed,
+       |  CAST(SUM(CASE WHEN logw >= 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_passed,
        |  ${graft.core.Num.sqlSumE6("logw")} AS sum_logw_e6
        |FROM scored GROUP BY batch_id ORDER BY batch_id""".stripMargin
 
@@ -957,9 +957,9 @@ object CurateStream {
       checkpoint: String): StreamingQuery =
     Drops.availableNow(spark, Tables.documents, inDir, checkpoint) {
       (batch, batchId) =>
-        // same §2.5/§2.6 parallelism floor as processBatch: the signal
-        // table is one heavy per-doc projection over a 1-2-split batch
-        Curation.signalTable(graft.core.Par.widen(batch)).write.mode("overwrite")
+        // map-only, no parallelism floor: a per-trigger RoundRobin
+        // shuffle is one more job than the projection itself
+        Curation.signalTable(batch).write.mode("overwrite")
           .parquet(s"$outDir/batch_id=$batchId")
     }
 

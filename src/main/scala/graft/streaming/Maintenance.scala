@@ -153,21 +153,31 @@ object Maintenance {
   /** Compact every `batch_id ≤ upTo` partition of a per-batch store
     * ([[CurateStream]]'s key store or band store — any parquet store
     * laid out as `batch_id=N` directories) into ONE `batch_id=upTo`
-    * partition of `targetFiles` files. Returns the compacted partition's
-    * row count, or -1 when there was nothing to compact (0 or 1 source
-    * partitions). A store accretes one directory per drop forever;
-    * listing cost and the anti-join's file count degrade with it —
-    * this is the fix, run periodically like any sink maintenance.
+    * partition of at most `targetFiles` files. Returns the compacted
+    * partition's row count, or -1 when there was nothing to compact (0
+    * or 1 source partitions). A store accretes one directory per drop
+    * forever; listing cost and the anti-join's file count degrade with
+    * it — this is the fix, run periodically like any sink maintenance.
     *
     * `schema` is the store's DATA columns — required, never inferred:
     * the partition directories are read as roots, so `batch_id` is not
     * a column there (and is refused here), and a column the schema
     * omits is dropped from the compacted partition. Job budget: the
-    * fold's shuffles plus its ONE write — no schema-inference job, and
-    * no read-back of the installed partition (the returned count rides
-    * the write through an [[org.apache.spark.sql.Observation]]). The
-    * in-stream callers fold once per cadence hit, so every job here is
-    * a trigger's fixed cost.
+    * fold's own shuffles plus its ONE write — one job for an identity
+    * fold, two for a merging one. No schema-inference job, no
+    * repartition shuffle (the write `coalesce`s into `targetFiles`
+    * writers), and no read-back of the installed partition (the
+    * returned count rides the write through an
+    * [[org.apache.spark.sql.Observation]] placed above every exchange,
+    * in the result stage, where the scheduler merges each partition's
+    * count exactly once even under a stage retry). The in-stream
+    * callers fold once per cadence hit, so every job here is a
+    * trigger's fixed cost.
+    *
+    * Scale posture: `targetFiles = 1` funnels the fold into one writer
+    * either way; `coalesce` reads the folded rows straight into it
+    * instead of re-shuffling them there. A store large enough to need
+    * parallel writers passes a larger `targetFiles`.
     *
     * REPLAY CONTRACT: the store is read with `batch_id < N`, so the
     * compacted partition keeps the LARGEST compacted id (`upTo`) and
@@ -239,7 +249,7 @@ object Maintenance {
     fold(spark.read.schema(schema)
         .parquet(srcs.map { case (n, _) => s"$storeDir/$n" }.toIndexedSeq: _*))
       .observe(written, count(lit(1)).as("rows"))
-      .repartition(targetFiles)
+      .coalesce(targetFiles)
       .write.mode("overwrite").parquet(tmp.toString)
     val rows = written.get("rows").asInstanceOf[Long]
     val out = fs.create(marker, true)

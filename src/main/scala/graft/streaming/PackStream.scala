@@ -60,10 +60,15 @@ import graft.operators.{Curation, Declared, TokenizerStore}
   * one stream is the dir's single writer.
   *
   * 100 TB shape: per batch, one corpus-of-the-batch shuffle for the
-  * per-doc stage, a `buckets`-row collect for offsets, one per-token
-  * shuffle keyed on seq_id (the honest cost of materializing training
-  * sequences), and one tiny state file — no driver-side model,
-  * no O(history) work, no global sort ever.
+  * per-doc stage, one doc-level shuffle for the offsets window (its
+  * frame materialized once and read by both fragment writes; the
+  * totals, cuts and bucket bases ride observations of those
+  * materializations — no collect job), one per-token shuffle keyed on
+  * seq_id (the honest cost of materializing training sequences), and
+  * one tiny state file — no driver-side model, no O(history) work, no
+  * global sort ever. No parallelism floor on the encode: a RoundRobin
+  * shuffle per trigger costs more than the serial encode of a
+  * drop-sized batch, and a large drop arrives as many splits anyway.
   */
 object PackStream {
 
@@ -210,11 +215,10 @@ object PackStream {
           "with this store's single writer; its data is NOT in the store")
     }
     val perDoc = Curation.perDocIds(batch, tokDir)
-    // offsets computed once (packOffsets runs its quantile + totals
-    // jobs at construction; the batch token/doc-range totals ride that
-    // collect — no separate aggregation jobs); the consumers below
-    // share the frame — only the doc-level window shuffle recomputes,
-    // never the encode
+    // offsets materialized once at construction (the batch token/doc
+    // totals and doc_id range ride its observations — no aggregation
+    // jobs); both fragment writes below read that one frame, so neither
+    // the encode nor the window shuffle re-runs
     val totals = Curation.packOffsetsWithTotal(perDoc, "n", buckets, Some("n_words"))
     val (offsets, batchTokens, batchDocs, batchWords) =
       (totals.offsets, totals.tokens, totals.docs, totals.words)
@@ -228,7 +232,7 @@ object PackStream {
     // discipline applied to the ordering half of the layout contract.
     // Replays are exempt (their data is committed — the batch contains
     // its own ids, which necessarily precede the carried max), and the
-    // comparison rides the min/max the offsets collect already
+    // comparison rides the min/max the offsets observation already
     // computed: zero extra reads. Docs with no gated words contribute
     // no tokens and so cannot move sequence contents — they are
     // correctly invisible here.
@@ -331,7 +335,7 @@ object PackStream {
 
   /** One JSON line per committed batch under `stats/batch_id=N/` (the
     * [[graft.operators.IndexStore]] stats-artifact shape) — the numbers
-    * are free (they ride the offsets collect) and give a pack
+    * are free (they ride the offsets observation) and give a pack
     * deployment its pricing telemetry; the tokens-per-WORD fertility
     * derived from them is the staleness signal [[start]]'s `staleWhen`
     * acts on (via the state-carried baseline, not a re-read). The line
@@ -425,8 +429,9 @@ object PackStream {
 
   /** The batch's sequence fragments from its globally-shifted offsets
     * frame — factored so the streaming-plan pin covers the exact frame
-    * every trigger builds: bucketed prefix sum (broadcast bucket-offset
-    * attach), ONE per-token exchange keyed on seq_id. */
+    * every trigger builds: the materialized bucketed prefix sum (bucket
+    * bases a literal CASE, no join), ONE per-token exchange keyed on
+    * seq_id. */
   private[graft] def fragmentsOf(withOff: DataFrame, seqLen: Int): DataFrame =
     withOff
       .select(col("off"),

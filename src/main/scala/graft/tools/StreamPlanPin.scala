@@ -125,10 +125,12 @@ object StreamPlanPin {
 
   /** The xs_pack_stream per-batch core: the fragment frame
     * `PackStream.processBatch` builds every trigger — per-doc id
-    * streams → bucketed prefix sum (the bucket-offset attach must stay
-    * a BROADCAST join) → ONE per-token exchange keyed on seq_id. A
-    * broadcast→shuffle flip on the offset attach, or a second
-    * per-token exchange, is the drift this pin catches. */
+    * streams → bucketed prefix sum, materialized (the plan starts at
+    * its checkpoint scan; bucket bases are a literal CASE, so no join
+    * and no window may appear) → ONE per-token exchange keyed on
+    * seq_id. A join or window re-entering the per-trigger plan (the
+    * offsets recomputed per write), or a second per-token exchange, is
+    * the drift this pin catches. */
   private def packBatchFragments(spark: SparkSession): String = {
     import spark.implicits._
     val docs = Seq(
@@ -139,7 +141,8 @@ object StreamPlanPin {
     val dir = java.nio.file.Files.createTempDirectory("pin-pack").toString
     graft.operators.TokenizerStore.trainBpe(docs, dir, 8, 256)
     val perDoc = graft.operators.Curation.perDocIds(docs, dir)
-    val withOff = graft.operators.Curation.packOffsets(perDoc, "n", 32)
+    val withOff = graft.operators.Curation
+      .packOffsetsWithTotal(perDoc, "n", 32, Some("n_words")).offsets
       .withColumn("off", col("offset_tokens") + lit(0L))
     PlanPin.skeletonOf(
       graft.streaming.PackStream.fragmentsOf(withOff, 512)

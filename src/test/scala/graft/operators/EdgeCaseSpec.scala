@@ -163,7 +163,8 @@ class EdgeCaseSpec extends SparkSpec {
       off += n
     }
     // quantile boundaries: no bucket may hold more than 2x the mean
-    val cuts = Curation.packCuts(docs.select($"doc_id"), 8)
+    val cuts = Curation.packOffsetsWithTotal(
+      docs.select($"doc_id", org.apache.spark.sql.functions.lit(1L).as("n")), "n", 8).cuts
     val counts = ids.groupBy(id => cuts.count(_ < id)).values.map(_.size)
     val mean = ids.size.toDouble / (cuts.length + 1)
     assert(counts.max <= 2 * mean, s"skewed buckets: ${counts.toSeq.sorted}")

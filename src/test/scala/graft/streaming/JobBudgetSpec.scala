@@ -8,12 +8,13 @@ import graft.core.Tables
 import graft.operators.{Curation, TokenizerStore}
 
 /** Exact Spark-job budgets of the stream triggers' fixed costs (the
-  * curate-then-pack trigger, and one trigger each of the curate, pack
-  * and index streams). A micro-batch's latency is mostly the fixed cost of the jobs
-  * it launches, so a regression that adds one (a schema inference, a
-  * second merge-table load, a read-back) fails here by count instead of
-  * surfacing as wall-clock drift on the streaming rows. Counts are for
-  * the suite's `local[4]` session. */
+  * curate-then-pack trigger, and one trigger each of the curate, pack,
+  * index, curate-then-index and signal streams). A micro-batch's latency
+  * is mostly the fixed cost of the jobs it launches, so a regression
+  * that adds one (a schema inference, a second merge-table load, a
+  * read-back, a parallelism-floor shuffle) fails here by count instead
+  * of surfacing as wall-clock drift on the streaming rows. Counts are
+  * for the suite's `local[4]` session. */
 class JobBudgetSpec extends SparkSpec {
 
   private def docs = Tables.load(spark, sf("sf0.001"), "documents")
@@ -35,18 +36,23 @@ class JobBudgetSpec extends SparkSpec {
   test("perDocIds loads the merge table once for the encode, the vocabulary and the EOS id") {
     val tok = trainTok()
     val d = docs
-    val log = jobs(Curation.perDocIds(d, tok))
+    // perDocIds is lazy: count it with the offsets that materialize it,
+    // built the way PackStream.processBatch builds them
+    val log = jobs(Curation.packOffsetsWithTotal(Curation.perDocIds(d, tok), "n", 32,
+      Some("n_words")))
     // a shuffle stage's job carries a generic call site; the merge
     // table's shuffle-free collect names TokenizerStore
     val merges = log.filter(_.contains("TokenizerStore.scala"))
     assert(merges.size == 1, log.mkString("\n"))
-    // the one merge-table job plus the encode's three: the parallelism
-    // floor's shuffle, the per-doc aggregation's shuffle, the
-    // localCheckpoint
-    assert(log.size == 4, log.mkString("\n"))
+    // the one merge-table job plus four: the per-doc aggregation's
+    // shuffle, the input materialization (its observation carries the
+    // cuts and totals), the window's shuffle and the offsets frame's
+    // materialization (its observation carries the bucket sums) — no
+    // parallelism floor, no sketch job, no totals collect
+    assert(log.size == 5, log.mkString("\n"))
   }
 
-  test("compactBatchStore on two partitions: the fold's shuffle and its write, no read-back") {
+  test("compactBatchStore on two partitions: one write, no shuffle, no read-back") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("jobbudget-keys").toString
     Seq("k1", "k2").toDF("_key").write.parquet(s"$dir/batch_id=0")
@@ -54,7 +60,7 @@ class JobBudgetSpec extends SparkSpec {
     var n = 0L
     val log = jobs { n = Maintenance.compactBatchStore(spark, dir, upTo = 1, CurateStream.keysData) }
     assert(n == 3L)
-    assert(log.size == 2, log.mkString("\n"))
+    assert(log.size == 1, log.mkString("\n"))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -74,8 +80,8 @@ class JobBudgetSpec extends SparkSpec {
     trigger(0)
     val plain = trigger(1)
     val folding = trigger(2)
-    assert(plain.size == 22, plain.mkString("\n"))
-    assert(folding.size == 30, folding.mkString("\n"))
+    assert(plain.size == 15, plain.mkString("\n"))
+    assert(folding.size == 20, folding.mkString("\n"))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
@@ -109,7 +115,7 @@ class JobBudgetSpec extends SparkSpec {
     }
     pass(0)
     val plain = pass(1)
-    assert(plain.size == 16, plain.mkString("\n"))
+    assert(plain.size == 9, plain.mkString("\n"))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
@@ -123,6 +129,29 @@ class JobBudgetSpec extends SparkSpec {
     pass(0)
     val append = pass(1)
     assert(append.size == 4, append.mkString("\n"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+  test("startCurateAndIndex: exact jobs for an append trigger") {
+    val root = java.nio.file.Files.createTempDirectory("jobbudget-curidx").toString
+    def pass(i: Int) = dropAndCount(root, docs, "doc_id", i) {
+      CurateStream.startCurateAndIndex(spark, s"$root/in/*", s"$root/out",
+        s"$root/ck", s"$root/ix").awaitTermination()
+    }
+    pass(0)
+    val append = pass(1)
+    assert(append.size == 10, append.mkString("\n"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
+  test("startSignals: one job per trigger, the write") {
+    val root = java.nio.file.Files.createTempDirectory("jobbudget-signals").toString
+    def pass(i: Int) = dropAndCount(root, docs, "doc_id", i) {
+      CurateStream.startSignals(spark, s"$root/in/*", s"$root/out", s"$root/ck")
+        .awaitTermination()
+    }
+    pass(0)
+    val plain = pass(1)
+    assert(plain.size == 1, plain.mkString("\n"))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 }

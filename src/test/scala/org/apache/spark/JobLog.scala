@@ -5,6 +5,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The Spark jobs a body starts, one entry per job: the call site of its
   * first stage (`"collect at TokenizerStore.scala:80"`). Exact, not
@@ -27,5 +30,30 @@ object JobLog {
       sc.listenerBus.waitUntilEmpty()
     } finally sc.removeSparkListener(listener)
     jobs.asScala.toSeq
+  }
+}
+
+/** The executed plans of the queries a body runs, one per query
+  * execution, captured through a `QueryExecutionListener` and drained
+  * like [[JobLog]]. Streaming queries clone the session's listeners at
+  * start, so a stream started inside `body` reports its per-trigger
+  * queries here too. */
+object PlanLog {
+  def of(spark: SparkSession)(body: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        plans.add(qe.executedPlan)
+        ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.sparkContext.listenerBus.waitUntilEmpty()
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
   }
 }
