@@ -14,6 +14,13 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session time zone: required for oracle (DuckDB) parity — parquet
   *    timestamps are naive wall values; with UTC the wall value and the
   *    instant coincide.
+  *  - checkpoint file manager: streaming offset, commit, source and sink
+  *    logs and state-store files on the local filesystem are written by
+  *    [[LocalCheckpointFileManager]] with java.nio, not through Hadoop's
+  *    local `FileSystem`, which forks `chmod`/`readlink` several times
+  *    per small file without its native library (30% of the ingest
+  *    stream thread's stack samples, BENCHNOTES "Checkpoint files without
+  *    forks"). Paths on every other scheme keep Spark's default manager.
   */
 object GraftSession {
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
@@ -31,6 +38,7 @@ object GraftSession {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .config("spark.sql.streaming.stopGracefullyOnShutdown", "true")
       .config("spark.sql.extensions", "graft.core.GraftExtensions")
+      .config(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
       .config("spark.ui.enabled", "false")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

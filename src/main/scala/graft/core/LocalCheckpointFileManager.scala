@@ -1,0 +1,128 @@
+package graft.core
+
+import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+import java.util.UUID
+
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus,
+  LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+  FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
+
+/** The engine's one atomic small-file writer: every streaming offset,
+  * commit, source and sink log, every state-store file (through Spark's
+  * `spark.sql.streaming.checkpointFileManagerClass` hook, set in
+  * [[GraftSession.builder]]) and the engine's own swapped metadata
+  * (`PackStream`'s `pack_state.json` and `stats.json`, `IndexStore`'s
+  * `manifest.json`, through [[LocalCheckpointFileManager.writeAtomic]]).
+  *
+  * On the local filesystem a file is written with java.nio to a
+  * dot-prefixed temp file in its target directory and renamed into
+  * place. Hadoop's local `FileSystem` without its native library forks
+  * `chmod` for every file it creates (and its `.crc` sidecar) and
+  * `readlink` for every link-status lookup a `FileContext` rename makes;
+  * Spark's default manager paid both several times per log file, three
+  * log files per trigger (BENCHNOTES "Checkpoint files without forks").
+  * Files written here carry no `.crc` sidecar; the checksummed reader
+  * accepts a file without one.
+  *  - no overwrite (`HDFSMetadataLog`'s second-writer detection): the
+  *    temp file is hard-linked to the target, which fails atomically
+  *    with Hadoop's `FileAlreadyExistsException` when the target exists
+  *    and leaves its bytes alone;
+  *  - overwrite: an atomic rename over the target, after deleting the
+  *    old file's `.crc` sidecar, whose stale checksum the checksummed
+  *    reader would otherwise reject.
+  * Neither path fsyncs, the same as Spark's default manager.
+  *
+  * Every other scheme gets Spark's default manager, unchanged. */
+class LocalCheckpointFileManager(path: Path, conf: Configuration) extends CheckpointFileManager {
+  private val localFile: Option[Path => java.io.File] = path.getFileSystem(conf) match {
+    case fs: LocalFileSystem => Some(fs.pathToFile _)
+    case fs: RawLocalFileSystem => Some(fs.pathToFile _)
+    case _ => None
+  }
+
+  private val fm: CheckpointFileManager =
+    if (localFile.isDefined) new FileSystemBasedCheckpointFileManager(path, conf)
+    else {
+      val c = new Configuration(conf)
+      c.unset(LocalCheckpointFileManager.ConfKey)
+      CheckpointFileManager.create(path, c)
+    }
+
+  override def createAtomic(p: Path, overwriteIfPossible: Boolean): CancellableFSDataOutputStream =
+    localFile match {
+      case Some(file) => LocalCheckpointFileManager.createAtomic(file(p).toPath, overwriteIfPossible)
+      case None => fm.createAtomic(p, overwriteIfPossible)
+    }
+
+  override def mkdirs(p: Path): Unit = localFile match {
+    case Some(file) => Files.createDirectories(file(p).toPath)
+    case None => fm.mkdirs(p)
+  }
+
+  override def open(p: Path): FSDataInputStream = fm.open(p)
+  override def list(p: Path, filter: PathFilter): Array[FileStatus] = fm.list(p, filter)
+  override def exists(p: Path): Boolean = fm.exists(p)
+  override def delete(p: Path): Unit = fm.delete(p)
+  override def isLocal: Boolean = fm.isLocal
+  override def createCheckpointDirectory(): Path = fm.createCheckpointDirectory()
+  override def close(): Unit = fm.close()
+}
+
+object LocalCheckpointFileManager {
+  val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Replace `dst` with `bytes` in one atomic step, creating its
+    * directory if needed: readers see the old file or the new one, never
+    * a torn one. Atomicity rides the filesystem's rename (POSIX, HDFS);
+    * a store without one (S3's copy+delete) needs a conditional PUT. */
+  def writeAtomic(dst: Path, conf: Configuration, bytes: Array[Byte]): Unit = {
+    val fm = new LocalCheckpointFileManager(dst.getParent, conf)
+    fm.mkdirs(dst.getParent)
+    val out = fm.createAtomic(dst, overwriteIfPossible = true)
+    try out.write(bytes) catch { case e: Throwable => out.cancel(); throw e }
+    out.close()
+  }
+
+  private def createAtomic(dst: java.nio.file.Path,
+      overwrite: Boolean): CancellableFSDataOutputStream = {
+    val tmp = dst.resolveSibling(s".${dst.getFileName}.${UUID.randomUUID}.tmp")
+    val file = new java.io.BufferedOutputStream(
+      Files.newOutputStream(tmp, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE))
+    new CancellableFSDataOutputStream(file) {
+      private var terminated = false
+
+      override def close(): Unit = synchronized {
+        if (!terminated) {
+          terminated = true
+          try { file.close(); publish(tmp, dst, overwrite) }
+          finally Files.deleteIfExists(tmp)
+        }
+      }
+
+      override def cancel(): Unit = synchronized {
+        if (!terminated) {
+          terminated = true
+          try file.close() catch { case NonFatal(_) => }
+          finally Files.deleteIfExists(tmp)
+        }
+      }
+    }
+  }
+
+  private def publish(tmp: java.nio.file.Path, dst: java.nio.file.Path, overwrite: Boolean): Unit =
+    if (overwrite) {
+      Files.deleteIfExists(dst.resolveSibling(s".${dst.getFileName}.crc"))
+      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } else {
+      try Files.createLink(dst, tmp)
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException =>
+          throw new FileAlreadyExistsException(s"$dst already exists")
+      }
+    }
+}

@@ -875,10 +875,10 @@ object Dedup {
     * `nlist` ≤ 0 (the default) auto-sizes to √n with floor 32
     * ([[Similarity.autoNlist]]) — the fraction of pair space scored,
     * ~nassign²/nlist, then COLLAPSES as the corpus grows instead of
-    * depending on a caller re-tuning a constant (ScaleProbe measures
-    * the fraction falling across 1/2/5/10× amplification). Declared
-    * queries pin nlist = 32 explicitly so their oracles are
-    * corpus-size-independent. */
+    * depending on a caller re-tuning a constant (BENCHNOTES "r16
+    * ScaleProbe refresh" measured the fraction falling across 1/2/5/10×
+    * amplification). Declared queries pin nlist = 32 explicitly so their
+    * oracles are corpus-size-independent. */
   def semanticPairsIvf(emb: DataFrame, threshold: Double,
       nlist: Int = 0, nassign: Int = 3, kmeansIters: Int = 1): DataFrame = {
     val cents = Similarity.kmeansCentroids(emb,
@@ -1294,8 +1294,8 @@ object Dedup {
     * misestimates at ~MB), so both stay declared — the join as the
     * oracle-of-record baseline, this row as the plan that survives
     * when postings stop fitting in one node's memory (one groupBy
-    * exchange, no broadcast, maxRun-cappable; SubstringShuffleProbe +
-    * BENCHNOTES carry the measured story). */
+    * exchange, no broadcast, maxRun-cappable; BENCHNOTES "Sorted-gram-run
+    * substring dedup" carries the measured story). */
   private def x1SubstringRuns(spark: SparkSession, dir: String): DataFrame =
     substringDupPairsRuns(Tables.load(spark, dir, "documents"), 24)
       .orderBy(col("doc_a"), col("doc_b"))

@@ -341,12 +341,8 @@ object IndexStore {
     man
   }
 
-  /** Atomic swap: dot-prefixed temp + `FileContext.rename(OVERWRITE)`.
-    * `FileContext` (not `FileSystem`) on BOTH write and rename: the
-    * plain local `FileSystem` is checksummed and would strand a `.crc`
-    * sidecar keyed to the temp name on every swap, and its `rename`
-    * refuses an existing destination. Readers see the old manifest or
-    * the new one, never a torn one.
+  /** Atomic swap through [[graft.core.LocalCheckpointFileManager.writeAtomic]]:
+    * readers see the old manifest or the new one, never a torn one.
     *
     * Atomicity rides the filesystem's rename (POSIX, HDFS). A store
     * WITHOUT atomic rename (S3's copy+delete) needs the commit routed
@@ -354,23 +350,13 @@ object IndexStore {
     * Iceberg makes between its metadata swap and its data files; the
     * data-side protocol here (invisible-until-committed batch dirs,
     * GC'd orphans) carries over unchanged. */
-  private def writeManifest(spark: SparkSession, dir: String, m: Manifest): Unit = {
-    import org.apache.hadoop.fs.{CreateFlag, FileContext, Options}
-    val dst = manifestPath(dir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/.$ManifestName.tmp")
-    val fc = FileContext.getFileContext(dst.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    val json =
-      s"""{"layout":${m.layout},"nonce":"${m.nonce}",""" +
+  private def writeManifest(spark: SparkSession, dir: String, m: Manifest): Unit =
+    graft.core.LocalCheckpointFileManager.writeAtomic(manifestPath(dir),
+      spark.sparkContext.hadoopConfiguration,
+      (s"""{"layout":${m.layout},"nonce":"${m.nonce}",""" +
         s""""codes":[${m.codes.sorted.mkString(",")}],""" +
         s""""tombstones":[${m.tombstones.sorted.mkString(",")}],""" +
-        s""""subsumed":${m.subsumed},"built":${m.built}}"""
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-      org.apache.hadoop.fs.Options.CreateOpts.createParent())
-    try out.write((json + "\n").getBytes("UTF-8")) finally out.close()
-    fc.rename(tmp, dst, Options.Rename.OVERWRITE)
-  }
+        s""""subsumed":${m.subsumed},"built":${m.built}}""" + "\n").getBytes("UTF-8"))
 
   /** Publish a written batch into the manifest — the ONLY way a batch
     * becomes visible. The `_SUCCESS` gate runs HERE, once per commit,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 
-import graft.core.Tables
+import graft.core.{LocalCheckpointFileManager, Tables}
 import graft.operators.{Curation, Declared, TokenizerStore}
 
 /** Incremental sequence packing: [[graft.operators.Curation.packIds]]
@@ -153,26 +153,12 @@ object PackStream {
     }
   }
 
-  /** Dot-prefixed temp + `FileContext.rename(OVERWRITE)` — the
-    * [[graft.operators.IndexStore]] manifest-swap idiom (checksum-free,
-    * atomic on POSIX/HDFS; an S3-class store needs a conditional PUT).
-    * Shared by the state swap and the per-batch stats artifact so the
-    * idiom cannot drift between them. */
-  private def atomicWriteJson(spark: SparkSession, dst: Path,
-      tmp: Path, json: String): Unit = {
-    import org.apache.hadoop.fs.{CreateFlag, FileContext, Options}
-    val fc = FileContext.getFileContext(dst.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-      org.apache.hadoop.fs.Options.CreateOpts.createParent())
-    try out.write((json + "\n").getBytes("UTF-8")) finally out.close()
-    fc.rename(tmp, dst, Options.Rename.OVERWRITE)
-  }
+  private def writeJson(spark: SparkSession, dst: Path, json: String): Unit =
+    LocalCheckpointFileManager.writeAtomic(dst, spark.sparkContext.hadoopConfiguration,
+      (json + "\n").getBytes("UTF-8"))
 
   private def writeState(spark: SparkSession, outDir: String, st: PackState): Unit =
-    atomicWriteJson(spark, statePath(outDir),
-      new Path(s"$outDir/.pack_state.json.tmp"),
+    writeJson(spark, statePath(outDir),
       s"""{"v":$StateFormatVersion,""" +
         s""""batch_id":${st.batchId},"base":${st.base},""" +
         s""""total":${st.total},"seq_len":${st.seqLen},""" +
@@ -351,9 +337,7 @@ object PackStream {
   private def writeStats(spark: SparkSession, outDir: String, batchId: Long,
       nDocs: Long, nWords: Long, nTokens: Long): Unit = {
     val nFragDirs = fragDirCount(spark, outDir)
-    atomicWriteJson(spark,
-      new Path(s"$outDir/stats/batch_id=$batchId/stats.json"),
-      new Path(s"$outDir/stats/batch_id=$batchId/.stats.json.tmp"),
+    writeJson(spark, new Path(s"$outDir/stats/batch_id=$batchId/stats.json"),
       s"""{"n_docs":$nDocs,"n_words":$nWords,"n_tokens":$nTokens,""" +
         s""""n_frag_dirs":$nFragDirs,"bid":$batchId}""")
   }
@@ -395,8 +379,7 @@ object PackStream {
         }
       }
     }.distinct
-    atomicWriteJson(spark, new Path(root, s"batch_id=$upTo/stats.json"),
-      new Path(root, ".stats-compact-tmp"), lines.mkString("\n"))
+    writeJson(spark, new Path(root, s"batch_id=$upTo/stats.json"), lines.mkString("\n"))
     srcs.filter(_._2 != upTo).foreach { case (n, _) =>
       fs.delete(new Path(root, n), true)
     }
