@@ -70,16 +70,11 @@ object Bucketing {
 
     val warehouse = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), full)
-    val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(warehouse, "_graft_fingerprint")
-    val expected = s"$fingerprint|$key|$buckets|${df.schema.toDDL}"
-
-    val markerMatches = fs.exists(marker) && {
-      val in = fs.open(marker)
-      try new String(in.readAllBytes(), "UTF-8") == expected
-      finally in.close()
-    }
-    if (!markerMatches) {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = warehouse.getFileSystem(conf)
+    LocalCheckpointFileManager.ensureMarked(
+        new org.apache.hadoop.fs.Path(warehouse, "_graft_fingerprint"), conf,
+        s"$fingerprint|$key|$buckets|${df.schema.toDDL}") {
       // build under a scratch name (saveAsTable only writes bucketed
       // layouts as managed tables), then move the files into place —
       // the registered table below is EXTERNAL, so a later catalog drop
@@ -93,8 +88,6 @@ object Bucketing {
         throw new IllegalStateException(s"rename $scratchPath -> $warehouse failed")
       try spark.sql(s"DROP TABLE IF EXISTS `$scratch`")
       catch { case _: Exception => () } // dir already moved; metadata-only cleanup
-      val out = fs.create(marker, true)
-      try out.write(expected.getBytes("UTF-8")) finally out.close()
     }
     spark.sql(
       s"""CREATE TABLE `$full` (${df.schema.toDDL})

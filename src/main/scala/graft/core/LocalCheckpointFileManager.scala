@@ -1,5 +1,6 @@
 package graft.core
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
 
@@ -12,12 +13,20 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
   FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
-/** The engine's one atomic small-file writer: every streaming offset,
-  * commit, source and sink log, every state-store file (through Spark's
-  * `spark.sql.streaming.checkpointFileManagerClass` hook, set in
-  * [[GraftSession.builder]]) and the engine's own swapped metadata
-  * (`PackStream`'s `pack_state.json` and `stats.json`, `IndexStore`'s
-  * `manifest.json`, through [[LocalCheckpointFileManager.writeAtomic]]).
+/** The engine's one small-file reader and writer. Every streaming
+  * offset, commit, source and sink log and every state-store file comes
+  * here through Spark's `spark.sql.streaming.checkpointFileManagerClass`
+  * hook, set in [[GraftSession.builder]]. The engine's own metadata
+  * comes through the companion's three helpers:
+  *  - [[LocalCheckpointFileManager.writeAtomic]]: `PackStream`'s
+  *    `pack_state.json` and `stats.json`; `IndexStore`'s
+  *    `manifest.json`, encode `stats.json`, `_GC_SIGHTED` marker and GC
+  *    clock probe; `CurateStream`'s DSIR `stats.json`; `Maintenance`'s
+  *    `_compact_inprogress` plan;
+  *  - [[LocalCheckpointFileManager.readString]]: every read of those;
+  *  - [[LocalCheckpointFileManager.ensureMarked]]: the build-once
+  *    `_graft_fingerprint` markers of `Bucketing.ensureBucketed` and
+  *    `IndexStore.ensureArtifactFor`.
   *
   * On the local filesystem a file is written with java.nio to a
   * dot-prefixed temp file in its target directory and renamed into
@@ -87,6 +96,24 @@ object LocalCheckpointFileManager {
     try out.write(bytes) catch { case e: Throwable => out.cancel(); throw e }
     out.close()
   }
+
+  /** The UTF-8 text of `p`, or `None` when it does not exist. */
+  def readString(p: Path, conf: Configuration): Option[String] =
+    try {
+      val in = p.getFileSystem(conf).open(p)
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** Build-once: unless `marker` already holds `expected`, run `build`
+    * and then publish `expected` to `marker` with [[writeAtomic]]. A
+    * crash inside `build` or before the marker lands leaves the old
+    * marker or none, neither of which holds `expected`, so the next call
+    * builds again. */
+  def ensureMarked(marker: Path, conf: Configuration, expected: String)(build: => Unit): Unit =
+    if (!readString(marker, conf).contains(expected)) {
+      build
+      writeAtomic(marker, conf, expected.getBytes(StandardCharsets.UTF_8))
+    }
 
   private def createAtomic(dst: java.nio.file.Path,
       overwrite: Boolean): CancellableFSDataOutputStream = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
+import graft.core.LocalCheckpointFileManager
+
 /** Persisted IVF-PQ index: the build-once / query-many split a
   * production ANN service runs. [[Similarity.ivfPqSearch]] is the
   * composed dataflow, but it re-trains codebooks and re-encodes the
@@ -178,9 +180,10 @@ object IndexStore {
     * write as a full Spark job per batch. So the aggregate rides the
     * codes write via `observe()` (computed DURING the one write job —
     * zero extra passes) and the driver-resident result lands as a
-    * 1-line JSON file through the Hadoop FS API: zero extra Spark jobs.
-    * Temp-name + rename keeps a crash from leaving a half-written line
-    * (dot-prefixed temp is invisible to Spark readers anyway), and
+    * 1-line JSON file through [[LocalCheckpointFileManager.writeAtomic]]:
+    * zero extra Spark jobs. The atomic write keeps a crash from leaving a
+    * half-written line (its dot-prefixed temp is invisible to Spark
+    * readers anyway), and
     * overwrite-by-batch replay discipline matches the codes. */
   private def writeCodesWithStats(encoded: DataFrame, dir: String, batchId: Long): Unit = {
     val spark = encoded.sparkSession
@@ -213,17 +216,12 @@ object IndexStore {
     // telemetry — derived from the integer carrier exactly as the
     // declared row derives it
     val meanErr = if (n > 0) sumErrE6.toDouble / 1e6 / n else 0.0
-    val statsDir = new org.apache.hadoop.fs.Path(s"$dir/stats/batch_id=$batchId")
-    val fs = statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(statsDir, true) // replay overwrites the batch, like the codes
-    val tmp = new org.apache.hadoop.fs.Path(statsDir, ".stats.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(
+    // replay overwrites the batch, like the codes
+    LocalCheckpointFileManager.writeAtomic(
+      new org.apache.hadoop.fs.Path(s"$dir/stats/batch_id=$batchId/stats.json"),
+      spark.sparkContext.hadoopConfiguration,
       s"""{"n":$n,"sum_err_e6":$sumErrE6,"mean_err":$meanErr,"max_err":$maxErr}\n"""
         .getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(statsDir, "stats.json")),
-      s"IndexStore: landing $statsDir/stats.json failed")
   }
 
   /** The drift tripwire over the persisted stats artifact: did batch
@@ -239,14 +237,11 @@ object IndexStore {
   private[graft] def driftBreached(spark: SparkSession, dir: String,
       batchId: Long, factor: Double): Boolean = {
     def stat(b: Long): Option[(Long, Double)] = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/stats/batch_id=$b/stats.json")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      LocalCheckpointFileManager.readString(
+        new org.apache.hadoop.fs.Path(s"$dir/stats/batch_id=$b/stats.json"),
+        spark.sparkContext.hadoopConfiguration).map { txt =>
         val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-        Some((root.get("n").asLong(), root.get("mean_err").asDouble()))
+        (root.get("n").asLong(), root.get("mean_err").asDouble())
       }
     }
     (stat(readManifest(spark, dir).built), stat(batchId)) match {
@@ -296,12 +291,11 @@ object IndexStore {
     * ever swapped in by atomic rename of a fully-written temp). */
   private def parseManifest(spark: SparkSession, dir: String): Manifest = {
     val p = manifestPath(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
+    val read = LocalCheckpointFileManager.readString(p, spark.sparkContext.hadoopConfiguration)
+    require(read.isDefined,
       s"IndexStore: $dir has no $ManifestName — build the index first " +
         "(or re-run the interrupted buildIvfPq that retracted it)")
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    val txt = read.get
     try {
       val om = new com.fasterxml.jackson.databind.ObjectMapper()
       val root = om.readTree(txt)
@@ -341,7 +335,7 @@ object IndexStore {
     man
   }
 
-  /** Atomic swap through [[graft.core.LocalCheckpointFileManager.writeAtomic]]:
+  /** Atomic swap through [[LocalCheckpointFileManager.writeAtomic]]:
     * readers see the old manifest or the new one, never a torn one.
     *
     * Atomicity rides the filesystem's rename (POSIX, HDFS). A store
@@ -351,7 +345,7 @@ object IndexStore {
     * data-side protocol here (invisible-until-committed batch dirs,
     * GC'd orphans) carries over unchanged. */
   private def writeManifest(spark: SparkSession, dir: String, m: Manifest): Unit =
-    graft.core.LocalCheckpointFileManager.writeAtomic(manifestPath(dir),
+    LocalCheckpointFileManager.writeAtomic(manifestPath(dir),
       spark.sparkContext.hadoopConfiguration,
       (s"""{"layout":${m.layout},"nonce":"${m.nonce}",""" +
         s""""codes":[${m.codes.sorted.mkString(",")}],""" +
@@ -387,8 +381,8 @@ object IndexStore {
     * them is pure hygiene and can wait for maintenance. */
   private def gcOrphans(spark: SparkSession, dir: String, man: Manifest,
       minAgeMs: Long = 0L): Unit = {
-    val fs = manifestPath(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = manifestPath(dir).getFileSystem(conf)
     // The retention gate ([[expireSnapshots]]'s olderThan) keys on
     // ORPHANING time, not write time (ADVICE r15): a generation
     // superseded by a compaction that committed seconds ago has an
@@ -405,7 +399,7 @@ object IndexStore {
     // widen or collapse the floor.
     lazy val fsNow: Long = {
       val probe = new org.apache.hadoop.fs.Path(s"$dir/._gc_clock_probe")
-      fs.create(probe, true).close()
+      LocalCheckpointFileManager.writeAtomic(probe, conf, Array.emptyByteArray)
       val t = fs.getFileStatus(probe).getModificationTime
       fs.delete(probe, false)
       t
@@ -421,12 +415,8 @@ object IndexStore {
     // pass is reclaimed immediately, as before — the floor protects
     // promises already made, it does not invent one.
     def storedFloor(marker: org.apache.hadoop.fs.Path): Long =
-      try {
-        val in = fs.open(marker)
-        val buf = new Array[Byte](32)
-        val n = in.read(buf); in.close()
-        if (n <= 0) 0L else new String(buf, 0, n, "US-ASCII").trim.toLong
-      } catch { case _: Exception => 0L } // legacy empty marker → no stored floor
+      try LocalCheckpointFileManager.readString(marker, conf).fold(0L)(_.trim.toLong)
+      catch { case _: NumberFormatException => 0L } // legacy empty marker → no stored floor
     def reclaimable(st: org.apache.hadoop.fs.FileStatus): Boolean = {
       val marker = new org.apache.hadoop.fs.Path(st.getPath, "_GC_SIGHTED")
       if (fs.exists(marker)) {
@@ -434,8 +424,7 @@ object IndexStore {
         val eff = math.max(minAgeMs, storedFloor(marker))
         eff <= 0 || fs.getFileStatus(marker).getModificationTime <= fsNow - eff
       } else if (minAgeMs > 0) { // sighted; record the promise, spare this pass
-        val out = fs.create(marker, true)
-        out.write(minAgeMs.toString.getBytes("US-ASCII")); out.close()
+        LocalCheckpointFileManager.writeAtomic(marker, conf, minAgeMs.toString.getBytes("US-ASCII"))
         false
       } else true
     }
@@ -1003,21 +992,12 @@ object IndexStore {
       } else s"${st.getLen}:${st.getModificationTime}")
     val ixDir = s"${sys.props("java.io.tmpdir")}/graft-$family-$tag-" +
       fp.replaceAll("[^A-Za-z0-9]", "-")
-    val marker = new org.apache.hadoop.fs.Path(s"$ixDir/_graft_fingerprint")
     // the marker lives in the LOCAL warehouse regardless of where the
-    // source fixture lives — resolve its filesystem from its own path,
+    // source fixture lives — its filesystem resolves from its own path,
     // not the (possibly remote) fixture's (review r14)
-    val mfs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ok = mfs.exists(marker) && {
-      val in = mfs.open(marker)
-      val read = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-      read == fp
-    }
-    if (!ok) {
-      build(ixDir)
-      val out = mfs.create(marker, true)
-      try out.write(fp.getBytes("UTF-8")) finally out.close()
-    }
+    LocalCheckpointFileManager.ensureMarked(
+      new org.apache.hadoop.fs.Path(s"$ixDir/_graft_fingerprint"),
+      spark.sparkContext.hadoopConfiguration, fp)(build(ixDir))
     ixDir
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
-import graft.core.Tables
+import graft.core.{LocalCheckpointFileManager, Tables}
 import graft.operators.{Curation, Declared, Dedup, IndexStore}
 
 /** Incremental corpus curation: the batch [[graft.operators.Curation]]
@@ -351,7 +351,7 @@ object CurateStream {
       // land the DSIR gate telemetry: one 1-row aggregation over the
       // just-landed ledger (batch-sized, a point read) — one
       // driver-side 1-line JSON per batch, the IndexStore stats
-      // discipline (temp + rename, overwrite replay)
+      // discipline (one atomic write, overwrite replay)
       dsirScored.foreach { d =>
         val m = readScored(d).agg(
           count(lit(1)), sum(col("logw_e6")),
@@ -367,22 +367,17 @@ object CurateStream {
           case Some(s) if nScored > 0 => (s.toDouble / 1e6 / nScored).toString
           case _ => "null"
         }
-        val statsDir = new Path(s"${dsirStatsDirOf(dataDir)}/batch_id=$batchId")
-        fs.delete(statsDir, true)
-        val tmp = new Path(statsDir, ".stats.json.tmp")
-        val out = fs.create(tmp, true)
         // "v":2 — format version (ADVICE r19): r19 changed the read-back
         // column (mean_logw DOUBLE → sum_logw_e6 BIGINT) with no gate,
         // so stats landed by pre-r19 code under a resumed long-lived
         // stream dir would read back as nulls silently. Readers refuse
         // unversioned files loudly ([[loadDsirStats]]).
-        try out.write(
+        LocalCheckpointFileManager.writeAtomic(
+          new Path(s"${dsirStatsDirOf(dataDir)}/batch_id=$batchId/stats.json"),
+          sp.sparkContext.hadoopConfiguration,
           (s"""{"v":$DsirStatsVersion,"n_scored":$nScored,"n_passed":$nPassed,""" +
             s""""sum_logw_e6":${sumLogwE6.map(_.toString).getOrElse("null")},""" +
             s""""mean_logw":$meanLogw}""" + "\n").getBytes("UTF-8"))
-        finally out.close()
-        require(fs.rename(tmp, new Path(statsDir, "stats.json")),
-          s"CurateStream: landing $statsDir/stats.json failed")
       }
       // (the per-doc audit ledger already landed — it is the gate's one
       // scoring execution now, written before the semi-join read it)

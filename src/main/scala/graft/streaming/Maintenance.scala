@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types._
 
+import graft.core.LocalCheckpointFileManager
+
 /** Sink maintenance jobs.
   *
   * A long-running append stream writes one small file per trigger per
@@ -30,16 +32,9 @@ object Maintenance {
 
   /** Rewrite one `date=`-partition of a JSONL sink directory into
     * `targetFiles` files. Returns the resulting file count, or -1 if the
-    * partition does not exist.
-    *
-    * Swap visibility: HDFS-style filesystems offer no multi-path atomic
-    * rename, so the swap is two renames (live→backup, compacted→live)
-    * and the partition path does NOT exist for the instant between them
-    * — concurrent readers of this one partition can transiently miss it.
-    * Run compaction only on closed partitions (see class doc), where the
-    * only readers are ad-hoc scans that retry. A crash between the
-    * renames is recovered on the next invocation: the backup path is
-    * restored if the live path is missing, so no data is stranded.
+    * partition does not exist. The rewrite is installed by the one
+    * crash-safe [[swapPartition]]; run it only on closed partitions (see
+    * class doc), where the only readers are ad-hoc scans that retry.
     *
     * CONTRACT: downstream readers must target partition paths
     * (`outDir/date=.../`) — a batch read of the sink ROOT resolves files
@@ -49,30 +44,46 @@ object Maintenance {
     * alone and the root-read view stays consistent for the stream's own
     * exactly-once bookkeeping. */
   def compactJsonPartition(
-      spark: SparkSession, outDir: String, date: String, targetFiles: Int = 1): Int = {
-    val part = new Path(s"$outDir/date=$date")
+      spark: SparkSession, outDir: String, date: String, targetFiles: Int = 1): Int =
+    swapPartition(spark, new Path(s"$outDir/date=$date"), "compact", ".json") { (part, tmp) =>
+      spark.read.schema(logEntrySchema).json(part.toString)
+        .select(logEntrySchema.fieldNames.map(col).toIndexedSeq: _*)
+        .repartition(targetFiles)
+        .write.mode("overwrite")
+        .option("ignoreNullFields", "true") // keep the sink's omitempty shape
+        .json(tmp.toString)
+    }
+
+  /** The one crash-safe swap of a closed partition directory `part`,
+    * shared by [[compactJsonPartition]] and [[optimizeClustered]]:
+    * `write(part, tmp)` stages the rewrite in the sibling `.<stage>-<name>`,
+    * then two renames (live → `.old-<name>` backup, staged → live) install
+    * it and the backup is deleted. Returns the installed partition's `ext`
+    * file count, or -1 when the partition does not exist.
+    *
+    * Visibility: HDFS-style filesystems offer no multi-path atomic
+    * rename, so the partition path does NOT exist for the instant
+    * between the two renames — concurrent readers of this one partition
+    * can transiently miss it. Crash recovery: a backup found on entry
+    * exists only inside an interrupted swap window; it is restored when
+    * the live path is gone (a crash between the renames) and discarded
+    * when the swap completed but cleanup died, so no data is stranded. */
+  private def swapPartition(spark: SparkSession, part: Path, stage: String, ext: String)(
+      write: (Path, Path) => Unit): Int = {
     val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = new Path(s"$outDir/.old-date=$date")
-    // crash recovery: the backup exists only inside an interrupted swap
-    // window; restore it when the live path is gone, discard it when the
-    // swap completed but cleanup died
+    val bak = new Path(part.getParent, s".old-${part.getName}")
     if (fs.exists(bak)) {
       if (!fs.exists(part)) fs.rename(bak, part)
       else fs.delete(bak, true)
     }
     if (!fs.exists(part)) return -1
-    val tmp = new Path(s"$outDir/.compact-date=$date")
+    val tmp = new Path(part.getParent, s".$stage-${part.getName}")
     fs.delete(tmp, true)
-    spark.read.schema(logEntrySchema).json(part.toString)
-      .select(logEntrySchema.fieldNames.map(col).toIndexedSeq: _*)
-      .repartition(targetFiles)
-      .write.mode("overwrite")
-      .option("ignoreNullFields", "true") // keep the sink's omitempty shape
-      .json(tmp.toString)
+    write(part, tmp)
     require(fs.rename(part, bak), s"swap failed: $part -> $bak")
     require(fs.rename(tmp, part), s"swap failed: $tmp -> $part (backup at $bak)")
     fs.delete(bak, true)
-    fs.listStatus(part).count(_.getPath.getName.endsWith(".json"))
+    fs.listStatus(part).count(_.getPath.getName.endsWith(ext))
   }
 
   /** Rewrite one parquet directory (a closed partition of any sink —
@@ -82,7 +93,7 @@ object Maintenance {
     * [[graft.operators.Layout.layoutByZorder]] (one repartitionByRange
     * + in-partition sort; every output file gets a small bounding BOX
     * over both keyed columns so point/range predicates on EITHER prune
-    * files) and the same two-rename crash-safe swap as
+    * files) and the crash-safe [[swapPartition]] it shares with
     * [[compactJsonPartition]] (backup restored on the next invocation
     * if a crash strands it). Returns the resulting file count, or -1
     * if the directory does not exist. Run only on CLOSED partitions —
@@ -113,27 +124,13 @@ object Maintenance {
   private def optimizeClustered(spark: SparkSession, dir: String,
       x: String, y: String, targetFiles: Int,
       relayout: (org.apache.spark.sql.DataFrame, String, String, Int) => org.apache.spark.sql.DataFrame,
-      fileStats: Boolean = false): Int = {
-    val part = new Path(dir)
-    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val name = part.getName
-    val bak = new Path(part.getParent, s".old-$name")
-    if (fs.exists(bak)) {
-      if (!fs.exists(part)) fs.rename(bak, part)
-      else fs.delete(bak, true)
+      fileStats: Boolean = false): Int =
+    swapPartition(spark, new Path(dir), "zorder", ".parquet") { (_, tmp) =>
+      relayout(spark.read.parquet(dir), x, y, targetFiles)
+        .write.mode("overwrite").parquet(tmp.toString)
+      if (fileStats)
+        graft.operators.Layout.writeFileStats(spark, tmp.toString, x, y)
     }
-    if (!fs.exists(part)) return -1
-    val tmp = new Path(part.getParent, s".zorder-$name")
-    fs.delete(tmp, true)
-    relayout(spark.read.parquet(dir), x, y, targetFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (fileStats)
-      graft.operators.Layout.writeFileStats(spark, tmp.toString, x, y)
-    require(fs.rename(part, bak), s"swap failed: $part -> $bak")
-    require(fs.rename(tmp, part), s"swap failed: $tmp -> $part (backup at $bak)")
-    fs.delete(bak, true)
-    fs.listStatus(part).count(_.getPath.getName.endsWith(".parquet"))
-  }
 
   /** Marker a crashed [[compactBatchStore]] leaves behind; its presence
     * means the store is mid-swap (some source partitions deleted, the
@@ -191,7 +188,10 @@ object Maintenance {
     * same operating rule as [[compactJsonPartition]]): the compacted
     * tmp is fully written BEFORE a `_compact_inprogress` marker
     * records the swap plan (target + source partition names); only
-    * then are sources deleted and the tmp renamed in. A crash before
+    * then are sources deleted and the tmp renamed in. The marker is
+    * published whole by
+    * [[graft.core.LocalCheckpointFileManager.writeAtomic]], so it is
+    * absent or complete, never empty. A crash before
     * the marker changes nothing durable (tmp is ignored and
     * rewritten); a crash after it leaves the marker, which (a) makes
     * [[CurateStream]] batches fail loudly instead of reading a
@@ -213,15 +213,14 @@ object Maintenance {
       s"compactBatchStore: the schema of $storeDir must list data columns only " +
         "— batch_id is the partition directory, not a column of its files")
     val root = new Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
     val marker = new Path(root, CompactMarker)
     val tmp = new Path(root, ".compact-tmp")
-    if (fs.exists(marker)) {
+    LocalCheckpointFileManager.readString(marker, conf).foreach { txt =>
       // finish the interrupted plan: delete listed sources that remain,
       // install tmp as the target if that rename never happened
-      val in = fs.open(marker)
-      val plan = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
+      val plan = txt.split('\n').toList
       val target = new Path(root, plan.head)
       // the target's own name appears among the sources (the pre-compaction
       // `batch_id=upTo` partition is one of them); when the crash landed
@@ -252,9 +251,8 @@ object Maintenance {
       .coalesce(targetFiles)
       .write.mode("overwrite").parquet(tmp.toString)
     val rows = written.get("rows").asInstanceOf[Long]
-    val out = fs.create(marker, true)
-    try out.write((s"batch_id=$upTo" +: srcs.map(_._1).toSeq).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    LocalCheckpointFileManager.writeAtomic(marker, conf,
+      (s"batch_id=$upTo" +: srcs.map(_._1).toSeq).mkString("\n").getBytes("UTF-8"))
     srcs.foreach { case (n, _) => fs.delete(new Path(root, n), true) }
     val target = new Path(root, s"batch_id=$upTo")
     require(fs.rename(tmp, target), s"compaction swap failed: $tmp -> $target (marker at $marker)")

@@ -111,11 +111,7 @@ object PackStream {
 
   private def readState(spark: SparkSession, outDir: String): Option[PackState] = {
     val p = statePath(outDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    LocalCheckpointFileManager.readString(p, spark.sparkContext.hadoopConfiguration).map { txt =>
       val st = try {
         val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
         // a state stamped by a FUTURE format (extra checksummed fields)
@@ -149,7 +145,7 @@ object PackStream {
             "replay the stream from a fresh checkpoint (every offset derives " +
             "from this carry)")
       }
-      Some(st._1)
+      st._1
     }
   }
 
@@ -368,16 +364,12 @@ object PackStream {
       .sortBy(_._2)
     if (srcs.length <= 1) return
     val lines = srcs.toSeq.flatMap { case (n, b) =>
-      val f = new Path(root, s"$n/stats.json")
-      if (!fs.exists(f)) Seq.empty[String]
-      else {
-        val in = fs.open(f)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        txt.split('\n').toSeq.filter(_.nonEmpty).map { l =>
+      LocalCheckpointFileManager.readString(new Path(root, s"$n/stats.json"),
+          spark.sparkContext.hadoopConfiguration).toSeq
+        .flatMap(_.split('\n').toSeq.filter(_.nonEmpty)).map { l =>
           if (l.contains("\"bid\":")) l
           else l.stripSuffix("}") + s""","bid":$b}"""
         }
-      }
     }.distinct
     writeJson(spark, new Path(root, s"batch_id=$upTo/stats.json"), lines.mkString("\n"))
     srcs.filter(_._2 != upTo).foreach { case (n, _) =>

@@ -66,6 +66,37 @@ class CheckpointWriterSpec extends SparkSpec {
     assert(names(dir).isEmpty)
   }
 
+  /** `f` exists with no `.crc` sidecar and no temp file beside it. */
+  private def landedClean(f: java.nio.file.Path): Unit = {
+    assert(Files.exists(f), f)
+    val beside = names(f.getParent).filter(_.startsWith(s".${f.getFileName}."))
+    assert(beside.isEmpty, s"$f: $beside")
+  }
+
+  test("IndexStore.ensureIndexFor's fingerprint marker lands through the one writer") {
+    val src = Files.createTempFile("ckfm-src", ".parquet")
+    Files.write(src, Array.fill(64)(7.toByte))
+    val ix = graft.operators.IndexStore.ensureIndexFor(spark, src.toString, "ckfm",
+      d => { new java.io.File(d).mkdirs(); () })
+    landedClean(Paths.get(ix, "_graft_fingerprint"))
+  }
+
+  test("Bucketing.ensureBucketed's fingerprint marker lands through the one writer") {
+    val table = Bucketing.ensureBucketed(spark.range(8).toDF("k"), "ckfm_bucketed",
+      "k", 2, java.util.UUID.randomUUID.toString)
+    val lfs = FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    val warehouse = new Path(spark.conf.get("spark.sql.warehouse.dir"), table)
+    try landedClean(lfs.pathToFile(new Path(warehouse, "_graft_fingerprint")).toPath)
+    finally { spark.sql(s"DROP TABLE IF EXISTS `$table`"); lfs.delete(warehouse, true) }
+  }
+
+  test("an IndexStore encode batch's stats.json lands through the one writer") {
+    val dir = Files.createTempDirectory("ckfm-ivfpq").toString
+    graft.operators.IndexStore.buildIvfPq(
+      Tables.load(spark, "/root/testdata/sf0.001", "embeddings"), dir, 16, 4, 16, 1)
+    landedClean(Paths.get(dir, "stats/batch_id=0/stats.json"))
+  }
+
   test("a checkpoint written by Spark's default manager restarts under the graft writer: " +
       "every file lands once, and the new batches leave no .crc") {
     val root = Files.createTempDirectory("ckfm-restart")

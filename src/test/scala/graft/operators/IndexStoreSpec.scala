@@ -580,10 +580,6 @@ class IndexStoreSpec extends SparkSpec {
     // a marker from a different source/layout version must NOT be served
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(d1, "_graft_fingerprint"), "v0:stale")
-    // drop the checksum sidecar hadoop's LocalFileSystem wrote for the
-    // original marker — the nio overwrite above invalidated it
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(d1, "._graft_fingerprint.crc"))
     assert(ensure() == d1 && builds == 2, "stale marker must trigger rebuild")
     assert(ensure() == d1 && builds == 2)
   }

@@ -171,6 +171,24 @@ class IngestStreamSpec extends SparkSpec {
     val keyOrder = """"(\w+)":""".r.findAllMatchIn(raw).map(_.group(1)).toSeq
     val declOrder = Maintenance.logEntrySchema.fieldNames.toSeq
     assert(keyOrder == keyOrder.sortBy(k => declOrder.indexOf(k)), raw)
+    val want = before.map(_.getAs[String]("binary_data_hex")).toSeq
+    def hexes() = spark.read.json(s"$out/date=$date").collect()
+      .sortBy(_.getAs[String]("client_ip")).map(_.getAs[String]("binary_data_hex")).toSeq
+    val live = Paths.get(s"$out/date=$date"); val bak = Paths.get(s"$out/.old-date=$date")
+    // crash recovery: a stranded backup with the live partition gone is
+    // restored, then compacted
+    Files.move(live, bak)
+    assert(Maintenance.compactJsonPartition(spark, out, date) == 1)
+    assert(hexes() == want)
+    assert(!Files.exists(bak))
+    // a backup beside a live partition outlived a finished swap: it is
+    // discarded, and none of its rows reach the compacted partition
+    Files.createDirectories(bak)
+    Files.writeString(bak.resolve("part-stale.json"),
+      """{"client_ip":"10.9.9.9","binary_data_hex":"ff"}""" + "\n")
+    assert(Maintenance.compactJsonPartition(spark, out, date) == 1)
+    assert(hexes() == want)
+    assert(!Files.exists(bak))
   }
 
   test("per-message file sink writes each payload executor-side") {
