@@ -42,6 +42,18 @@ import graft.core.Tables
   * `xm_png_*` / `xm_jpeg_*` / `xm_gif_*` / `xm_flac_*` / `xm_y4m_*`
   * rows decode real binaries through the same per-partition path with
   * byte-exact oracles, all refusing loudly on malformed payloads.
+  *
+  * What a decoded medium IS, and what is computed from it, lives in one
+  * place; each codec keeps only its container parse/encode, refusals and
+  * error messages. Every image codec decodes to the one [[Image]]
+  * (top-down rows, 3 interleaved bytes per pixel) under one allocation
+  * cap, and is resized by the one [[downsample2]]; both audio codecs
+  * decode to [[WavAudio]]. The `xm_*` rows share their feature kernels
+  * (channel means and one row's mean for images, PCM features and
+  * [[WavCodec.blockMeans]] for audio), and every `*Table` synthesizes
+  * its payloads through the one `synthesize(docs, fmt)(encode)`
+  * harness — the seam a native decoder would slot into with no plan
+  * change.
   */
 object Multimodal {
 
@@ -53,6 +65,100 @@ object Multimodal {
       media_id: Long, fmt: String, n_bytes: Int,
       width: Int, height: Int, mean_byte: Double, n_frames: Int)
 
+  // ------------------------------------------ shared decoded-media layer
+
+  /** A decoded still image — what every image codec ([[BmpCodec]],
+    * [[PngCodec]], [[JpegCodec]], [[GifCodec]]) recovers: logical
+    * TOP-DOWN row-major pixels, 3 interleaved bytes each, exactly
+    * `height * width * 3` of them. The channel order is the container's
+    * (BGR for BMP, RGB for the others). */
+  final case class Image(width: Int, height: Int, pixels: Array[Byte])
+
+  /** Decode-side allocation cap for [[Image]] pixels — far above any
+    * fixture, far below anything that could wrap Int arithmetic (2^28 B
+    * = 256 MB). */
+  private val MaxPixelBytes = 1L << 28
+
+  /** The refusal for a declared geometry whose pixel array would pass
+    * [[MaxPixelBytes]], or None. Checked in Long and row first: a hostile
+    * width overflows `width * 3` in Int before the area does. */
+  private def pixelCapRefusal(w: Int, h: Int): Option[String] =
+    if (w.toLong * 3L > MaxPixelBytes || w.toLong * h * 3L > MaxPixelBytes)
+      Some(s"${w}x$h declares ${w.toLong * h * 3L} pixel bytes (cap $MaxPixelBytes)")
+    else None
+
+  /** Nearest-neighbor 2× downsample: output pixel (y, x) = source
+    * (2y, 2x), output geometry ((w + 1) / 2) × ((h + 1) / 2). The
+    * selection is row-addressed, so a codec that gets the row order
+    * wrong (BMP's bottom-up un-flip, GIF's interlace) diverges here. */
+  def downsample2(img: Image): Image = {
+    val ow = (img.width + 1) / 2
+    val oh = (img.height + 1) / 2
+    val out = new Array[Byte](ow * oh * 3)
+    var y = 0
+    while (y < oh) {
+      var x = 0
+      while (x < ow) {
+        System.arraycopy(img.pixels, (2 * y * img.width + 2 * x) * 3,
+          out, (y * ow + x) * 3, 3)
+        x += 1
+      }
+      y += 1
+    }
+    Image(ow, oh, out)
+  }
+
+  /** Σ of the unsigned bytes `a(i)` for i = from, from + step, … < until. */
+  private def byteSum(a: Array[Byte], from: Int, until: Int, step: Int = 1): Long = {
+    var s = 0L; var i = from
+    while (i < until) { s += a(i) & 0xff; i += step }
+    s
+  }
+
+  /** Mean of each of the three interleaved channels, in stored order. */
+  private def channelMeans(img: Image): (Double, Double, Double) = {
+    val n = img.width * img.height
+    val len = img.pixels.length
+    (byteSum(img.pixels, 0, len, 3).toDouble / n,
+      byteSum(img.pixels, 1, len, 3).toDouble / n,
+      byteSum(img.pixels, 2, len, 3).toDouble / n)
+  }
+
+  /** Mean of logical row `y`'s bytes, taking every `step`-th from the row
+    * start: step 1 averages all channels, step 3 only the first. */
+  private def rowMean(img: Image, y: Int, step: Int): Double = {
+    val rb = img.width * 3
+    byteSum(img.pixels, y * rb, (y + 1) * rb, step).toDouble / (rb / step)
+  }
+
+  /** Synthesis source: the first `min(len, cap)` bytes, zero-padded to a
+    * whole number (at least one) of `unit`-byte rows, frames or blocks. */
+  private def padded(b: Array[Byte], cap: Int, unit: Int): Array[Byte] = {
+    val m = math.min(b.length, cap)
+    val out = new Array[Byte](math.max(1, (m + unit - 1) / unit) * unit)
+    System.arraycopy(b, 0, out, 0, m)
+    out
+  }
+
+  /** Synthesis source for the audio tables: sample i = (byte i − 128) ·
+    * 256, for the first 256 bytes. */
+  private def synthSamples(b: Array[Byte]): Array[Short] =
+    Array.tabulate(math.min(b.length, 256))(i => (((b(i) & 0xff) - 128) * 256).toShort)
+
+  /** The one synthesis harness behind every `*Table`: per document (per
+    * partition, streaming), `encode(doc_id, text bytes)` builds a real
+    * container payload tagged `fmt`, so each oracle can restate what a
+    * correct decoder must recover from the source hex. */
+  private def synthesize(docs: DataFrame, fmt: String)(
+      encode: (Long, Array[Byte]) => Array[Byte]): Dataset[MediaRecord] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs
+      .select($"doc_id".as("media_id"), $"text".cast(BinaryType).as("content"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(_.map { case (id, b) => MediaRecord(id, fmt, encode(id, b)) })
+  }
+
   /** STUB decoder — deterministic fake in place of a real codec. */
   object StubCodec {
     /** ??? real implementation: image/audio decode via a native library.
@@ -63,11 +169,9 @@ object Multimodal {
       val n = r.content.length
       val b0 = if (n > 0) r.content(0) & 0xff else 0
       val b1 = if (n > 1) r.content(1) & 0xff else 0
-      var s = 0L; var i = 0
-      while (i < n) { s += r.content(i) & 0xff; i += 1 }
       MediaFeatures(r.media_id, r.fmt, n,
         width = 16 + (b0 % 64) * 16, height = 16 + (b1 % 64) * 16,
-        mean_byte = if (n == 0) 0.0 else s.toDouble / n,
+        mean_byte = if (n == 0) 0.0 else byteSum(r.content, 0, n).toDouble / n,
         n_frames = 1 + n % 4)
     }
 
@@ -200,10 +304,6 @@ object Multimodal {
     }
   }
 
-  /** Decoded bitmap — logical TOP-DOWN row-major BGR bytes, exactly
-    * `height * width * 3` of them. */
-  final case class BmpImage(width: Int, height: Int, pixels: Array[Byte])
-
   /** The IMAGE half of the honest-decode posture: a pure-JVM 24-bit
     * uncompressed BMP codec. The format's real traps are all here and
     * all exercised: pixel rows are stored BOTTOM-UP, each row padded to
@@ -217,9 +317,6 @@ object Multimodal {
     * allocation cap) payloads. */
   object BmpCodec {
     private def stride(width: Int) = ((width * 3) + 3) / 4 * 4
-    /** Decode-side allocation cap — far above any fixture, far below
-      * anything that could wrap Int arithmetic (2^28 B = 256 MB). */
-    private val MaxPixelBytes = 1L << 28
 
     /** 24-bit BMP from logical top-down row-major BGR pixels. */
     def encode24(width: Int, height: Int, pixels: Array[Byte]): Array[Byte] = {
@@ -255,7 +352,7 @@ object Multimodal {
 
     /** Parse for real: magic, declared pixel offset, info-header field
       * validation, bottom-up row un-flip, stride walk. */
-    def decode(bytes: Array[Byte]): BmpImage = {
+    def decode(bytes: Array[Byte]): Image = {
       if (bytes.length < 54) fail(s"payload too short (${bytes.length} B)")
       if (bytes(0) != 'B' || bytes(1) != 'M') fail("missing BM magic")
       val bb = java.nio.ByteBuffer.wrap(bytes)
@@ -273,10 +370,7 @@ object Multimodal {
       // pixel-array allocation — a NegativeArraySizeException or a
       // multi-GB allocation instead of the codec's loud refusal. The
       // cap also bounds per-row memory for honest-but-huge headers.
-      if (width.toLong * 3L > MaxPixelBytes ||
-          width.toLong * height * 3L > MaxPixelBytes)
-        fail(s"${width}x$height declares ${width.toLong * height * 3L} " +
-          s"pixel bytes (cap $MaxPixelBytes)")
+      pixelCapRefusal(width, height).foreach(fail)
       val planes = bb.getShort(26).toInt
       if (planes != 1) fail(s"color planes $planes (BITMAPINFOHEADER requires 1)")
       val bits = bb.getShort(28).toInt
@@ -299,27 +393,7 @@ object Multimodal {
           out, y * width * 3, width * 3)
         y += 1
       }
-      BmpImage(width, height, out)
-    }
-
-    /** Nearest-neighbor 2× downsample: output pixel (y, x) = source
-      * (2y, 2x) — order-sensitive through the row un-flip, so a codec
-      * that skipped the bottom-up handling diverges here. */
-    def downsample2(img: BmpImage): BmpImage = {
-      val ow = (img.width + 1) / 2
-      val oh = (img.height + 1) / 2
-      val out = new Array[Byte](ow * oh * 3)
-      var y = 0
-      while (y < oh) {
-        var x = 0
-        while (x < ow) {
-          System.arraycopy(img.pixels, (2 * y * img.width + 2 * x) * 3,
-            out, (y * ow + x) * 3, 3)
-          x += 1
-        }
-        y += 1
-      }
-      BmpImage(ow, oh, out)
+      Image(width, height, out)
     }
   }
 
@@ -327,25 +401,11 @@ object Multimodal {
     * logical top-down BGR pixel bytes are the doc's first bytes (width
     * 6, up to 8 rows = 144 bytes, zero-padded to whole rows) — the
     * oracle can state every decoded value from the source hex. */
-  def bmpTable(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    Tables.load(spark, dir, "documents")
-      .select($"doc_id".as("media_id"), $"text".cast(BinaryType).as("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, b) =>
-          val m = math.min(b.length, 144)
-          val h = math.max(1, (m + 17) / 18)
-          val px = new Array[Byte](h * 18)
-          System.arraycopy(b, 0, px, 0, m)
-          MediaRecord(id, "image/bmp", BmpCodec.encode24(6, h, px))
-        }
-      }
-  }
-
-  /** Decoded PNG — logical top-down row-major RGB bytes, exactly
-    * `height * width * 3` of them. */
-  final case class PngImage(width: Int, height: Int, pixels: Array[Byte])
+  def bmpTable(spark: SparkSession, dir: String): Dataset[MediaRecord] =
+    synthesize(Tables.load(spark, dir, "documents"), "image/bmp") { (_, b) =>
+      val px = padded(b, 144, 18)
+      BmpCodec.encode24(6, px.length / 18, px)
+    }
 
   /** The COMPRESSED-image leg of the honest-decode posture: a pure-JVM
     * PNG codec for 8-bit truecolor (RGB) non-interlaced images — the
@@ -375,8 +435,6 @@ object Multimodal {
   object PngCodec {
     private val Signature =
       Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
-    /** Same decode-side allocation cap as [[BmpCodec]]. */
-    private val MaxPixelBytes = 1L << 28
 
     private def fail(msg: String): Nothing =
       throw new IllegalArgumentException(s"PngCodec: $msg — not a decodable " +
@@ -389,6 +447,15 @@ object Multimodal {
       val p = a + b - c
       val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
       if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
+    }
+
+    /** Filter type `t`'s (0–4) prediction from left `a`, up `b`, up-left `c`. */
+    private def predict(t: Int, a: Int, b: Int, c: Int): Int = t match {
+      case 0 => 0
+      case 1 => a
+      case 2 => b
+      case 3 => (a + b) / 2
+      case 4 => paeth(a, b, c)
     }
 
     private def crcOf(typ: Array[Byte], data: Array[Byte], dOff: Int, dLen: Int): Int = {
@@ -426,14 +493,7 @@ object Multimodal {
           val a = if (x >= 3) pixels(y * rb + x - 3) & 0xff else 0
           val b = if (y > 0) pixels((y - 1) * rb + x) & 0xff else 0
           val c = if (y > 0 && x >= 3) pixels((y - 1) * rb + x - 3) & 0xff else 0
-          val pred = t match {
-            case 0 => 0
-            case 1 => a
-            case 2 => b
-            case 3 => (a + b) / 2
-            case 4 => paeth(a, b, c)
-          }
-          filt(y * (rb + 1) + 1 + x) = (raw - pred).toByte
+          filt(y * (rb + 1) + 1 + x) = (raw - predict(t, a, b, c)).toByte
           x += 1
         }
         y += 1
@@ -453,7 +513,7 @@ object Multimodal {
         .put(0.toByte).put(0.toByte).put(0.toByte) // deflate, filter 0, no interlace
       chunk(out, "IHDR", ihdr.array())
       // ancillary chunk BETWEEN IHDR and IDAT: walked over, not assumed away
-      chunk(out, "tEXt", "Software graft".getBytes("US-ASCII"))
+      chunk(out, "tEXt", "Software\u0000graft".getBytes("US-ASCII"))
       // the zlib stream SPLIT across two IDAT chunks (spec-legal and
       // common — readers must concatenate before inflating)
       val cut = math.max(1, z.length / 2)
@@ -466,7 +526,7 @@ object Multimodal {
     /** Parse for real: signature, chunk walk with CRC-32 verification,
       * IHDR validation, IDAT concatenation, zlib inflate, per-row
       * filter reconstruction. */
-    def decode(bytes: Array[Byte]): PngImage = {
+    def decode(bytes: Array[Byte]): Image = {
       if (bytes.length < 8 + 25) fail(s"payload too short (${bytes.length} B)")
       if (!java.util.Arrays.equals(
           java.util.Arrays.copyOfRange(bytes, 0, 8), Signature))
@@ -497,9 +557,7 @@ object Multimodal {
             val comp = ih.get() & 0xff; val fm = ih.get() & 0xff
             val inter = ih.get() & 0xff
             if (w <= 0 || h <= 0) fail(s"geometry ${w}x$h")
-            if (w.toLong * 3L > MaxPixelBytes || w.toLong * h * 3L > MaxPixelBytes)
-              fail(s"${w}x$h declares ${w.toLong * h * 3L} pixel bytes " +
-                s"(cap $MaxPixelBytes)")
+            pixelCapRefusal(w, h).foreach(fail)
             if (depth != 8) fail(s"bit depth $depth (only 8)")
             if (color != 2) fail(s"color type $color (only 2 = truecolor RGB)")
             if (comp != 0) fail(s"compression method $comp")
@@ -552,45 +610,19 @@ object Multimodal {
       var y = 0
       while (y < h) {
         val t = filt(y * (rb + 1)) & 0xff
+        if (t > 4) fail(s"unknown filter type $t on row $y")
         var x = 0
         while (x < rb) {
           val f = filt(y * (rb + 1) + 1 + x) & 0xff
           val a = if (x >= 3) out(y * rb + x - 3) & 0xff else 0
           val b = if (y > 0) out((y - 1) * rb + x) & 0xff else 0
           val c = if (y > 0 && x >= 3) out((y - 1) * rb + x - 3) & 0xff else 0
-          val pred = t match {
-            case 0 => 0
-            case 1 => a
-            case 2 => b
-            case 3 => (a + b) / 2
-            case 4 => paeth(a, b, c)
-            case _ => fail(s"unknown filter type $t on row $y")
-          }
-          out(y * rb + x) = (f + pred).toByte
+          out(y * rb + x) = (f + predict(t, a, b, c)).toByte
           x += 1
         }
         y += 1
       }
-      PngImage(w, h, out)
-    }
-
-    /** Nearest-neighbor 2× downsample — output (y, x) = source (2y, 2x),
-      * the [[BmpCodec.downsample2]] shape on RGB pixels. */
-    def downsample2(img: PngImage): PngImage = {
-      val ow = (img.width + 1) / 2
-      val oh = (img.height + 1) / 2
-      val out = new Array[Byte](ow * oh * 3)
-      var y = 0
-      while (y < oh) {
-        var x = 0
-        while (x < ow) {
-          System.arraycopy(img.pixels, (2 * y * img.width + 2 * x) * 3,
-            out, (y * ow + x) * 3, 3)
-          x += 1
-        }
-        y += 1
-      }
-      PngImage(ow, oh, out)
+      Image(w, h, out)
     }
   }
 
@@ -603,26 +635,11 @@ object Multimodal {
     * The oracle states every decoded value from the source hex: the
     * pixel bytes only exist after a real inflate + filter
     * reconstruction, so any codec shortcut diverges. */
-  def pngTable(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    Tables.load(spark, dir, "documents")
-      .select($"doc_id".as("media_id"), $"text".cast(BinaryType).as("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, b) =>
-          val m = math.min(b.length, 144)
-          val h = math.max(1, (m + 17) / 18)
-          val px = new Array[Byte](h * 18)
-          System.arraycopy(b, 0, px, 0, m)
-          MediaRecord(id, "image/png",
-            PngCodec.encodeRgb8(6, h, px, y => ((y + id) % 5).toInt))
-        }
-      }
-  }
-
-  /** Decoded baseline JPEG — geometry plus interleaved RGB bytes
-    * (top-down rows, like [[PngImage]]). */
-  final case class JpegImage(width: Int, height: Int, pixels: Array[Byte])
+  def pngTable(spark: SparkSession, dir: String): Dataset[MediaRecord] =
+    synthesize(Tables.load(spark, dir, "documents"), "image/png") { (id, b) =>
+      val px = padded(b, 144, 18)
+      PngCodec.encodeRgb8(6, px.length / 18, px, y => ((y + id) % 5).toInt)
+    }
 
   /** A NATIVE-CODEC compressed format decoded honestly (VERDICT r17 #5
     * — the format class the StubCodec previously stood in for): baseline
@@ -1027,7 +1044,7 @@ object Multimodal {
     private final case class Comp(id: Int, h: Int, v: Int, tq: Int)
 
     /** Decode a baseline sequential JPEG to top-down RGB. */
-    def decode(bytes: Array[Byte]): JpegImage = {
+    def decode(bytes: Array[Byte]): Image = {
       if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8)
         fail("bad magic (no SOI)")
       var pos = 2
@@ -1040,7 +1057,7 @@ object Multimodal {
       val dcT = new Array[HuffDec](4); val acT = new Array[HuffDec](4)
       var frame: Option[(Int, Int, Seq[Comp])] = None
       var restart = 0
-      var image: Option[JpegImage] = None
+      var image: Option[Image] = None
 
       def parseDqt(len: Int): Unit = {
         var left = len
@@ -1232,7 +1249,7 @@ object Multimodal {
             y += 1
           }
         }
-        image = Some(JpegImage(w, h, out))
+        image = Some(Image(w, h, out))
       }
 
       var done = false
@@ -1282,24 +1299,6 @@ object Multimodal {
       }
       image.getOrElse(fail("no scan before EOI"))
     }
-
-    /** Nearest-neighbor 2× downsample: output (y, x) = source (2y, 2x) —
-      * the BMP/PNG resize contract on the decoded RGB. */
-    def downsample2(img: JpegImage): JpegImage = {
-      val ow = (img.width + 1) / 2; val oh = (img.height + 1) / 2
-      val out = new Array[Byte](ow * oh * 3)
-      var y = 0
-      while (y < oh) {
-        var x = 0
-        while (x < ow) {
-          val s = (2 * y * img.width + 2 * x) * 3; val d = (y * ow + x) * 3
-          out(d) = img.pixels(s); out(d + 1) = img.pixels(s + 1); out(d + 2) = img.pixels(s + 2)
-          x += 1
-        }
-        y += 1
-      }
-      JpegImage(ow, oh, out)
-    }
   }
 
   /** Per-doc JPEG synthesis for the declared rows: up to 32 text bytes
@@ -1312,21 +1311,11 @@ object Multimodal {
 
   /** The same synthesis over an arbitrary documents FRAME — the form a
     * streaming micro-batch feeds ([[graft.streaming.MediaStream]]). */
-  def jpegRecordsOf(docs: DataFrame): Dataset[MediaRecord] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select($"doc_id".as("media_id"), $"text".cast(BinaryType).as("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, b) =>
-          val m = math.min(b.length, 32)
-          val bh = math.max(1, (m + 1) / 2)
-          val vals = Array.tabulate(2 * bh)(k => if (k < m) b(k) & 0xff else 0)
-          MediaRecord(id, "image/jpeg", JpegCodec.encodeConstantBlocks(2, bh, vals))
-        }
-      }
-  }
+  def jpegRecordsOf(docs: DataFrame): Dataset[MediaRecord] =
+    synthesize(docs, "image/jpeg") { (_, b) =>
+      val vals = padded(b, 32, 2).map(_ & 0xff)
+      JpegCodec.encodeConstantBlocks(2, vals.length / 2, vals)
+    }
 
   /** The third NATIVE-CODEC compressed format decoded honestly (r19,
     * extending VERDICT r18 #3 beyond the prescribed one): FLAC — the
@@ -1858,23 +1847,10 @@ object Multimodal {
     * and a decode that survives Rice/LPC/CRC/MD5 must still produce
     * the identical table. `seed = doc_id` rotates the encoder's
     * planted freedoms per payload. */
-  def flacTable(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    Tables.load(spark, dir, "documents")
-      .select($"doc_id".as("media_id"), $"text".cast(BinaryType).as("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, b) =>
-          val s = math.min(b.length, 256)
-          val samples = Array.tabulate(s)(i => (((b(i) & 0xff) - 128) * 256).toShort)
-          MediaRecord(id, "audio/flac", FlacCodec.encodePcm16Mono(samples, id))
-        }
-      }
-  }
-
-  /** Decoded GIF — geometry plus interleaved RGB bytes (top-down
-    * logical rows: interlaced files are de-interlaced at decode). */
-  final case class GifImage(width: Int, height: Int, pixels: Array[Byte])
+  def flacTable(spark: SparkSession, dir: String): Dataset[MediaRecord] =
+    synthesize(Tables.load(spark, dir, "documents"), "audio/flac") { (id, b) =>
+      FlacCodec.encodePcm16Mono(synthSamples(b), id)
+    }
 
   /** The second NATIVE-CODEC compressed format decoded honestly
     * (VERDICT r18 #3, following the [[JpegCodec]] discipline): GIF
@@ -1904,9 +1880,6 @@ object Multimodal {
     * shortcut reader fails on. Formats with no JVM-feasible decode
     * (H.264, MP3) remain the [[StubCodec]]'s clearly-stated domain. */
   object GifCodec {
-    /** Same decode-side allocation cap as [[BmpCodec]]/[[PngCodec]]. */
-    private val MaxPixelBytes = 1L << 28
-
     private def fail(msg: String): Nothing =
       throw new IllegalArgumentException(s"GifCodec: $msg — not a decodable " +
         "single-frame global-palette GIF; refusing loudly rather than " +
@@ -2142,7 +2115,7 @@ object Multimodal {
     /** Parse for real: header + LSD, global color table, extension
       * walk, image descriptor, sub-block concatenation, LZW decode,
       * de-interlace, palette mapping. */
-    def decode(bytes: Array[Byte]): GifImage = {
+    def decode(bytes: Array[Byte]): Image = {
       if (bytes.length < 6 + 7 + 1) fail(s"payload too short (${bytes.length} B)")
       val magic = new String(bytes, 0, 6, "US-ASCII")
       if (magic != "GIF89a" && magic != "GIF87a") fail(s"bad magic '$magic'")
@@ -2171,7 +2144,7 @@ object Multimodal {
           pos += len; len = u8()
         }
       }
-      var img: GifImage = null
+      var img: Image = null
       var done = false
       while (!done) {
         u8() match {
@@ -2197,9 +2170,7 @@ object Multimodal {
             if (l != 0 || t != 0 || w != sw || h != sh)
               fail(s"frame ${w}x$h at ($l,$t) is not the full ${sw}x$sh screen")
             if (w <= 0 || h <= 0) fail(s"geometry ${w}x$h")
-            if (w.toLong * h * 3L > MaxPixelBytes)
-              fail(s"${w}x$h declares ${w.toLong * h * 3L} pixel bytes " +
-                s"(cap $MaxPixelBytes)")
+            pixelCapRefusal(w, h).foreach(fail)
             val ipacked = u8()
             if ((ipacked & 0x80) != 0)
               fail("local color table (global-palette contract)")
@@ -2233,7 +2204,7 @@ object Multimodal {
               px(3 * i + 2) = palette(3 * idx + 2)
               i += 1
             }
-            img = GifImage(w, h, px)
+            img = Image(w, h, px)
           case 0x3b =>
             done = true
           case b =>
@@ -2244,25 +2215,6 @@ object Multimodal {
       if (pos != bytes.length)
         fail(s"${bytes.length - pos} trailing bytes after the trailer")
       img
-    }
-
-    /** Nearest-neighbor 2× downsample — output (y, x) = source (2y, 2x),
-      * the [[PngCodec.downsample2]] shape. */
-    def downsample2(img: GifImage): GifImage = {
-      val ow = (img.width + 1) / 2
-      val oh = (img.height + 1) / 2
-      val out = new Array[Byte](ow * oh * 3)
-      var y = 0
-      while (y < oh) {
-        var x = 0
-        while (x < ow) {
-          System.arraycopy(img.pixels, (2 * y * img.width + 2 * x) * 3,
-            out, (y * ow + x) * 3, 3)
-          x += 1
-        }
-        y += 1
-      }
-      GifImage(ow, oh, out)
     }
   }
 
@@ -2275,25 +2227,14 @@ object Multimodal {
     * plant a mid-stream CLEAR every 20 codes, ids ≡ 0 (mod 5) frame the
     * data in 7-byte sub-blocks. The container is lossless, so the
     * oracle restates every decoded value from the source hex exactly. */
-  def gifTable(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    Tables.load(spark, dir, "documents")
-      .select($"doc_id".as("media_id"), $"text".cast(BinaryType).as("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, b) =>
-          val m = math.min(b.length, 144)
-          val h = math.max(1, (m + 5) / 6)
-          val px = new Array[Byte](h * 6)
-          System.arraycopy(b, 0, px, 0, m)
-          MediaRecord(id, "image/gif",
-            GifCodec.encodeIndexed(6, h, px,
-              interlaced = id % 2 == 1,
-              clearEvery = if (id % 3 == 0) 20 else 0,
-              blockSize = if (id % 5 == 0) 7 else 255))
-        }
-      }
-  }
+  def gifTable(spark: SparkSession, dir: String): Dataset[MediaRecord] =
+    synthesize(Tables.load(spark, dir, "documents"), "image/gif") { (id, b) =>
+      val px = padded(b, 144, 6)
+      GifCodec.encodeIndexed(6, px.length / 6, px,
+        interlaced = id % 2 == 1,
+        clearEvery = if (id % 3 == 0) 20 else 0,
+        blockSize = if (id % 5 == 0) 7 else 255)
+    }
 
   /** Decoded video — header geometry/rate plus raw C420 frame payloads
     * (each `w·h + 2·(w/2)·(h/2)` bytes: Y plane, then U, then V). */
@@ -2399,11 +2340,9 @@ object Multimodal {
     /** Per-plane means of one C420 frame payload — (Y, U, V). */
     def planeMeans(w: Int, h: Int, frame: Array[Byte]): (Double, Double, Double) = {
       val ny = w * h; val nc = (w / 2) * (h / 2)
-      var sy = 0L; var su = 0L; var sv = 0L; var i = 0
-      while (i < ny) { sy += frame(i) & 0xff; i += 1 }
-      while (i < ny + nc) { su += frame(i) & 0xff; i += 1 }
-      while (i < ny + 2 * nc) { sv += frame(i) & 0xff; i += 1 }
-      (sy.toDouble / ny, su.toDouble / nc, sv.toDouble / nc)
+      (byteSum(frame, 0, ny).toDouble / ny,
+        byteSum(frame, ny, ny + nc).toDouble / nc,
+        byteSum(frame, ny + nc, ny + 2 * nc).toDouble / nc)
     }
 
     /** Mean |ΔY| between consecutive frames' luma planes — the temporal
@@ -2422,45 +2361,21 @@ object Multimodal {
     * and whose FRAME RATE varies with the doc (`F{24+id%6}:{1|1001}`)
     * — so the oracle can state every decoded value from the source hex
     * and a hardcoded header parse cannot pass. */
-  def y4mTable(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    Tables.load(spark, dir, "documents")
-      .select($"doc_id".as("media_id"), $"text".cast(BinaryType).as("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, b) =>
-          val m = math.min(b.length, 144)
-          val nf = math.max(1, (m + 23) / 24)
-          val frames = (0 until nf).map { f =>
-            val fr = new Array[Byte](24)
-            val start = f * 24
-            System.arraycopy(b, start, fr, 0, math.min(24, m - start).max(0))
-            fr
-          }
-          MediaRecord(id, "video/y4m", Y4mCodec.encodeC420(4, 4,
-            24 + (id % 6).toInt, 1 + 1000 * (id % 2).toInt, frames))
-        }
-      }
-  }
+  def y4mTable(spark: SparkSession, dir: String): Dataset[MediaRecord] =
+    synthesize(Tables.load(spark, dir, "documents"), "video/y4m") { (id, b) =>
+      Y4mCodec.encodeC420(4, 4, 24 + (id % 6).toInt, 1 + 1000 * (id % 2).toInt,
+        padded(b, 144, 24).grouped(24).toSeq)
+    }
 
   /** Synthesized WAV corpus: per document, a REAL RIFF/WAVE PCM16 mono
     * payload whose samples derive deterministically from the text bytes
     * (sample i = (byte i − 128)·256, capped at 256 samples) — so the
     * oracle can state, in SQL over the hex of the SOURCE, exactly what a
     * correct decoder must recover from the container. */
-  def wavTable(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    Tables.load(spark, dir, "documents")
-      .select($"doc_id".as("media_id"), $"text".cast(BinaryType).as("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, b) =>
-          val s = math.min(b.length, 256)
-          val samples = Array.tabulate(s)(i => (((b(i) & 0xff) - 128) * 256).toShort)
-          MediaRecord(id, "audio/wav", WavCodec.encodePcm16Mono(samples))
-        }
-      }
-  }
+  def wavTable(spark: SparkSession, dir: String): Dataset[MediaRecord] =
+    synthesize(Tables.load(spark, dir, "documents"), "audio/wav") { (_, b) =>
+      WavCodec.encodePcm16Mono(synthSamples(b))
+    }
 
   /** The fixture's media table: documents' bytes as opaque payloads with
     * a format tag derived from the source column. */
@@ -2557,10 +2472,8 @@ object Multimodal {
       // per-partition codec init would go here, as in extractFeatures
       it.map { r =>
         val rs = StubCodec.resize(r.content, 4)
-        var s = 0L; var i = 0
-        while (i < rs.length) { s += rs(i) & 0xff; i += 1 }
         (r.media_id, rs.length,
-          if (rs.isEmpty) 0.0 else s.toDouble / rs.length)
+          if (rs.isEmpty) 0.0 else byteSum(rs, 0, rs.length).toDouble / rs.length)
       }
     }.toDF("media_id", "n_bytes", "mean_byte")
       .orderBy($"media_id")
@@ -2591,10 +2504,8 @@ object Multimodal {
     import spark.implicits._
     mediaTable(spark, dir).flatMap { r =>
       StubCodec.frameSample(r).zipWithIndex.map { case (fb, idx) =>
-        var s = 0L; var i = 0
-        while (i < fb.length) { s += fb(i) & 0xff; i += 1 }
         (r.media_id, idx, fb.length,
-          if (fb.isEmpty) 0.0 else s.toDouble / fb.length)
+          if (fb.isEmpty) 0.0 else byteSum(fb, 0, fb.length).toDouble / fb.length)
       }
     }.toDF("media_id", "frame_idx", "n_bytes", "mean_byte")
       .orderBy($"media_id", $"frame_idx")
@@ -2774,11 +2685,17 @@ object Multimodal {
     * the SYNTHESIS SOURCE (the doc's hex bytes) — header fields are
     * constants of the encoding, samples are (byte−128)·256 — so any
     * mis-parse (wrong chunk offset, endianness, padding) diverges. */
-  private def xmWavFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    wavTable(spark, dir).mapPartitions { it =>
+  private def xmWavFeatures(spark: SparkSession, dir: String): DataFrame =
+    audioFeatures(wavTable(spark, dir), WavCodec.decode).orderBy("media_id")
+
+  /** The `xm_{wav,flac}_features` kernel: decode per partition, report
+    * the header fields and the PCM's count, duration, peak and mean. */
+  private def audioFeatures(media: Dataset[MediaRecord],
+      decode: Array[Byte] => WavAudio): DataFrame = {
+    import media.sparkSession.implicits._
+    media.mapPartitions { it =>
       it.map { r =>
-        val a = WavCodec.decode(r.content)
+        val a = decode(r.content)
         var sum = 0L; var peak = Int.MinValue; var i = 0
         while (i < a.samples.length) {
           sum += a.samples(i)
@@ -2793,7 +2710,6 @@ object Multimodal {
       }
     }.toDF("media_id", "sample_rate", "channels", "bits", "n_samples",
         "duration_s", "peak", "mean_s")
-      .orderBy($"media_id")
   }
 
   private val xmWavFeaturesSql =
@@ -2821,15 +2737,19 @@ object Multimodal {
     * block-average downsample by 4 — one row per output block with its
     * source width and IEEE mean, the order-free shape the oracle
     * replays exactly from the synthesis source. */
-  private def xmWavResample(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    wavTable(spark, dir).flatMap { r =>
-      val a = WavCodec.decode(r.content)
-      WavCodec.blockMeans(a.samples, 4).map { case (j, n, m) =>
+  private def xmWavResample(spark: SparkSession, dir: String): DataFrame =
+    audioResample(wavTable(spark, dir), WavCodec.decode).orderBy("media_id", "block_idx")
+
+  /** The `xm_{wav,flac}_resample` kernel: decode, then one row per
+    * [[WavCodec.blockMeans]] block of 4 samples. */
+  private def audioResample(media: Dataset[MediaRecord],
+      decode: Array[Byte] => WavAudio): DataFrame = {
+    import media.sparkSession.implicits._
+    media.flatMap { r =>
+      WavCodec.blockMeans(decode(r.content).samples, 4).map { case (j, n, m) =>
         (r.media_id, j, n, m)
       }
     }.toDF("media_id", "block_idx", "n_in", "mean_s")
-      .orderBy($"media_id", $"block_idx")
   }
 
   private val xmWavResampleSql =
@@ -2859,24 +2779,43 @@ object Multimodal {
     * `top_row_mean` is the mean of the logical TOP row, which the file
     * stores LAST — a codec that skips the bottom-up un-flip returns the
     * bottom row's bytes there and diverges. */
-  private def xmBmpFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    bmpTable(spark, dir).mapPartitions { it =>
+  private def xmBmpFeatures(spark: SparkSession, dir: String): DataFrame =
+    imageFeatures(bmpTable(spark, dir), BmpCodec.decode,
+      BgrMeans :+ "top_row_mean", _ => 0, 1).orderBy("media_id")
+
+  private val RgbMeans = Seq("mean_r", "mean_g", "mean_b")
+  private val BgrMeans = RgbMeans.reverse
+
+  /** The `xm_{bmp,png,gif,jpeg}_features` kernel: decode per partition,
+    * report geometry, the three channel means in stored order and the
+    * [[rowMean]] of logical row `row(height)` with `step`; `cols` names
+    * the four feature columns. */
+  private def imageFeatures(media: Dataset[MediaRecord], decode: Array[Byte] => Image,
+      cols: Seq[String], row: Int => Int, step: Int): DataFrame = {
+    import media.sparkSession.implicits._
+    media.mapPartitions { it =>
       it.map { r =>
-        val img = BmpCodec.decode(r.content)
-        val n = img.width * img.height
-        val ch = Array(0L, 0L, 0L)
-        var i = 0
-        while (i < img.pixels.length) { ch(i % 3) += img.pixels(i) & 0xff; i += 1 }
-        var top = 0L; var j = 0
-        while (j < img.width * 3) { top += img.pixels(j) & 0xff; j += 1 }
-        (r.media_id, img.width, img.height,
-          ch(0).toDouble / n, ch(1).toDouble / n, ch(2).toDouble / n,
-          top.toDouble / (img.width * 3))
+        val img = decode(r.content)
+        val (m0, m1, m2) = channelMeans(img)
+        (r.media_id, img.width, img.height, m0, m1, m2,
+          rowMean(img, row(img.height), step))
       }
-    }.toDF("media_id", "width", "height", "mean_b", "mean_g", "mean_r",
-        "top_row_mean")
-      .orderBy($"media_id")
+    }.toDF(Seq("media_id", "width", "height") ++ cols: _*)
+  }
+
+  /** The `xm_{bmp,png,gif}_resize` kernel: decode per partition,
+    * [[downsample2]], report geometry and the channel means (`means`
+    * names them in stored order). */
+  private def imageResize(media: Dataset[MediaRecord], decode: Array[Byte] => Image,
+      means: Seq[String]): DataFrame = {
+    import media.sparkSession.implicits._
+    media.mapPartitions { it =>
+      it.map { r =>
+        val img = downsample2(decode(r.content))
+        val (m0, m1, m2) = channelMeans(img)
+        (r.media_id, img.width, img.height, m0, m1, m2)
+      }
+    }.toDF(Seq("media_id", "width", "height") ++ means: _*)
   }
 
   private val xmBmpFeaturesSql =
@@ -2907,21 +2846,9 @@ object Multimodal {
     * report the downsampled geometry and channel means — pixel
     * SELECTION is row-addressed, so stride or flip mistakes diverge
     * even where full-image means would not. */
-  private def xmBmpResize(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    bmpTable(spark, dir).mapPartitions { it =>
-      it.map { r =>
-        val img = BmpCodec.downsample2(BmpCodec.decode(r.content))
-        val n = img.width * img.height
-        val ch = Array(0L, 0L, 0L)
-        var i = 0
-        while (i < img.pixels.length) { ch(i % 3) += img.pixels(i) & 0xff; i += 1 }
-        (r.media_id, img.width, img.height,
-          ch(0).toDouble / n, ch(1).toDouble / n, ch(2).toDouble / n)
-      }
-    }.toDF("media_id", "width", "height", "mean_b", "mean_g", "mean_r")
-      .orderBy($"media_id")
-  }
+  private def xmBmpResize(spark: SparkSession, dir: String): DataFrame =
+    imageResize(bmpTable(spark, dir), BmpCodec.decode, BgrMeans)
+      .orderBy("media_id")
 
   /** Source pixel (2y, 2x) channel c is padded byte 36y + 6x + c. */
   private val xmBmpResizeSql =
@@ -2956,25 +2883,9 @@ object Multimodal {
     * means pin the RGB order (vs BMP's BGR), `last_row_mean` pins
     * top-down row order, and a single mis-implemented predictor
     * (Sub/Up/Average/Paeth) corrupts rows 1+ and diverges. */
-  private def xmPngFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    pngTable(spark, dir).mapPartitions { it =>
-      it.map { r =>
-        val img = PngCodec.decode(r.content)
-        val n = img.width * img.height
-        val ch = Array(0L, 0L, 0L)
-        var i = 0
-        while (i < img.pixels.length) { ch(i % 3) += img.pixels(i) & 0xff; i += 1 }
-        var last = 0L; var j = (img.height - 1) * img.width * 3
-        while (j < img.pixels.length) { last += img.pixels(j) & 0xff; j += 1 }
-        (r.media_id, img.width, img.height,
-          ch(0).toDouble / n, ch(1).toDouble / n, ch(2).toDouble / n,
-          last.toDouble / (img.width * 3))
-      }
-    }.toDF("media_id", "width", "height", "mean_r", "mean_g", "mean_b",
-        "last_row_mean")
-      .orderBy($"media_id")
-  }
+  private def xmPngFeatures(spark: SparkSession, dir: String): DataFrame =
+    imageFeatures(pngTable(spark, dir), PngCodec.decode,
+      RgbMeans :+ "last_row_mean", _ - 1, 1).orderBy("media_id")
 
   /** Same padded-byte layout as the BMP oracles, but RGB channel order
     * and the LAST logical row (PNG stores rows top-down, no un-flip). */
@@ -3006,21 +2917,9 @@ object Multimodal {
     * report geometry and channel means — row-addressed selection, so a
     * filter-reconstruction error on any sampled row diverges even
     * where full-image means might cancel. */
-  private def xmPngResize(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    pngTable(spark, dir).mapPartitions { it =>
-      it.map { r =>
-        val img = PngCodec.downsample2(PngCodec.decode(r.content))
-        val n = img.width * img.height
-        val ch = Array(0L, 0L, 0L)
-        var i = 0
-        while (i < img.pixels.length) { ch(i % 3) += img.pixels(i) & 0xff; i += 1 }
-        (r.media_id, img.width, img.height,
-          ch(0).toDouble / n, ch(1).toDouble / n, ch(2).toDouble / n)
-      }
-    }.toDF("media_id", "width", "height", "mean_r", "mean_g", "mean_b")
-      .orderBy($"media_id")
-  }
+  private def xmPngResize(spark: SparkSession, dir: String): DataFrame =
+    imageResize(pngTable(spark, dir), PngCodec.decode, RgbMeans)
+      .orderBy("media_id")
 
   /** Source pixel (2y, 2x) channel c is padded byte 36y + 6x + c —
     * the [[xmBmpResizeSql]] indexing with RGB channel order. */
@@ -3056,40 +2955,13 @@ object Multimodal {
     * must hash-match the uncompressed path's oracle verbatim. A single
     * mis-decoded residual shifts a mean; a desynced bit stream fails a
     * CRC or the MD5 first. */
-  private def xmFlacFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    flacTable(spark, dir).mapPartitions { it =>
-      it.map { r =>
-        val a = FlacCodec.decode(r.content)
-        var sum = 0L; var peak = Int.MinValue; var i = 0
-        while (i < a.samples.length) {
-          sum += a.samples(i)
-          if (a.samples(i) > peak) peak = a.samples(i)
-          i += 1
-        }
-        val n = a.samples.length
-        (r.media_id, a.sampleRate, a.channels, a.bits, n,
-          n.toDouble / a.sampleRate,
-          if (n == 0) 0 else peak,
-          if (n == 0) 0.0 else sum.toDouble / n)
-      }
-    }.toDF("media_id", "sample_rate", "channels", "bits", "n_samples",
-        "duration_s", "peak", "mean_s")
-      .orderBy($"media_id")
-  }
+  private def xmFlacFeatures(spark: SparkSession, dir: String): DataFrame =
+    audioFeatures(flacTable(spark, dir), FlacCodec.decode).orderBy("media_id")
 
   /** The resample verb on Rice/LPC-decoded PCM — [[xmWavResample]]'s
     * block-mean downsample on the FLAC tier, same oracle. */
-  private def xmFlacResample(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    flacTable(spark, dir).flatMap { r =>
-      val a = FlacCodec.decode(r.content)
-      WavCodec.blockMeans(a.samples, 4).map { case (j, n, m) =>
-        (r.media_id, j, n, m)
-      }
-    }.toDF("media_id", "block_idx", "n_in", "mean_s")
-      .orderBy($"media_id", $"block_idx")
-  }
+  private def xmFlacResample(spark: SparkSession, dir: String): DataFrame =
+    audioResample(flacTable(spark, dir), FlacCodec.decode).orderBy("media_id", "block_idx")
 
   /** The LOSSLESS native-codec row (VERDICT r18 #3): decode REAL
     * LZW-compressed GIFs per partition — sub-block framing, variable
@@ -3100,25 +2972,9 @@ object Multimodal {
     * g = 31i mod 256, b = 7i+3 mod 256); `last_row_mean` pins the
     * de-interlaced row order — an interlace shortcut permutes rows and
     * diverges there even where full-image means cancel. */
-  private def xmGifFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    gifTable(spark, dir).mapPartitions { it =>
-      it.map { r =>
-        val img = GifCodec.decode(r.content)
-        val n = img.width * img.height
-        val ch = Array(0L, 0L, 0L)
-        var i = 0
-        while (i < img.pixels.length) { ch(i % 3) += img.pixels(i) & 0xff; i += 1 }
-        var last = 0L; var j = (img.height - 1) * img.width * 3
-        while (j < img.pixels.length) { last += img.pixels(j) & 0xff; j += 3 }
-        (r.media_id, img.width, img.height,
-          ch(0).toDouble / n, ch(1).toDouble / n, ch(2).toDouble / n,
-          last.toDouble / img.width)
-      }
-    }.toDF("media_id", "width", "height", "mean_r", "mean_g", "mean_b",
-        "last_row_mean")
-      .orderBy($"media_id")
-  }
+  private def xmGifFeatures(spark: SparkSession, dir: String): DataFrame =
+    imageFeatures(gifTable(spark, dir), GifCodec.decode,
+      RgbMeans :+ "last_row_mean", _ - 1, 3).orderBy("media_id")
 
   /** Padded INDEX array from the source hex (1 byte/pixel, 6/row),
     * palette maps restated inline; last row = R channel = the raw
@@ -3150,21 +3006,9 @@ object Multimodal {
     * decode, 2× nearest-neighbor downsample, report geometry and
     * channel means — row-addressed selection (source rows 0,2,4,…), so
     * a row-order error survives nowhere. */
-  private def xmGifResize(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    gifTable(spark, dir).mapPartitions { it =>
-      it.map { r =>
-        val img = GifCodec.downsample2(GifCodec.decode(r.content))
-        val n = img.width * img.height
-        val ch = Array(0L, 0L, 0L)
-        var i = 0
-        while (i < img.pixels.length) { ch(i % 3) += img.pixels(i) & 0xff; i += 1 }
-        (r.media_id, img.width, img.height,
-          ch(0).toDouble / n, ch(1).toDouble / n, ch(2).toDouble / n)
-      }
-    }.toDF("media_id", "width", "height", "mean_r", "mean_g", "mean_b")
-      .orderBy($"media_id")
-  }
+  private def xmGifResize(spark: SparkSession, dir: String): DataFrame =
+    imageResize(gifTable(spark, dir), GifCodec.decode, RgbMeans)
+      .orderBy("media_id")
 
   /** Source pixel (2y, 2x) is padded index 12y + 2x (0-based) —
     * channels through the same palette maps. */
@@ -3200,32 +3044,13 @@ object Multimodal {
     * difference chain means a single mis-decoded block corrupts every
     * later block's value, so the means are sensitive to the whole
     * entropy walk, and `last_row_mean` pins row-major block order. */
-  private def xmJpegFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    jpegFeaturesOf(jpegTable(spark, dir)).orderBy($"media_id")
-  }
+  private def xmJpegFeatures(spark: SparkSession, dir: String): DataFrame =
+    jpegFeaturesOf(jpegTable(spark, dir)).orderBy("media_id")
 
   /** REAL decode → features over a media frame, shared by the batch row
     * and the per-micro-batch ingest pass ([[graft.streaming.MediaStream]]). */
-  def jpegFeaturesOf(media: Dataset[MediaRecord]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.map { r =>
-        val img = JpegCodec.decode(r.content)
-        val n = img.width * img.height
-        val ch = Array(0L, 0L, 0L)
-        var i = 0
-        while (i < img.pixels.length) { ch(i % 3) += img.pixels(i) & 0xff; i += 1 }
-        var last = 0L; var j = (img.height - 1) * img.width * 3
-        while (j < img.pixels.length) { last += img.pixels(j) & 0xff; j += 1 }
-        (r.media_id, img.width, img.height,
-          ch(0).toDouble / n, ch(1).toDouble / n, ch(2).toDouble / n,
-          last.toDouble / (img.width * 3))
-      }
-    }.toDF("media_id", "width", "height", "mean_r", "mean_g", "mean_b",
-        "last_row_mean")
-  }
+  def jpegFeaturesOf(media: Dataset[MediaRecord]): DataFrame =
+    imageFeatures(media, JpegCodec.decode, RgbMeans :+ "last_row_mean", _ - 1, 1)
 
   /** Block k (row-major on the 2-wide grid) is text byte k (0 past the
     * end); every pixel of block k decodes to exactly that value, so
@@ -3263,26 +3088,19 @@ object Multimodal {
     import spark.implicits._
     jpegTable(spark, dir).mapPartitions { it =>
       it.map { r =>
-        val img = JpegCodec.downsample2(JpegCodec.decode(r.content))
-        val n = img.width * img.height
-        val ch = Array(0L, 0L, 0L)
-        var i = 0
-        while (i < img.pixels.length) { ch(i % 3) += img.pixels(i) & 0xff; i += 1 }
+        val img = downsample2(JpegCodec.decode(r.content))
+        val (m0, m1, m2) = channelMeans(img)
+        val half = img.width / 2
         var l = 0L; var rr = 0L
         var y = 0
         while (y < img.height) {
-          var x = 0
-          while (x < img.width) {
-            val v = img.pixels((y * img.width + x) * 3) & 0xff
-            if (x < img.width / 2) l += v else rr += v
-            x += 1
-          }
+          val row = y * img.width
+          l += byteSum(img.pixels, row * 3, (row + half) * 3, 3)
+          rr += byteSum(img.pixels, (row + half) * 3, (row + img.width) * 3, 3)
           y += 1
         }
-        (r.media_id, img.width, img.height,
-          ch(0).toDouble / n, ch(1).toDouble / n, ch(2).toDouble / n,
-          l.toDouble / (img.height * (img.width / 2)),
-          rr.toDouble / (img.height * (img.width / 2)))
+        (r.media_id, img.width, img.height, m0, m1, m2,
+          l.toDouble / (img.height * half), rr.toDouble / (img.height * half))
       }
     }.toDF("media_id", "width", "height", "mean_r", "mean_g", "mean_b",
         "mean_left", "mean_right")

@@ -1926,24 +1926,7 @@ object Similarity {
 
     def l2ArgminUdf(cb: Array[Array[Double]]) = {
       val bc = spark.sparkContext.broadcast(cb)
-      udf { (v: Seq[Double]) =>
-        val cs = bc.value
-        var best = -1; var bestD = Double.PositiveInfinity
-        var c = 0
-        while (c < cs.length) {
-          val cv = cs(c)
-          var xx = 0.0; var xc = 0.0; var cc = 0.0
-          var i = 0
-          while (i < cv.length) {
-            val x = v(i)
-            xx += x * x; xc += x * cv(i); cc += cv(i) * cv(i); i += 1
-          }
-          val d2 = (xx - 2.0 * xc) + cc
-          if (d2 < bestD) { bestD = d2; best = c }
-          c += 1
-        }
-        best
-      }
+      udf((v: Seq[Double]) => nearestCodeword(bc.value, v, 0)._1)
     }
 
     def lloyd(s: Int, cb: Array[Array[Double]]): Array[Array[Double]] = {
@@ -1967,6 +1950,30 @@ object Similarity {
     Some((sub, Array.tabulate(m) { s =>
       (0 until iters).foldLeft(seeds(s))((cb, _) => lloyd(s, cb))
     }))
+  }
+
+  /** The PQ nearest-codeword kernel shared by training and encoding:
+    * the first codeword of `cs` minimizing the squared L2 distance to
+    * the subvector of `v` starting at `off`, with that distance. The
+    * distance is summed as `(xx − 2·xc) + cc`; codebooks and codes are
+    * bit-identical only while that order holds. */
+  private def nearestCodeword(cs: Array[Array[Double]], v: Seq[Double],
+      off: Int): (Int, Double) = {
+    var best = -1; var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < cs.length) {
+      val cv = cs(c)
+      var xx = 0.0; var xc = 0.0; var cc = 0.0
+      var i = 0
+      while (i < cv.length) {
+        val x = v(off + i)
+        xx += x * x; xc += x * cv(i); cc += cv(i) * cv(i); i += 1
+      }
+      val d2 = (xx - 2.0 * xc) + cc
+      if (d2 < bestD) { bestD = d2; best = c }
+      c += 1
+    }
+    (best, bestD)
   }
 
   /** Encode every vector against trained codebooks — one map-only pass,
@@ -1993,21 +2000,7 @@ object Similarity {
       var err = 0.0
       var s = 0
       while (s < bs.length) {
-        val cs = bs(s); val off = s * sub
-        var best = -1; var bestD = Double.PositiveInfinity
-        var c = 0
-        while (c < cs.length) {
-          val cv = cs(c)
-          var xx = 0.0; var xc = 0.0; var cc = 0.0
-          var i = 0
-          while (i < cv.length) {
-            val x = v(off + i)
-            xx += x * x; xc += x * cv(i); cc += cv(i) * cv(i); i += 1
-          }
-          val d2 = (xx - 2.0 * xc) + cc
-          if (d2 < bestD) { bestD = d2; best = c }
-          c += 1
-        }
+        val (best, bestD) = nearestCodeword(bs(s), v, s * sub)
         codes(s) = best; err += bestD; s += 1
       }
       (codes.toSeq, err)

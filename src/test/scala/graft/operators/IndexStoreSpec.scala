@@ -629,13 +629,13 @@ class IndexStoreSpec extends SparkSpec {
     IndexStore.deleteIvfPq(Seq(3L, 10L).toDF("vec_id"), dir, batchId = 1)
     // simulate the dir having been written by the previous layout: the
     // id namespace and tombstone lists are layout-stable, only the
-    // version field differs. The nio overwrite invalidates the checksum
-    // sidecar hadoop's local fs keeps for the manifest — drop it
+    // version field differs. The manifest is written by
+    // LocalCheckpointFileManager.writeAtomic, which leaves no `.crc`
+    // sidecar for the nio overwrite to make stale
     val mp = java.nio.file.Paths.get(dir, "manifest.json")
     java.nio.file.Files.writeString(mp,
       java.nio.file.Files.readString(mp).replace("\"layout\":7", "\"layout\":6"))
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(dir, ".manifest.json.crc"))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, ".manifest.json.crc")))
     // readers refuse (codes semantics differ across layouts)...
     val e = intercept[IllegalArgumentException] {
       IndexStore.readManifest(spark, dir)

@@ -192,13 +192,19 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("BmpCodec nearest-neighbor downsample picks source (2y, 2x)") {
-    // 4x3 image: pixel (y, x) has BGR (y*10 + x, 0, 0)
-    val px = new Array[Byte](4 * 3 * 3)
-    for (y <- 0 until 3; x <- 0 until 4) px((y * 4 + x) * 3) = (y * 10 + x).toByte
-    val out = Multimodal.BmpCodec.downsample2(Multimodal.BmpImage(4, 3, px))
-    assert(out.width == 2 && out.height == 2)
-    val picked = for (y <- 0 until 2; x <- 0 until 2) yield out.pixels((y * 2 + x) * 3)
-    assert(picked == Seq[Byte](0, 2, 20, 22)) // sources (0,0),(0,2),(2,0),(2,2)
+    // w x h image: pixel (y, x) has BGR (y*10 + x, 0, 0)
+    def picked(w: Int, h: Int): (Int, Int, Seq[Byte]) = {
+      val px = new Array[Byte](w * h * 3)
+      for (y <- 0 until h; x <- 0 until w) px((y * w + x) * 3) = (y * 10 + x).toByte
+      val out = Multimodal.downsample2(Multimodal.Image(w, h, px))
+      (out.width, out.height,
+        for (y <- 0 until out.height; x <- 0 until out.width)
+          yield out.pixels((y * out.width + x) * 3))
+    }
+    // odd height: sources (0,0),(0,2),(2,0),(2,2)
+    assert(picked(4, 3) == ((2, 2, Seq[Byte](0, 2, 20, 22))))
+    // odd width too: the last column (x = 4) is kept
+    assert(picked(5, 3) == ((3, 2, Seq[Byte](0, 2, 4, 20, 22, 24))))
   }
 
   test("PngCodec round-trips RGB pixels through a real zlib-compressed PNG " +
@@ -1054,7 +1060,7 @@ class TextAnalysisSpec extends SparkSpec {
     val px = Array.tabulate[Byte](6 * 4)(_.toByte)
     val img = Multimodal.GifCodec.decode(
       Multimodal.GifCodec.encodeIndexed(6, 4, px, interlaced = true))
-    val half = Multimodal.GifCodec.downsample2(img)
+    val half = Multimodal.downsample2(img)
     assert(half.width == 3 && half.height == 2)
     for (y <- 0 until 2; x <- 0 until 3; c <- 0 until 3) {
       val srcIdx = px(2 * y * 6 + 2 * x) & 0xff

@@ -427,15 +427,13 @@ class PackStreamSpec extends SparkSpec {
     writeDrop(root, 0, dropConds(0))
     PackStream.start(spark, s"$root/in/*", s"$root/out", s"$root/ck", tok).awaitTermination()
     val stPath = java.nio.file.Paths.get(s"$root/out/pack_state.json")
-    // Hadoop LocalFileSystem keeps a `.pack_state.json.crc` checksum
-    // sidecar next to files written through `fs.create`; a java.nio
-    // tamper leaves it stale and `fs.open` throws ChecksumException
-    // BEFORE the product's own checksum runs (the documented round-12
-    // sidecar trap — IndexStoreSpec does the same). Drop it per tamper.
+    // LocalCheckpointFileManager.writeAtomic leaves no `.crc` checksum
+    // sidecar, so a java.nio tamper reaches the product's own checksum; a
+    // sidecar would mean a write bypassed it and made `fs.open` throw
+    // ChecksumException first
     def tamper(txt: String): Unit = {
       java.nio.file.Files.writeString(stPath, txt)
-      java.nio.file.Files.deleteIfExists(
-        stPath.resolveSibling(".pack_state.json.crc"))
+      assert(!java.nio.file.Files.exists(stPath.resolveSibling(".pack_state.json.crc")))
     }
     val good = java.nio.file.Files.readString(stPath)
     val total = "\"total\":(\\d+)".r.findFirstMatchIn(good).get.group(1).toLong
