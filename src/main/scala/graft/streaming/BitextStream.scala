@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Tables
 import graft.operators.{Declared, Similarity}
@@ -36,13 +37,13 @@ import graft.operators.{Declared, Similarity}
   *     neighborhood statistics" means frozen INPUTS: both tables are
   *     exact, so the recomputation is the batch computation.
   *
-  * State is three parquet stores under `outDir`, per-batch overwrite
-  * directories (the CurateStream replay discipline — a replayed batch
-  * re-lands its own partition, reads only earlier ones):
+  * State is three per-batch stores under `outDir`, kept under the
+  * [[Maintenance]] contract (a replayed batch re-lands its own
+  * partition and reads only earlier ones):
   *   - `fwd/batch_id=N`: the merged per-src top-k AFTER batch N
   *     (k·|S| rows). Partitions ≤ N−2 are pruned after N lands —
-  *     batch N−1 is the only one a replay of N can need, the
-  *     [[Maintenance.compactBatchStore]] `upTo` argument.
+  *     batch N−1 is the only one a replay of N can need (the fold
+  *     `upTo` rule).
   *   - `bwd/batch_id=N`: batch N's per-tgt top-k (k·|t_N| rows,
   *     immutable deltas — all partitions are live inputs to the tail).
   *   - `mined/batch_id=N`: the full mined result after batch N
@@ -58,25 +59,8 @@ import graft.operators.{Declared, Similarity}
   */
 object BitextStream {
 
-  private val KnnSchema = "probe_id BIGINT, rnk INT, neighbor_id BIGINT, sim DOUBLE"
+  private val Knn = StructType.fromDDL("probe_id BIGINT, rnk INT, neighbor_id BIGINT, sim DOUBLE")
   private val MinedSchema = "src_id BIGINT, tgt_id BIGINT, sim DOUBLE, margin DOUBLE"
-
-  /** Largest landed batch id < `before` in a per-batch store, with the
-    * CurateStream layout gate: a non-`batch_id=` entry would silently
-    * read as null and vanish from the `< before` filter. */
-  private def latestBatchBefore(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, before: Long): Option[Long] = {
-    val p = new Path(dir)
-    if (!fs.exists(p)) return None
-    val kids = fs.listStatus(p).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith("."))
-    val bad = kids.filterNot(_.startsWith("batch_id="))
-    require(bad.isEmpty,
-      s"BitextStream store $dir has non-partitioned entries " +
-        s"${bad.mkString(", ")}; the layout is batch_id=N directories only")
-    kids.map(_.stripPrefix("batch_id=").toLong).filter(_ < before)
-      .sorted.lastOption
-  }
 
   /** Exact top-k merge: union the state with the drop-local top-k and
     * re-rank per probe by the SAME (sim desc, neighbor_id) key the
@@ -104,8 +88,7 @@ object BitextStream {
     // backward: this drop's probes against the standing src corpus —
     // batch-sized broadcast, one scoring pass, landed as an immutable
     // per-batch delta
-    Similarity.cosineTopKAcross(src, tgtBatch, k)
-      .write.mode("overwrite").parquet(s"$bwdDir/batch_id=$batchId")
+    Maintenance.land(Similarity.cosineTopKAcross(src, tgtBatch, k), bwdDir, batchId)
     // forward: src probes against THIS DROP only (the incremental
     // ranking work), merged with the previous batch's persisted state.
     // The sliced path lands its slice scratch under the stream's own
@@ -128,34 +111,30 @@ object BitextStream {
         s"stream-fwd-$batchId", scratchRoot = Some(fwdScratch))
       case None => Similarity.cosineTopKAcross(tgtCorpus, src, k)
     }
-    val fwdState = latestBatchBefore(fs, fwdDir, batchId) match {
+    // the previous state is the newest gated batch below this one, read
+    // as its own partition (k·|S| rows, not the store)
+    val fwdState = Maintenance.gatedBatches(sp, fwdDir)
+        .flatMap(_.filter(_ < batchId).lastOption) match {
       case Some(m) => mergeTopK(
-        sp.read.schema(KnnSchema).parquet(s"$fwdDir/batch_id=$m"), fwdFresh, k)
+        sp.read.schema(Knn).parquet(Maintenance.batchPath(fwdDir, m)), fwdFresh, k)
       case None => mergeTopK(fwdFresh.limit(0), fwdFresh, k)
     }
-    fwdState.write.mode("overwrite").parquet(s"$fwdDir/batch_id=$batchId")
+    Maintenance.land(fwdState, fwdDir, batchId)
     if (fwdSliceSize.isDefined) fs.delete(new Path(fwdScratch), true)
     // the mining tail over the two persisted k-NN statistics: read the
     // forward state JUST landed (own partition — deterministic
     // recompute under replay) and every backward delta ≤ this batch
-    val fwdAll = sp.read.schema(KnnSchema).parquet(s"$fwdDir/batch_id=$batchId")
-    val bwdAll = sp.read.schema(s"$KnnSchema, batch_id BIGINT").parquet(bwdDir)
-      .filter(col("batch_id") <= batchId)
+    val fwdAll = sp.read.schema(Knn).parquet(Maintenance.batchPath(fwdDir, batchId))
+    val bwdAll = Maintenance.readBatches(sp, bwdDir, Knn, col("batch_id") <= batchId)
+      .getOrElse(throw new IllegalStateException(
+        s"BitextStream: $bwdDir vanished after batch $batchId landed in it"))
       .select(col("probe_id"), col("rnk"), col("neighbor_id"), col("sim"))
-    Similarity.mineFromKnn(fwdAll, bwdAll, minMargin)
-      .write.mode("overwrite").parquet(s"$minedDir/batch_id=$batchId")
+    Maintenance.land(Similarity.mineFromKnn(fwdAll, bwdAll, minMargin), minedDir, batchId)
     // prune: fwd ≤ N−2 (a replay of N reads only N−1), mined ≤ N−1
     // (output-only — a replay regenerates its own)
     def prune(dir: String, upTo: Long): Unit =
-      latestBatchBefore(fs, dir, upTo + 1).foreach { _ =>
-        fs.listStatus(new Path(dir)).map(_.getPath)
-          .filter { p =>
-            val n = p.getName
-            n.startsWith("batch_id=") &&
-              n.stripPrefix("batch_id=").toLong <= upTo
-          }
-          .foreach(p => fs.delete(p, true))
-      }
+      Maintenance.listBatches(sp, dir).toSeq.flatMap(_.ids).filter(_ <= upTo)
+        .foreach(b => fs.delete(new Path(Maintenance.batchPath(dir, b)), true))
     prune(fwdDir, batchId - 2)
     prune(minedDir, batchId - 1)
   }

@@ -42,78 +42,41 @@ import graft.operators.{Curation, Declared, Dedup, IndexStore}
   * docs from the data store, which at a word-shingle background Jaccard
   * of ≈ 0 is O(true near-dups) point reads per increment).
   *
-  * Delivery is exactly-once under replay. Both sinks are per-batch
-  * directories written with overwrite, so re-running batch N (after a
-  * crash anywhere in step 4, or after the keys write but before the
-  * checkpoint commit) overwrites batch N's own output instead of
-  * appending a second copy. The key-store read excludes batch N's own
-  * partition (`batch_id < N`), so a replay that finds its own
-  * half-written keys cannot anti-join its documents away — the failure
-  * mode the old append-append design had. The read also checks
-  * directory existence explicitly and lets every real error (corrupt
-  * file, permission) propagate: silently treating a failed read as "no
-  * keys yet" would disable cross-batch dedup for the batch and admit
-  * duplicates with no signal. For the same reason the key-store LAYOUT
-  * is validated before reading: every child of `keysDir` must be a
-  * `batch_id=N` partition directory (hidden `_`/`.` entries excepted —
-  * the parquet reader ignores those). A key file from some older
-  * unpartitioned layout would read as `batch_id = null`, fail the
-  * `batch_id < N` filter, and silently stop deduplicating against those
-  * keys — so a foreign layout fails the batch loudly and the operator
-  * must be pointed at a migrated/rebuilt store instead.
-  *
-  * The exactly-once guarantee is COUPLED TO THE CHECKPOINT: batch ids
-  * come from the streaming checkpoint, so losing/deleting the
-  * checkpoint restarts numbering at 0 and the overwrite-mode sinks
-  * would clobber earlier batches' partitions. Checkpoint and output
-  * directories must be retained (and backed up) together; starting a
-  * fresh checkpoint requires a fresh `outDir`. Downstream readers see a
-  * `batch_id` partition column on both outputs; a long-running
-  * deployment compacts the key/band stores with
-  * [[Maintenance.compactBatchStore]] (crash-safe, replay-preserving:
-  * the compacted partition keeps the largest compacted id, which must
-  * stay strictly below any batch that may replay) — either
-  * automatically via [[start]]'s `compactEvery`, which derives the
-  * safe `upTo` from the checkpoint, or out-of-band — and the data
-  * partitions with the [[Maintenance.compactJsonPartition]] pattern.
+  * Delivery is exactly-once under replay: the data, key and band
+  * stores are per-batch stores under the [[Maintenance]] contract
+  * (overwrite replay, gated `batch_id < N` reads, checkpoint and stores
+  * kept together). For this stream the `< N` read is what keeps a
+  * replay that finds its own half-written keys from anti-joining its
+  * documents away — the failure mode the old append-append design had
+  * — and the gate is what keeps a key file from an older unpartitioned
+  * layout from silently disabling dedup. A missing store means "no keys
+  * yet"; every other read failure fails the batch, since treating it as
+  * "no keys yet" would admit duplicates with no signal. Downstream
+  * readers see a `batch_id` partition column on every output; a
+  * long-running deployment folds the key/band stores with
+  * [[Maintenance.compactBatchStore]], automatically via [[start]]'s
+  * `compactEvery` or out-of-band, and the data partitions with the
+  * [[Maintenance.compactJsonPartition]] pattern.
   */
 object CurateStream {
 
   /** The key and band stores' DATA columns — the schema a store fold
     * ([[Maintenance.compactBatchStore]]) reads its partition dirs with;
-    * the batch reads below add the `batch_id` partition column. */
+    * the gated reads ([[Maintenance.readBatches]]) add `batch_id`. */
   private[streaming] val keysData = StructType(Seq(StructField("_key", StringType)))
 
   private[streaming] val bandsData = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("bands", ArrayType(LongType))))
 
-  private val keysSchema = keysData.add("batch_id", LongType)
-
-  private val bandsSchema = bandsData.add("batch_id", LongType)
+  /** What the near-dup verify reads back from the data store: the
+    * store's other columns are pruned by name resolution, and the schema
+    * is explicit because a schemaless read costs one inference job per
+    * micro-batch (the IndexStore.load job-budget discipline). */
+  private val verifyData = StructType.fromDDL("doc_id BIGINT, text STRING")
 
   private def keyed(docs: DataFrame): DataFrame =
     docs.withColumn("_key", md5(Dedup.normText(col("text")).cast("binary")))
-
-  /** Layout gate shared by every per-batch store: a non-partitioned
-    * entry would read as batch_id = null and be silently dropped by the
-    * `batch_id < N` filter — i.e. dedup quietly disabled for those
-    * rows. Fail loudly instead. */
-  private def gateLayout(fs: org.apache.hadoop.fs.FileSystem,
-      path: Path, what: String): Unit = {
-    require(!fs.exists(new Path(path, Maintenance.CompactMarker)),
-      s"CurateStream $what $path has an in-progress compaction marker " +
-        s"(${Maintenance.CompactMarker}): a compaction crashed mid-swap and " +
-        "the store may be missing partitions — re-run " +
-        "Maintenance.compactBatchStore to finish the swap before batching")
-    val stray = fs.listStatus(path).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("batch_id=") ||
-        n.startsWith("_") || n.startsWith("."))
-    require(stray.isEmpty,
-      s"CurateStream $what $path has non-partitioned entries " +
-        s"${stray.mkString(", ")}; the store layout is batch_id=N " +
-        "directories only — migrate or rebuild the store")
-  }
 
   /** One micro-batch of the pipeline (exposed for the replay tests:
     * calling it twice with the same `batchId` must be a no-op).
@@ -144,17 +107,11 @@ object CurateStream {
       .select(col("doc_id"))
     val firsts = keyed(batch.join(keepers, Seq("doc_id"), "left_semi"))
     // 2. cross-batch dedup against keys accepted by EARLIER batches only
-    // (batch_id < N: a replay must not see its own keys). Existence is
-    // checked explicitly; any other read failure propagates and fails
-    // the batch rather than silently skipping dedup.
-    val kPath = new Path(keysDir)
-    val fs = kPath.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    val seen =
-      if (fs.exists(kPath)) {
-        gateLayout(fs, kPath, "key store")
-        sp.read.schema(keysSchema).parquet(keysDir)
-          .filter(col("batch_id") < batchId).select(col("_key"))
-      } else sp.emptyDataFrame.select(lit("").as("_key")).limit(0)
+    // (batch_id < N: a replay must not see its own keys)
+    val earlier = col("batch_id") < batchId
+    val seen = Maintenance.readBatches(sp, keysDir, keysData, earlier)
+      .map(_.select(col("_key")))
+      .getOrElse(sp.emptyDataFrame.select(lit("").as("_key")).limit(0))
     val fresh = firsts.join(seen, Seq("_key"), "left_anti")
     // 3. repetition/length filter BEFORE near-dup: a doc that fails
     // quality never suppresses its near-dups (it is not accepted, so it
@@ -234,15 +191,15 @@ object CurateStream {
     // logw >= minLogw comparison the semi-join used to apply, computed
     // once at scoring time.
     val dsirScored = dsirGate.map { case (dsirDir, minLogw) =>
-      val d = s"${dsirScoredDirOf(dataDir)}/batch_id=$batchId"
-      Curation.dsirScoreWith(
-          filtered.select(col("doc_id"), col("text")),
-          Curation.loadDsir(sp, dsirDir))
-        .select(col("doc_id"),
-          graft.core.Num.e6(col("logw")).as("logw_e6"),
-          when(col("logw") >= minLogw, 1).otherwise(0).as("passed"))
-        .write.mode("overwrite").parquet(d)
-      d
+      Maintenance.land(
+        Curation.dsirScoreWith(
+            filtered.select(col("doc_id"), col("text")),
+            Curation.loadDsir(sp, dsirDir))
+          .select(col("doc_id"),
+            graft.core.Num.e6(col("logw")).as("logw_e6"),
+            when(col("logw") >= minLogw, 1).otherwise(0).as("passed")),
+        dsirScoredDirOf(dataDir), batchId)
+      Maintenance.batchPath(dsirScoredDirOf(dataDir), batchId)
     }
     // READ-AFTER-OVERWRITE assumption of the read-back: the gate and the
     // stats below trust that a read of `d` sees exactly the files the
@@ -291,42 +248,33 @@ object CurateStream {
         // back from the data store (doc_id semi-join pushes down), so
         // a band collision between genuinely dissimilar docs cannot
         // drop anything. Replay safety: both stores read batch_id < N.
-        val bandsDir = bandsDirOf(dataDir)
-        val bPath = new Path(bandsDir)
-        val crossDrops =
-          if (fs.exists(bPath)) {
-            gateLayout(fs, bPath, "band store")
-            val oldBanded = sp.read.schema(bandsSchema).parquet(bandsDir)
-              .filter(col("batch_id") < batchId)
-              .select(col("doc_id").as("old_id"), posexplode(col("bands")).as(Seq("band", "bh")))
-            val newBanded = shingled
-              .select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "bh")))
-            // accepted docs always precede the current drop in a
-            // doc_id-ordered ingest; the guard keeps union semantics
-            // (only a SMALLER doc suppresses) if they do not.
-            val cand = newBanded.join(oldBanded, Seq("band", "bh"))
-              .filter(col("old_id") < col("doc_id"))
-              .select(col("doc_id"), col("old_id")).distinct()
-            // explicit schema: the verify path needs only (doc_id,
-            // text) + the batch_id partition filter, and a schemaless
-            // parquet read costs one inference job PER MICRO-BATCH
-            // (the IndexStore.load job-budget discipline); extra
-            // store columns are pruned by name resolution
-            val oldSh = Dedup.shingleAndSign(
-              sp.read.schema("doc_id BIGINT, text STRING, batch_id BIGINT")
-                .parquet(dataDir)
-                .filter(col("batch_id") < batchId)
-                .join(cand.select(col("old_id").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-                .select(col("doc_id"), col("text")),
-              Dedup.wordShingleHashes)
-              .select(col("doc_id").as("old_id"), col("sh").as("sh_old"))
-            cand
-              .join(oldSh, "old_id")
-              .join(sh.select(col("doc_id"), col("sh").as("sh_new")), "doc_id")
-              .withColumn("inter", size(array_intersect(col("sh_new"), col("sh_old"))).cast("double"))
-              .filter(col("inter") / (size(col("sh_new")) + size(col("sh_old")) - col("inter")) >= t)
-              .select(col("doc_id"))
-          } else sp.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
+        val crossDrops = (for {
+          oldBands <- Maintenance.readBatches(sp, bandsDirOf(dataDir), bandsData, earlier)
+          oldDocs <- Maintenance.readBatches(sp, dataDir, verifyData, earlier)
+        } yield {
+          val oldBanded = oldBands
+            .select(col("doc_id").as("old_id"), posexplode(col("bands")).as(Seq("band", "bh")))
+          val newBanded = shingled
+            .select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "bh")))
+          // accepted docs always precede the current drop in a
+          // doc_id-ordered ingest; the guard keeps union semantics
+          // (only a SMALLER doc suppresses) if they do not.
+          val cand = newBanded.join(oldBanded, Seq("band", "bh"))
+            .filter(col("old_id") < col("doc_id"))
+            .select(col("doc_id"), col("old_id")).distinct()
+          val oldSh = Dedup.shingleAndSign(
+            oldDocs
+              .join(cand.select(col("old_id").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
+              .select(col("doc_id"), col("text")),
+            Dedup.wordShingleHashes)
+            .select(col("doc_id").as("old_id"), col("sh").as("sh_old"))
+          cand
+            .join(oldSh, "old_id")
+            .join(sh.select(col("doc_id"), col("sh").as("sh_new")), "doc_id")
+            .withColumn("inter", size(array_intersect(col("sh_new"), col("sh_old"))).cast("double"))
+            .filter(col("inter") / (size(col("sh_new")) + size(col("sh_old")) - col("inter")) >= t)
+            .select(col("doc_id"))
+        }).getOrElse(sp.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0))
         val drops = withinDrops.union(crossDrops).distinct()
         (filtered2.join(drops, Seq("doc_id"), "left_anti"),
           Some(shingled.select(col("doc_id"), col("bands"))))
@@ -339,14 +287,11 @@ object CurateStream {
     // expensive part; persist so the writes run it once, not twice.
     curated.persist()
     try {
-      curated.drop("_key").write.mode("overwrite")
-        .parquet(s"$dataDir/batch_id=$batchId")
-      curated.select(col("_key")).write.mode("overwrite")
-        .parquet(s"$keysDir/batch_id=$batchId")
+      Maintenance.land(curated.drop("_key"), dataDir, batchId)
+      Maintenance.land(curated.select(col("_key")), keysDir, batchId)
       acceptedBands.foreach { bands =>
-        bands.join(curated.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .write.mode("overwrite")
-          .parquet(s"${bandsDirOf(dataDir)}/batch_id=$batchId")
+        Maintenance.land(bands.join(curated.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+          bandsDirOf(dataDir), batchId)
       }
       // land the DSIR gate telemetry: one 1-row aggregation over the
       // just-landed ledger (batch-sized, a point read) — one
@@ -373,7 +318,7 @@ object CurateStream {
         // stream dir would read back as nulls silently. Readers refuse
         // unversioned files loudly ([[loadDsirStats]]).
         LocalCheckpointFileManager.writeAtomic(
-          new Path(s"${dsirStatsDirOf(dataDir)}/batch_id=$batchId/stats.json"),
+          new Path(Maintenance.batchPath(dsirStatsDirOf(dataDir), batchId), "stats.json"),
           sp.sparkContext.hadoopConfiguration,
           (s"""{"v":$DsirStatsVersion,"n_scored":$nScored,"n_passed":$nPassed,""" +
             s""""sum_logw_e6":${sumLogwE6.map(_.toString).getOrElse("null")},""" +
@@ -456,7 +401,7 @@ object CurateStream {
       .select(col("batch_id"), col("v")).limit(5).collect()
     require(bad.isEmpty,
       s"CurateStream: dsir stats store ${dsirStatsDirOf(dataDir)} has " +
-        s"batches with format version ${bad.map(r => s"batch_id=${r.get(0)} v=${r.get(1)}").mkString(", ")} " +
+        s"batches with format version ${bad.map(r => s"v=${r.get(1)} (batch ${r.get(0)})").mkString(", ")} " +
         s"(expected v=$DsirStatsVersion): stats landed by older code do not " +
         "carry the integer telemetry — re-run the gated stream (or drop " +
         "the stale _dsir_stats partitions) instead of reading nulls")
@@ -467,15 +412,13 @@ object CurateStream {
     * many batches, INSIDE the stream (before the batch's own work, so
     * the single-maintenance-writer rule holds with no coordination):
     * at batch N with N % compactEvery == 0, every `batch_id ≤ N-1`
-    * partition collapses into one. `upTo = N-1` is derived from the
-    * checkpoint itself — batches < N are committed and can never
-    * replay, which is exactly the replay contract
-    * [[Maintenance.compactBatchStore]] requires and the one thing
-    * manual callers get wrong. A compaction crash strands the marker,
-    * the layout gate fails batch N loudly, and the checkpoint replays
-    * batch N — which re-runs the compaction first and finishes the
-    * interrupted plan. The manual entry point stays for deployments
-    * that schedule maintenance out-of-band. */
+    * partition collapses into one — the [[Maintenance]] fold rule with
+    * `upTo` derived from the checkpoint, the one thing manual callers
+    * get wrong. A compaction crash strands the marker, the gated store
+    * reads fail batch N loudly, and the checkpoint replays batch N —
+    * which re-runs the compaction first and finishes the interrupted
+    * plan. The manual entry point stays for deployments that schedule
+    * maintenance out-of-band. */
   def start(spark: SparkSession, inDir: String, outDir: String,
       checkpoint: String, minWords: Int = 30,
       maxDupWordFrac: Double = 0.5,
@@ -558,7 +501,7 @@ object CurateStream {
         // the key store's small-files control runs BEFORE the batch's
         // own work, exactly as in [[start]]: a compaction that crashed
         // mid-swap strands the marker, and the replayed batch must
-        // FINISH the swap first — processBatch's layout gate would
+        // FINISH the swap first — processBatch's gated reads would
         // otherwise refuse the batch forever
         if (Maintenance.foldDue(batchId, compactEvery))
           Maintenance.compactBatchStore(spark, keysDir, upTo = batchId - 1,
@@ -569,7 +512,7 @@ object CurateStream {
         // needs only doc_id + text, and inference is a job per batch)
         val hv = vectorized(spark.read
           .schema("doc_id BIGINT, text STRING")
-          .parquet(s"$dataDir/batch_id=$batchId"))
+          .parquet(Maintenance.batchPath(dataDir, batchId)))
         // build/compact/append ordering is IndexStream's (same
         // checkpoint-derived upTo discipline: only committed-and-never-
         // replayable batches fold; a crashed fold is an orphan the next
@@ -640,7 +583,7 @@ object CurateStream {
         // autoCompactFragDirs default): either folds ALL the loop's
         // stores together, so key/band stores never outgrow the pack one
         if (PackStream.foldDue(spark, packDir, batchId, compactEvery,
-            autoCompactFragDirs)) {
+            autoCompactFragDirs, alsoFolded = Seq(keysDir, bandsDirOf(dataDir)))) {
           compactKeysAndBands(spark, keysDir, dataDir, upTo = batchId - 1)
           PackStream.compactAt(spark, packDir, upTo = batchId - 1)
         }
@@ -651,7 +594,7 @@ object CurateStream {
         // doc_id + text; inference is a job per batch)
         PackStream.processBatch(
           spark.read.schema("doc_id BIGINT, text STRING")
-            .parquet(s"$dataDir/batch_id=$batchId"),
+            .parquet(Maintenance.batchPath(dataDir, batchId)),
           batchId, tokDir, packDir, seqLen, buckets,
           staleWhen, staleTpwAbs, requireOrdered)
     }
@@ -954,8 +897,7 @@ object CurateStream {
       (batch, batchId) =>
         // map-only, no parallelism floor: a per-trigger RoundRobin
         // shuffle is one more job than the projection itself
-        Curation.signalTable(batch).write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
+        Maintenance.land(Curation.signalTable(batch), outDir, batchId)
     }
 
   private def xsSignalStream(spark: SparkSession, dir: String): DataFrame = {

@@ -1,19 +1,56 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types._
 
 import graft.core.LocalCheckpointFileManager
 
-/** Sink maintenance jobs.
+/** Sink maintenance jobs, and the one owner of the per-batch store layout.
   *
   * A long-running append stream writes one small file per trigger per
   * partition; at 100 TB that means millions of kilobyte files that
   * destroy scan performance (footer reads dominate). Compaction
   * rewrites a closed date partition into few large files — run it on
   * partitions the watermark has passed, never on the one being written.
+  *
+  * PER-BATCH STORES. [[CurateStream]], [[PackStream]], [[BitextStream]],
+  * [[MediaStream]] and the s7 user-totals row keep their state and output
+  * in parquet stores of one `batch_id=N` directory per micro-batch — the
+  * idempotent per-epoch sink of Structured Streaming. Only this object
+  * knows that layout; the streams go through [[batchPath]], [[land]],
+  * [[listBatches]], [[readBatches]] and [[compactBatchStore]]. The
+  * contract every store keeps:
+  *   - Overwrite replay. Batch N lands with [[land]], which overwrites
+  *     its own `batch_id=N` directory, so a replayed batch (a crash after
+  *     the write, before the checkpoint commit) re-lands its output
+  *     instead of appending a second copy. One stream is a store's
+  *     single writer. Batch ids come from the streaming checkpoint: a
+  *     lost checkpoint restarts numbering at 0 and would overwrite
+  *     earlier batches, so a checkpoint and its
+  *     stores are kept (and backed up) together, and a fresh checkpoint
+  *     needs fresh stores.
+  *   - `batch_id < N` reads. A batch reads earlier batches through
+  *     [[readBatches]]: the store root with its declared schema and a
+  *     `batch_id` partition filter (`< N`, or `≤` a commit watermark), so
+  *     a replay never reads its own half-written output. The read is
+  *     GATED: an entry that is neither a `batch_id=N` directory nor a
+  *     hidden `_`/`.` entry would read as `batch_id = null` and drop out
+  *     of the filter silently (for a dedup store: dedup quietly off), and
+  *     a fold marker means partitions are missing — both refuse the read.
+  *     Every other read failure (corrupt file, permission) propagates.
+  *   - The fold `upTo` rule. [[compactBatchStore]] collapses every
+  *     partition `≤ upTo` into one `batch_id=upTo` partition, so `upTo`
+  *     must stay strictly below any batch that may still replay. The
+  *     in-stream cadences fold before batch N's own work at `upTo = N − 1`,
+  *     which the checkpoint has committed; a replay of M > upTo then
+  *     still reads every folded row and still excludes its own.
+  *   - The marker. A fold that crashes after deleting sources leaves
+  *     [[CompactMarker]] with its plan. Gated reads refuse the store
+  *     until the next [[compactBatchStore]] call finishes the plan;
+  *     [[listBatches]] reports the marker without throwing, so a fold
+  *     cadence sees it and finishes the plan on the replayed batch.
   */
 object Maintenance {
 
@@ -135,9 +172,68 @@ object Maintenance {
   /** Marker a crashed [[compactBatchStore]] leaves behind; its presence
     * means the store is mid-swap (some source partitions deleted, the
     * compacted partition not yet installed) and MUST NOT be read until
-    * compaction is re-invoked to finish the plan. [[CurateStream]]'s
-    * layout gate fails any batch that sees it. */
+    * compaction is re-invoked to finish the plan — [[readBatches]]
+    * refuses it. */
   private[streaming] val CompactMarker = "_compact_inprogress"
+
+  /** The `batch_id=N` partition directory of a per-batch store. */
+  private[streaming] def batchPath(store: String, batchId: Long): String =
+    s"$store/batch_id=$batchId"
+
+  /** Land batch `batchId`'s rows as its partition of `store`, overwriting
+    * whatever an earlier attempt of the same batch left there (the
+    * overwrite-replay rule of the class doc). */
+  private[streaming] def land(rows: DataFrame, store: String, batchId: Long): Unit =
+    rows.write.mode("overwrite").parquet(batchPath(store, batchId))
+
+  /** A per-batch store as one listing sees it: its batch ids ascending,
+    * the entries that are neither `batch_id=N` directories nor hidden
+    * (`_`/`.`) ones, and whether a crashed fold's [[CompactMarker]] is
+    * present. */
+  private[streaming] final case class Batches(ids: Seq[Long], stray: Seq[String], marked: Boolean)
+
+  /** One driver-side listing of a per-batch store (no Spark job), or None
+    * when the store does not exist yet. It never refuses a layout: the
+    * fold cadence reads `marked` from here to finish a crashed plan, and
+    * [[readBatches]] applies the refusal. */
+  private[streaming] def listBatches(spark: SparkSession, store: String): Option[Batches] = {
+    val root = new Path(store)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val names = try fs.listStatus(root).map(_.getPath.getName).toSeq
+      catch { case _: java.io.FileNotFoundException => return None }
+    def id(n: String) =
+      if (n.startsWith("batch_id=")) n.stripPrefix("batch_id=").toLongOption else None
+    Some(Batches(names.flatMap(id).sorted,
+      names.filter(n => id(n).isEmpty && !n.startsWith("_") && !n.startsWith(".")),
+      names.contains(CompactMarker)))
+  }
+
+  /** The one layout gate: the store's batch ids, or None when it does not
+    * exist yet; refuses a crashed fold's marker and stray entries (see
+    * the class doc for why each would corrupt a `batch_id` read). */
+  private[streaming] def gatedBatches(spark: SparkSession, store: String): Option[Seq[Long]] =
+    listBatches(spark, store).map { b =>
+      require(!b.marked && b.stray.isEmpty,
+        s"per-batch store $store cannot be read: " +
+          (if (b.marked) s"$CompactMarker is present — a fold crashed mid-compaction " +
+            "and partitions may be missing; re-invoke the fold (compactBatchStore, " +
+            "PackStream.compact) or replay the stream, whose pre-work fold finishes " +
+            "the plan. " else "") +
+          (if (b.stray.nonEmpty) s"Non-partitioned entries ${b.stray.mkString(", ")} " +
+            "would read as batch_id = null and drop out of the batch filter; the " +
+            "layout is batch_id=N directories only — migrate or rebuild the store."
+          else ""))
+      b.ids
+    }
+
+  /** The gated read of a per-batch store: the store ROOT with its declared
+    * `data` columns plus the `batch_id` partition column, filtered by
+    * `keep` (a `batch_id` predicate) — or None when the store does not
+    * exist yet. `format` is the files' data source. */
+  private[streaming] def readBatches(spark: SparkSession, store: String, data: StructType,
+      keep: Column, format: String = "parquet"): Option[DataFrame] =
+    gatedBatches(spark, store).map(_ => spark.read.schema(data.add("batch_id", LongType))
+      .format(format).load(store).filter(keep))
 
   /** The fixed fold cadence of the in-stream store compactions: with
     * `every` > 0, batch N folds first when N is a positive multiple of
@@ -148,8 +244,7 @@ object Maintenance {
     every > 0 && batchId > 0 && batchId % every == 0
 
   /** Compact every `batch_id ≤ upTo` partition of a per-batch store
-    * ([[CurateStream]]'s key store or band store — any parquet store
-    * laid out as `batch_id=N` directories) into ONE `batch_id=upTo`
+    * (see the class doc) into ONE `batch_id=upTo`
     * partition of at most `targetFiles` files. Returns the compacted
     * partition's row count, or -1 when there was nothing to compact (0
     * or 1 source partitions). A store accretes one directory per drop
@@ -176,13 +271,9 @@ object Maintenance {
     * instead of re-shuffling them there. A store large enough to need
     * parallel writers passes a larger `targetFiles`.
     *
-    * REPLAY CONTRACT: the store is read with `batch_id < N`, so the
-    * compacted partition keeps the LARGEST compacted id (`upTo`) and
-    * `upTo` must be strictly below any batch that may still replay —
-    * i.e. below the streaming checkpoint's newest committed batch.
-    * Then a replay of batch M > upTo still sees every compacted key
-    * (upTo < M) and still excludes its own (M not compacted), so the
-    * `batch_id < N` semantics survive compaction unchanged.
+    * The compacted partition keeps the LARGEST compacted id, so `upTo`
+    * follows the fold rule of the class doc: strictly below any batch
+    * that may still replay.
     *
     * Crash safety (single maintenance writer, no batch in flight —
     * same operating rule as [[compactJsonPartition]]): the compacted
@@ -194,7 +285,7 @@ object Maintenance {
     * absent or complete, never empty. A crash before
     * the marker changes nothing durable (tmp is ignored and
     * rewritten); a crash after it leaves the marker, which (a) makes
-    * [[CurateStream]] batches fail loudly instead of reading a
+    * every [[readBatches]] of the store refuse instead of reading a
     * half-swapped store, and (b) lets the next invocation finish the
     * plan deterministically — every key is in tmp from before the
     * marker existed, so no crash point loses keys.
@@ -236,25 +327,20 @@ object Maintenance {
       }
       fs.delete(marker, false)
     }
-    if (!fs.exists(root)) return -1L
-    val srcs = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(n => n -> n.stripPrefix("batch_id=").toLong)
-      .filter(_._2 <= upTo)
-      .sortBy(_._2)
+    val srcs = listBatches(spark, storeDir).toSeq.flatMap(_.ids).filter(_ <= upTo)
     if (srcs.length <= 1) return -1L
     fs.delete(tmp, true)
     val written = Observation()
     fold(spark.read.schema(schema)
-        .parquet(srcs.map { case (n, _) => s"$storeDir/$n" }.toIndexedSeq: _*))
+        .parquet(srcs.map(batchPath(storeDir, _)): _*))
       .observe(written, count(lit(1)).as("rows"))
       .coalesce(targetFiles)
       .write.mode("overwrite").parquet(tmp.toString)
     val rows = written.get("rows").asInstanceOf[Long]
     LocalCheckpointFileManager.writeAtomic(marker, conf,
-      (s"batch_id=$upTo" +: srcs.map(_._1).toSeq).mkString("\n").getBytes("UTF-8"))
-    srcs.foreach { case (n, _) => fs.delete(new Path(root, n), true) }
-    val target = new Path(root, s"batch_id=$upTo")
+      (upTo +: srcs).map(b => s"batch_id=$b").mkString("\n").getBytes("UTF-8"))
+    srcs.foreach(b => fs.delete(new Path(batchPath(storeDir, b)), true))
+    val target = new Path(batchPath(storeDir, upTo))
     require(fs.rename(tmp, target), s"compaction swap failed: $tmp -> $target (marker at $marker)")
     fs.delete(marker, false)
     rows

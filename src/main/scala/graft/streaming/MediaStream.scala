@@ -25,8 +25,8 @@ object MediaStream {
       checkpoint: String): StreamingQuery =
     Drops.availableNow(spark, Tables.documents, inDir, checkpoint) {
       (batch, batchId) =>
-        Multimodal.jpegFeaturesOf(Multimodal.jpegRecordsOf(batch))
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+        Maintenance.land(Multimodal.jpegFeaturesOf(Multimodal.jpegRecordsOf(batch)),
+          outDir, batchId)
     }
 
   /** Three ordered drops through the real checkpointed stream, the

@@ -45,19 +45,19 @@ import graft.operators.{Curation, Declared, TokenizerStore}
   * sequence contents) differs from the batch run.
   *
   * Replay discipline (the [[graft.operators.IndexStore]] commit shape,
-  * scaled down): the token-count carry lives in `pack_state.json`,
-  * atomically renamed AFTER the batch's fragment write. The state
-  * records (last committed batch, its base offset, total after it), so
-  * a foreachBatch replay of the last batch — the only replay Spark's
-  * checkpoint can produce — recomputes from its original base and
-  * overwrites its own fragment dir, byte-identical; a batch strictly
+  * scaled down): `frag`, `bnd` and `stats` are per-batch stores under
+  * the [[Maintenance]] contract, and the token-count carry lives in
+  * `pack_state.json`, atomically renamed AFTER the batch's fragment
+  * write. The state records (last committed batch, its base offset,
+  * total after it), so a foreachBatch replay of the last batch — the
+  * only replay Spark's checkpoint can produce — recomputes from its
+  * original base and re-lands byte-identical fragments; a batch strictly
   * below the watermark can only come from a second or rewound
   * checkpoint and refuses loudly (its files would otherwise be marked
-  * processed with their tokens never packed). A crash between the
-  * fragment writes and the state swap leaves uncommitted fragment dirs
-  * that readers never see ([[packed]] reads only `batch_id ≤` the
-  * state watermark) and the replay overwrites. Like every store here:
-  * one stream is the dir's single writer.
+  * processed with their tokens never packed). Readers gate on that
+  * watermark (`batch_id ≤` it), so the uncommitted fragment dirs a
+  * crash between the writes and the state swap leaves stay invisible
+  * until the replay overwrites them.
   *
   * 100 TB shape: per batch, one corpus-of-the-batch shuffle for the
   * per-doc stage, one doc-level shuffle for the offsets window (its
@@ -276,10 +276,8 @@ object PackStream {
     // drop-sized batches (xs_pack_stream 1.05×, xs_pack_stats 0.84×) —
     // deliberately left to the offsets window's own partitioning.
     val withOff = offsets.withColumn("off", col("offset_tokens") + lit(base))
-    fragmentsOf(withOff, seqLen)
-      .write.mode("overwrite").parquet(s"$outDir/frag/batch_id=$batchId")
-    boundsOf(withOff, seqLen)
-      .write.mode("overwrite").parquet(s"$outDir/bnd/batch_id=$batchId")
+    Maintenance.land(fragmentsOf(withOff, seqLen), Frag.dir(outDir), batchId)
+    Maintenance.land(boundsOf(withOff, seqLen), Bnd.dir(outDir), batchId)
     writeStats(spark, outDir, batchId, batchDocs, batchWords, batchTokens)
     // the baseline is the first committed batch WITH words; replays
     // recompute the same numbers, so the carry is replay-stable (and so
@@ -294,26 +292,28 @@ object PackStream {
       seqLen, bl._1, bl._2, bl._3, maxDoc))
   }
 
-  /** Fragment-store directory count — one driver-side listing, no Spark
-    * job. The fold-cadence signal: [[writeStats]] reports it per batch
-    * and [[foldDue]] acts on it. */
-  private def fragDirCount(spark: SparkSession, outDir: String): Int = {
-    val frag = new Path(s"$outDir/frag")
-    val fs = frag.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(frag)) 0
-    else fs.listStatus(frag).count(_.getPath.getName.startsWith("batch_id="))
-  }
-
-  /** Whether batch `batchId` folds the pack store at `outDir` first:
-    * on the fixed `compactEvery` cadence ([[Maintenance.foldDue]]), or
-    * once the fragment store has grown to `autoCompactFragDirs`
-    * directories — [[start]]'s and
-    * [[CurateStream.startCurateAndPack]]'s cadence. */
+  /** Whether batch `batchId` folds the pack store at `outDir` first —
+    * [[start]]'s and [[CurateStream.startCurateAndPack]]'s cadence: on
+    * the fixed `compactEvery` cadence ([[Maintenance.foldDue]]), or,
+    * under the load-based one, once the fragment store has grown to
+    * `autoCompactFragDirs` directories OR a crashed fold left its marker
+    * in any store the loop folds (the pack stores and `alsoFolded`). A
+    * crash mid-`frag` fold has already deleted sources, so the count
+    * alone can sit below the threshold and leave the store refusing
+    * reads until it climbs back; the marker makes the replayed batch
+    * finish the plan. Driver-side listings only, no Spark job. */
   private[streaming] def foldDue(spark: SparkSession, outDir: String,
-      batchId: Long, compactEvery: Int, autoCompactFragDirs: Int): Boolean =
+      batchId: Long, compactEvery: Int, autoCompactFragDirs: Int,
+      alsoFolded: Seq[String] = Nil): Boolean =
     Maintenance.foldDue(batchId, compactEvery) ||
       (batchId > 0 && autoCompactFragDirs > 0 &&
-        fragDirCount(spark, outDir) >= autoCompactFragDirs)
+        (Maintenance.listBatches(spark, Frag.dir(outDir))
+          .exists(b => b.marked || b.ids.size >= autoCompactFragDirs) ||
+          (Bnd.dir(outDir) +: alsoFolded)
+            .exists(Maintenance.listBatches(spark, _).exists(_.marked))))
+
+  private def statsFile(outDir: String, batchId: Long): Path =
+    new Path(Maintenance.batchPath(s"$outDir/stats", batchId), "stats.json")
 
   /** One JSON line per committed batch under `stats/batch_id=N/` (the
     * [[graft.operators.IndexStore]] stats-artifact shape) — the numbers
@@ -332,8 +332,8 @@ object PackStream {
     * and growing at 48 unfolded drops). */
   private def writeStats(spark: SparkSession, outDir: String, batchId: Long,
       nDocs: Long, nWords: Long, nTokens: Long): Unit = {
-    val nFragDirs = fragDirCount(spark, outDir)
-    writeJson(spark, new Path(s"$outDir/stats/batch_id=$batchId/stats.json"),
+    val nFragDirs = Maintenance.listBatches(spark, Frag.dir(outDir)).fold(0)(_.ids.size)
+    writeJson(spark, statsFile(outDir, batchId),
       s"""{"n_docs":$nDocs,"n_words":$nWords,"n_tokens":$nTokens,""" +
         s""""n_frag_dirs":$nFragDirs,"bid":$batchId}""")
   }
@@ -354,27 +354,20 @@ object PackStream {
     * folded batches can never replay), which [[packStats]]'s distinct
     * collapses. No crash point loses a line or needs recovery. */
   private def compactStats(spark: SparkSession, outDir: String, upTo: Long): Unit = {
-    val root = new Path(s"$outDir/stats")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val srcs = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(n => n -> n.stripPrefix("batch_id=").toLong)
-      .filter(_._2 <= upTo)
-      .sortBy(_._2)
+    val srcs = Maintenance.listBatches(spark, s"$outDir/stats").toSeq.flatMap(_.ids)
+      .filter(_ <= upTo)
     if (srcs.length <= 1) return
-    val lines = srcs.toSeq.flatMap { case (n, b) =>
-      LocalCheckpointFileManager.readString(new Path(root, s"$n/stats.json"),
-          spark.sparkContext.hadoopConfiguration).toSeq
+    val conf = spark.sparkContext.hadoopConfiguration
+    val lines = srcs.flatMap { b =>
+      LocalCheckpointFileManager.readString(statsFile(outDir, b), conf).toSeq
         .flatMap(_.split('\n').toSeq.filter(_.nonEmpty)).map { l =>
           if (l.contains("\"bid\":")) l
           else l.stripSuffix("}") + s""","bid":$b}"""
         }
     }.distinct
-    writeJson(spark, new Path(root, s"batch_id=$upTo/stats.json"), lines.mkString("\n"))
-    srcs.filter(_._2 != upTo).foreach { case (n, _) =>
-      fs.delete(new Path(root, n), true)
-    }
+    writeJson(spark, statsFile(outDir, upTo), lines.mkString("\n"))
+    val fs = new Path(outDir).getFileSystem(conf)
+    srcs.filter(_ != upTo).foreach(b => fs.delete(statsFile(outDir, b).getParent, true))
   }
 
   /** The per-batch pricing telemetry as a frame (committed batches
@@ -384,22 +377,29 @@ object PackStream {
     * plus n_frag_dirs, the fragment-directory count right after that
     * batch landed (the fold-cadence signal; null on stores written
     * before the field existed). */
-  def packStats(spark: SparkSession, outDir: String): DataFrame = {
-    val st = readState(spark, outDir).getOrElse(throw new IllegalArgumentException(
-      s"PackStream: $outDir has no pack_state.json — run the stream first"))
-    spark.read
-      .schema("n_docs BIGINT, n_words BIGINT, n_tokens BIGINT, " +
-        "n_frag_dirs BIGINT, bid BIGINT, batch_id BIGINT")
-      .json(s"$outDir/stats")
-      // partition filter = the commit gate (an uncommitted stats dir is
-      // beyond the state watermark); folded lines live under their
-      // fold's partition but carry their own bid
-      .filter(col("batch_id") <= st.batchId)
+  def packStats(spark: SparkSession, outDir: String): DataFrame =
+    // folded lines live under their fold's partition but carry their
+    // own bid
+    committed(spark, outDir, "stats", StructType.fromDDL("n_docs BIGINT, " +
+        "n_words BIGINT, n_tokens BIGINT, n_frag_dirs BIGINT, bid BIGINT"), "json")
       .select(coalesce(col("bid"), col("batch_id")).as("batch_id"),
         col("n_docs"), col("n_words"), col("n_tokens"), col("n_frag_dirs"))
       // collapses the byte-identical duplicates a crash between
       // compactStats's install and its source deletes can leave
       .distinct()
+
+  /** A store's rows as of the last COMMITTED batch: the gated read
+    * ([[Maintenance.readBatches]]) with the state watermark as its
+    * commit gate — a dir beyond it (crash after the write, before the
+    * state swap) is invisible until its replay commits it. */
+  private def committed(spark: SparkSession, outDir: String, store: String,
+      data: StructType, format: String = "parquet"): DataFrame = {
+    val st = readState(spark, outDir).getOrElse(throw new IllegalArgumentException(
+      s"PackStream: $outDir has no pack_state.json — run the stream first"))
+    Maintenance.readBatches(spark, s"$outDir/$store", data,
+        col("batch_id") <= st.batchId, format)
+      .getOrElse(throw new IllegalStateException(
+        s"PackStream: $outDir has a pack state but no $store store — restore it"))
   }
 
   /** The batch's sequence fragments from its globally-shifted offsets
@@ -460,7 +460,10 @@ object PackStream {
     * merge — the one declaration serving ([[served]]) and the fold
     * ([[foldStore]]) both read with. */
   private[streaming] final case class Store(name: String, cols: String,
-      merge: DataFrame => DataFrame)
+      merge: DataFrame => DataFrame) {
+    def dir(outDir: String): String = s"$outDir/$name"
+    def data: StructType = StructType.fromDDL(cols)
+  }
   private[streaming] val Frag =
     Store("frag", "seq_id BIGINT, start BIGINT, n_tokens INT, ids STRING", mergeFrags)
   private[streaming] val Bnd =
@@ -513,8 +516,8 @@ object PackStream {
     * fold. */
   private[streaming] def foldStore(spark: SparkSession, outDir: String,
       store: Store, upTo: Long): Long =
-    Maintenance.compactBatchStore(spark, s"$outDir/${store.name}", upTo,
-      StructType.fromDDL(store.cols), fold = store.merge)
+    Maintenance.compactBatchStore(spark, store.dir(outDir), upTo, store.data,
+      fold = store.merge)
 
   /** Default `autoCompactFragDirs`: fold once the fragment store holds
     * this many batch directories. Sized from the measured serve costs
@@ -537,9 +540,9 @@ object PackStream {
     * batch directories the stream folds first — the `n_frag_dirs`
     * telemetry acted on automatically, so a deployment that never
     * tunes anything still serves from the flat cost band. The
-    * threshold check is one driver-side listing (the same one
-    * [[writeStats]] pays); both cadences share [[compactAt]] and are
-    * idempotent, so enabling both is safe. `staleWhen`
+    * threshold check is driver-side listings ([[foldDue]]); both
+    * cadences share [[compactAt]] and are idempotent, so enabling both
+    * is safe. `staleWhen`
     * > 0 arms the tokenizer-staleness tripwire: an advancing batch
     * whose tokens-per-WORD fertility is ≥ that multiple of the
     * first-non-empty-batch baseline refuses (see [[processBatch]]'s
@@ -567,24 +570,9 @@ object PackStream {
 
   /** The packed sequences as of the last COMMITTED batch — fragments
     * merged per seq_id in global-position order. Same output contract
-    * as [[Curation.packIds]]; an uncommitted fragment dir (crash after
-    * the write, before the state swap) is invisible until its replay
-    * commits it. */
-  private def served(spark: SparkSession, outDir: String, store: Store): DataFrame = {
-    val st = readState(spark, outDir).getOrElse(throw new IllegalArgumentException(
-      s"PackStream: $outDir has no pack_state.json — run the stream first"))
-    val marker = new Path(s"$outDir/${store.name}/${Maintenance.CompactMarker}")
-    require(!marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(marker),
-      s"PackStream: $outDir/${store.name} is mid-compaction (crashed fold) — re-invoke " +
-        "compact (or replay the stream, whose pre-work compaction finishes the " +
-        "plan) before serving")
-    store.merge(spark.read
-      .schema(s"${store.cols}, batch_id BIGINT")
-      .parquet(s"$outDir/${store.name}")
-      .filter(col("batch_id") <= st.batchId))
-      .drop("start")
-  }
+    * as [[Curation.packIds]]. */
+  private def served(spark: SparkSession, outDir: String, store: Store): DataFrame =
+    store.merge(committed(spark, outDir, store.name, store.data)).drop("start")
 
   def packed(spark: SparkSession, outDir: String): DataFrame =
     served(spark, outDir, Frag)

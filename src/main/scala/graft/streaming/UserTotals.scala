@@ -149,7 +149,7 @@ object UserTotals {
           .outputMode("update")
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.write.mode("overwrite").parquet(s"$root/out/batch_id=$batchId")
+            Maintenance.land(batch, s"$root/out", batchId)
           }
           .start()
           .awaitTermination()

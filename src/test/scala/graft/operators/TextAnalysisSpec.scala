@@ -1054,8 +1054,8 @@ class TextAnalysisSpec extends SparkSpec {
     expectFail(java.util.Arrays.copyOfRange(good, 0, 200), "global color table")
   }
 
-  test("GifCodec downsample2 keeps even-coordinate sources; fixture geometry " +
-      "and padding match the oracle's (m+5)/6 layout") {
+  test("GifCodec downsample2 keeps the even-coordinate pixels of an " +
+      "interlaced 6x4 image") {
     val pal = Multimodal.GifCodec.synthPalette
     val px = Array.tabulate[Byte](6 * 4)(_.toByte)
     val img = Multimodal.GifCodec.decode(
@@ -1067,6 +1067,33 @@ class TextAnalysisSpec extends SparkSpec {
       assert((half.pixels((y * 3 + x) * 3 + c) & 0xff) ==
         (pal(3 * srcIdx + c) & 0xff), s"($x,$y,$c)")
     }
+  }
+
+  test("gifTable lays each document out as a 6-wide index image of " +
+      "max(1, (min(m,144)+5)/6) rows: the source bytes, zero-padded") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("giftable").toString
+    val lens = Seq(0, 1, 5, 6, 7, 144, 200)
+    val texts = lens.map(n => Seq.tabulate(n)(i => ('a' + i % 26).toChar).mkString)
+    // ids 0..6 also hit every encoder freedom: odd ids interlace,
+    // ids ≡ 0 (mod 3) plant clears, ids ≡ 0 (mod 5) use 7-byte sub-blocks
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val recs = Multimodal.gifTable(spark, dir).collect().sortBy(_.media_id)
+    assert(recs.map(_.media_id).toSeq == lens.indices.map(_.toLong))
+    val pal = Multimodal.GifCodec.synthPalette
+    recs.zip(texts).foreach { case (r, t) =>
+      val src = t.getBytes("UTF-8")
+      val m = math.min(src.length, 144)
+      val h = math.max(1, (m + 5) / 6)
+      val img = Multimodal.GifCodec.decode(r.content)
+      assert(img.width == 6 && img.height == h,
+        s"length ${src.length}: ${img.width}x${img.height}, want 6x$h")
+      val indices = Array.tabulate(6 * h)(i => if (i < m) src(i) & 0xff else 0)
+      assert(img.pixels.toSeq == indices.toSeq.flatMap(i => pal.slice(3 * i, 3 * i + 3)),
+        s"length ${src.length}: pixels are not the padded source indices")
+    }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("FlacCodec round-trips PCM through real Rice/LPC compression across " +

@@ -334,24 +334,62 @@ class CurateStreamSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("non-partitioned key-store layout fails the batch instead of silently skipping dedup") {
+  test("a non-partitioned entry in any gated per-batch store fails the read " +
+      "instead of dropping out of the batch filter") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("curatelayout").toString
-    val keysDir = s"$root/out/_keys"; val dataDir = s"$root/out/data"
     val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
-    // a stray key file at the store root (e.g. from an old append-mode
-    // layout) would read as batch_id = null and be dropped by the
-    // batch_id < N filter — dedup silently disabled. Must fail loudly.
-    val b0 = Seq(doc(1, longText(1))).toDF(cols: _*)
-    CurateStream.processBatch(b0, 0, keysDir, dataDir, 30, 0.5)
-    val strayDir = s"$keysDir/legacy-keys.parquet"
-    b0.select(md5($"text".cast("binary")).as("_key")).write.parquet(strayDir)
-    val b1 = Seq(doc(2, longText(2))).toDF(cols: _*)
-    val e = intercept[IllegalArgumentException] {
-      CurateStream.processBatch(b1, 1, keysDir, dataDir, 30, 0.5)
+    // a stray parquet FILE at a store root (here: a copy of batch 0's
+    // file) reads as batch_id = null and silently drops out of the
+    // batch_id filter — dedup quietly off for a key/band/data store,
+    // rows quietly missing for the pack and bitext stores
+    def strayFile(store: String): String = {
+      val part = new java.io.File(s"$store/batch_id=0").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(store, "stray.parquet"))
+      "stray.parquet"
     }
-    assert(e.getMessage.contains("legacy-keys.parquet"))
+    // a whole key directory from some older unpartitioned layout
+    def strayDir(store: String): String = {
+      Seq("k").toDF("_key").write.parquet(s"$store/legacy-keys.parquet")
+      "legacy-keys.parquet"
+    }
+    def curate(nearDup: Boolean, batchId: Long)(out: String): Unit =
+      CurateStream.processBatch(Seq(doc(batchId + 1, longText(batchId + 1))).toDF(cols: _*),
+        batchId, s"$out/_keys", s"$out/data", 30, 0.5,
+        nearDupJaccard = if (nearDup) Some(0.8) else None)
+    val docs = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
+      .orderBy($"doc_id").limit(40)
+    val tok = java.nio.file.Files.createTempDirectory("curatelayout-tok").toString
+    graft.operators.TokenizerStore.trainBpe(docs, tok, 8, 256)
+    val emb = graft.core.Tables.load(spark, sf("sf0.001"), "embeddings")
+    val src = emb.filter($"vec_id" % 2 === 0)
+    val tgt = emb.filter($"vec_id" % 2 === 1).orderBy($"vec_id").limit(8)
+    def bitext(batchId: Long)(out: String): Unit =
+      BitextStream.processBatch(tgt, batchId, src, out, 4, 1.0)
+    // (store, how batch 0 lands, the store under the output dir, the
+    // gated read that must refuse, what is planted at the store root)
+    val cases = Seq[(String, String => Unit, String, String => Unit, String => String)](
+      ("key store, stray directory", curate(nearDup = false, 0), "_keys",
+        curate(nearDup = false, 1), strayDir),
+      ("key store", curate(nearDup = false, 0), "_keys", curate(nearDup = false, 1), strayFile),
+      ("band store", curate(nearDup = true, 0), "_bands", curate(nearDup = true, 1), strayFile),
+      ("data store (near-dup verify read)", curate(nearDup = true, 0), "data",
+        curate(nearDup = true, 1), strayFile),
+      ("pack fragment store", PackStream.processBatch(docs, 0, tok, _, 512, 32), "frag",
+        out => PackStream.packed(spark, out).collect(), strayFile),
+      ("bitext forward state", bitext(0), "fwd", bitext(1), strayFile))
+    cases.zipWithIndex.foreach { case ((what, land0, store, read, plant), i) =>
+      val out = s"$root/$i"
+      land0(out)
+      val name = plant(s"$out/$store")
+      withClue(s"$what: ") {
+        val e = intercept[IllegalArgumentException](read(out))
+        assert(e.getMessage.contains(name), e.getMessage)
+      }
+    }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tok))
   }
 
   test("corrupt key store fails the batch instead of silently skipping dedup") {

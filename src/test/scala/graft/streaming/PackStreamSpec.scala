@@ -220,6 +220,50 @@ class PackStreamSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
+  test("a fragment fold that crashed mid-swap is finished by the replayed batch " +
+      "under the load-based cadence") {
+    val root = java.nio.file.Files.createTempDirectory("packfoldcrash").toString
+    val out = s"$root/out"; val frag = s"$out/frag"
+    val tok = trainTok()
+    val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).head
+    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    val cuts = (1 to 3).map(i => lo + i * ((hi - lo) / 4))
+    val conds = Seq(col("doc_id") <= cuts(0),
+      col("doc_id") > cuts(0) && col("doc_id") <= cuts(1),
+      col("doc_id") > cuts(1) && col("doc_id") <= cuts(2),
+      col("doc_id") > cuts(2))
+    def run(i: Int): Unit = {
+      writeDrop(root, i, conds(i))
+      PackStream.start(spark, s"$root/in/*", out, s"$root/ck", tok,
+        autoCompactFragDirs = 3).awaitTermination()
+    }
+    (0 to 2).foreach(run)
+    // batch 3's pre-work fold (upTo = 2) crashes mid-frag fold: the bnd
+    // fold finished, the frag tmp is written, the marker is down and one
+    // source is deleted — leaving 2 fragment dirs, below the threshold
+    PackStream.foldStore(spark, out, PackStream.Bnd, upTo = 2L)
+    spark.read.schema(PackStream.Frag.data)
+      .parquet((0 to 2).map(b => s"$frag/batch_id=$b"): _*)
+      .transform(PackStream.Frag.merge)
+      .coalesce(1).write.parquet(s"$frag/.compact-tmp")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$frag/${Maintenance.CompactMarker}"),
+      "batch_id=2\nbatch_id=0\nbatch_id=1\nbatch_id=2")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$frag/batch_id=0"))
+    intercept[IllegalArgumentException](PackStream.packed(spark, out).collect())
+    // the replayed batch 3 sees the marker, finishes the plan first, then
+    // lands its own fragments: the store serves every drop again
+    run(3)
+    assert(!new java.io.File(s"$frag/${Maintenance.CompactMarker}").exists())
+    assert(new java.io.File(frag).list().filter(_.startsWith("batch_id=")).sorted.toSeq ==
+      Seq("batch_id=2", "batch_id=3"))
+    assert(PackStream.packed(spark, out).orderBy(col("seq_id")).collect().toSeq ==
+      Curation.packIds(docs, tok).orderBy(col("seq_id")).collect().toSeq)
+    assert(PackStream.packedBounds(spark, out).orderBy(col("seq_id")).collect().toSeq ==
+      Curation.packBounds(docs, tok).orderBy(col("seq_id")).collect().toSeq)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
   test("curate-and-pack equals batch packIds over batch curation's survivors") {
     val root = java.nio.file.Files.createTempDirectory("curatepack").toString
     val tok = trainTok()
