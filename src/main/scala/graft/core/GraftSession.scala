@@ -14,13 +14,19 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session time zone: required for oracle (DuckDB) parity — parquet
   *    timestamps are naive wall values; with UTC the wall value and the
   *    instant coincide.
+  *  - `file:` FileSystem: [[NioLocalFileSystem]], Hadoop's checksummed
+  *    local filesystem with permissions set by java.nio. Without its
+  *    native library, Hadoop's own forks `chmod` for every file and
+  *    directory it creates: about two forks per part file, on every
+  *    executor write the engine makes (BENCHNOTES "Part files without
+  *    forks").
   *  - checkpoint file manager: streaming offset, commit, source and sink
   *    logs and state-store files on the local filesystem are written by
-  *    [[LocalCheckpointFileManager]] with java.nio, not through Hadoop's
-  *    local `FileSystem`, which forks `chmod`/`readlink` several times
-  *    per small file without its native library (30% of the ingest
-  *    stream thread's stack samples, BENCHNOTES "Checkpoint files without
-  *    forks"). Paths on every other scheme keep Spark's default manager.
+  *    [[LocalCheckpointFileManager]] with java.nio, to a temp file that a
+  *    hard link or an atomic rename publishes; Spark's default manager
+  *    renames through `FileContext`, which forked `readlink` per link
+  *    lookup (BENCHNOTES "Checkpoint files without forks"). Paths on
+  *    every other scheme keep Spark's default manager.
   */
 object GraftSession {
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
@@ -39,6 +45,7 @@ object GraftSession {
       .config("spark.sql.streaming.stopGracefullyOnShutdown", "true")
       .config("spark.sql.extensions", "graft.core.GraftExtensions")
       .config(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
+      .config(NioLocalFileSystem.ConfKey, classOf[NioLocalFileSystem].getName)
       .config("spark.ui.enabled", "false")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

@@ -29,14 +29,15 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *    `IndexStore.ensureArtifactFor`.
   *
   * On the local filesystem a file is written with java.nio to a
-  * dot-prefixed temp file in its target directory and renamed into
-  * place. Hadoop's local `FileSystem` without its native library forks
-  * `chmod` for every file it creates (and its `.crc` sidecar) and
-  * `readlink` for every link-status lookup a `FileContext` rename makes;
-  * Spark's default manager paid both several times per log file, three
-  * log files per trigger (BENCHNOTES "Checkpoint files without forks").
-  * Files written here carry no `.crc` sidecar; the checksummed reader
-  * accepts a file without one.
+  * dot-prefixed temp file in its target directory and published in one
+  * atomic step. That publish is why this class stays now that the
+  * engine's `file:` FileSystem ([[NioLocalFileSystem]]) no longer forks
+  * `chmod`: Spark's default manager renames through `FileContext`, which
+  * forks `readlink` for every link-status lookup without Hadoop's native
+  * library, and its FileSystem-based manager checks for the target and
+  * then renames, which is not atomic against a second writer (BENCHNOTES
+  * "Checkpoint files without forks"). Files written here carry no `.crc`
+  * sidecar; the checksummed reader accepts a file without one.
   *  - no overwrite (`HDFSMetadataLog`'s second-writer detection): the
   *    temp file is hard-linked to the target, which fails atomically
   *    with Hadoop's `FileAlreadyExistsException` when the target exists
@@ -68,11 +69,7 @@ class LocalCheckpointFileManager(path: Path, conf: Configuration) extends Checkp
       case None => fm.createAtomic(p, overwriteIfPossible)
     }
 
-  override def mkdirs(p: Path): Unit = localFile match {
-    case Some(file) => Files.createDirectories(file(p).toPath)
-    case None => fm.mkdirs(p)
-  }
-
+  override def mkdirs(p: Path): Unit = fm.mkdirs(p)
   override def open(p: Path): FSDataInputStream = fm.open(p)
   override def list(p: Path, filter: PathFilter): Array[FileStatus] = fm.list(p, filter)
   override def exists(p: Path): Boolean = fm.exists(p)

@@ -35,16 +35,19 @@ object Ingest {
     * always UTC so the literal 'Z' suffix is exact. */
   def rfc3339(ts: Column): Column = date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'")
 
-  /** The LogEntry record as a struct column. Absent fields are null here
-    * and dropped by [[toJson]], reproducing Go omitempty — including the
-    * int quirk: byte_count 0 is omitted, so it is null-when-0 (reference
-    * main.go:49). Field order matches the Go struct declaration so the
-    * serialized JSON is field-for-field comparable. */
-  def logEntry(ts: Column, payload: Column, clientIp: Column): Column = {
+  /** The LogEntry fields as named columns, the one definition behind
+    * [[logEntry]] and the stream's flat projection
+    * (`graft.streaming.IngestStream.transform`). Absent fields are null
+    * here and dropped by [[toJson]] and the JSON sink, reproducing Go
+    * omitempty — including the int quirk: byte_count 0 is omitted, so it
+    * is null-when-0 (reference main.go:49). Field order matches the Go
+    * struct declaration so the serialized JSON is field-for-field
+    * comparable. */
+  def logEntryFields(ts: Column, payload: Column, clientIp: Column): Seq[Column] = {
     // null payload ≡ empty: severity already maps it to WARN; without the
     // coalesce the message concat would null out and omitempty-drop it
     val n = coalesce(octet_length(payload), lit(0))
-    struct(
+    Seq(
       rfc3339(ts).as("timestamp"),
       severity(payload).as("level"),
       concat(lit("received "), n.cast(StringType), lit(" bytes")).as("message"),
@@ -53,6 +56,10 @@ object Ingest {
       when(n > 0, hexLower(payload)).as("binary_data_hex"),
       when(n > 0, GoQuoteExpr.native(payload)).as("binary_data_string"))
   }
+
+  /** The LogEntry record as a struct column of [[logEntryFields]]. */
+  def logEntry(ts: Column, payload: Column, clientIp: Column): Column =
+    struct(logEntryFields(ts, payload, clientIp): _*)
 
   /** JSONL serialization with omitempty (reference main.go:116). */
   def toJson(entry: Column): Column =

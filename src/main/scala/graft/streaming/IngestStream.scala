@@ -29,12 +29,15 @@ import graft.operators.Ingest
   * accepted frame: roughly 0.1 ms each for the Go-%q kernel and
   * `lower(hex(...))`, the rest JSON encoding and writing a LogEntry line
   * about 5× the payload (BENCHNOTES "Ingest %q kernel"). A trigger's
-  * fixed cost is mostly driver time: in the same traced run a trigger
-  * averaged 212 ms — `addBatch` 176 ms against 30 ms `queryPlanning`,
-  * 1.0 ms `walCommit` and 2.3 ms `commitOffsets`, the two log writes
-  * that took 52 ms and 57 ms while Hadoop's local `FileSystem` forked
-  * `chmod`/`readlink` for them (BENCHNOTES "Checkpoint files without
-  * forks"). Admission control and worker pooling from the reference
+  * fixed cost is mostly the write job's scheduling. Medians from the
+  * Spark event log of five untraced runs (BENCHNOTES "Part files without
+  * forks"): a trigger takes 150 ms — `addBatch` 131 ms, `queryPlanning`
+  * 13.5 ms, `walCommit` and `commitOffsets` about 1 ms each. In the
+  * 80 ms write job, 25 ms pass from job submit to task launch and 24 ms
+  * in task deserialization, much of both spent writing the session's
+  * 113 KB Hadoop `Configuration` into the task binary and reading it
+  * back; the task itself runs 17.5 ms, 14 ms of it CPU.
+  * Admission control and worker pooling from the reference
   * (main.go:25-27,127-143) are owned by the engine: `maxFilesPerTrigger`
   * rate-limits directory intake, the task scheduler places the tasks.
   */
@@ -80,15 +83,15 @@ object IngestStream {
         lit(s"$host:$port").as("client_ip"))
 
   /** The shared pipeline body — identical logic to the batch Q12 path.
-    * LogEntry fields are emitted as real columns; the JSON sink writes
-    * them one-object-per-line with `ignoreNullFields` reproducing Go's
-    * omitempty (reference main.go:43-53). */
+    * LogEntry fields are projected as top-level columns straight from
+    * [[Ingest.logEntryFields]], with no struct to build and unpack; the
+    * JSON sink writes them one-object-per-line with `ignoreNullFields`
+    * reproducing Go's omitempty (reference main.go:43-53). */
   def transform(payloads: DataFrame): DataFrame =
     payloads
       .filter(Ingest.nonEmpty(col("payload")))
-      .select(Ingest.logEntry(col("ts"), col("payload"), col("client_ip")).as("e"),
-        to_date(col("ts")).as("date"))
-      .select(col("e.*"), col("date"))
+      .select(Ingest.logEntryFields(col("ts"), col("payload"), col("client_ip")) :+
+        to_date(col("ts")).as("date"): _*)
 
   /** Single-string JSONL form (console echo / socket-ack payloads). */
   def transformJson(payloads: DataFrame): DataFrame =
@@ -240,10 +243,11 @@ object IngestStream {
       val cutoff = java.time.LocalDate.now(java.time.ZoneOffset.UTC).minusDays(keepDays.toLong)
       fs.listStatus(path).foreach { st =>
         val name = st.getPath.getName
-        if (name.startsWith("date=")) {
-          val d = java.time.LocalDate.parse(name.stripPrefix("date="))
-          if (d.isBefore(cutoff)) fs.delete(st.getPath, true)
-        }
+        // a name that is no date (Spark's `__HIVE_DEFAULT_PARTITION__`
+        // for a null date, a stray copy) is never deleted
+        val d = if (name.startsWith("date=")) scala.util.Try(
+          java.time.LocalDate.parse(name.stripPrefix("date="))).toOption else None
+        if (d.exists(_.isBefore(cutoff))) fs.delete(st.getPath, true)
       }
     }
   }

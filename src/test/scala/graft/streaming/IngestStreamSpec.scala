@@ -4,10 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, to_date}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+import graft.operators.Ingest
 
 /** S4 end-to-end: files dropped in a directory flow through the full
   * pipeline (frame → filter → hex/%q/severity → LogEntry JSON) into the
@@ -238,13 +239,51 @@ class IngestStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("one LogEntry field list: the flat projection's columns and JSON lines match " +
+      "to_json(logEntry) byte for byte") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2024-06-01 10:00:00")
+    val payloads = Seq[Array[Byte]](
+      Array.emptyByteArray, null, Array[Byte](0x41),
+      Array.tabulate[Byte](4096)(i => (i * 31 + 7).toByte),
+      Array[Byte](0x67, 0xc3.toByte, 0x28, 0xff.toByte, 0xe2.toByte, 0x82.toByte)) // invalid UTF-8
+    val df = payloads.zipWithIndex.map { case (p, i) => PayloadRow(p, ts, s"10.0.0.$i") }.toDF()
+    val entry = Ingest.logEntry(col("ts"), col("payload"), col("client_ip"))
+    val fields = df.select(entry.as("e")).schema("e").dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
+    assert(IngestStream.transform(df).columns.toSeq == fields :+ "date")
+
+    // the sink's JSON lines: the flat columns through the JSON datasource
+    def sinkLines(flat: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val dir = Files.createTempDirectory("graft-logentry").resolve("out")
+      flat.write.option("ignoreNullFields", "true").partitionBy("date").json(dir.toString)
+      Files.walk(dir).iterator().asScala.toSeq
+        .filter(f => f.getFileName.toString.startsWith("part-"))
+        .flatMap(f => Files.readAllLines(f).asScala).sorted
+    }
+    // every payload, empty and null included, through the one field list
+    val all = sinkLines(df.select(
+      Ingest.logEntryFields(col("ts"), col("payload"), col("client_ip")) :+
+        to_date(col("ts")).as("date"): _*))
+    assert(all.length == payloads.length)
+    assert(all == df.select(Ingest.toJson(entry)).as[String].collect().toSeq.sorted)
+    // the stream body: empty and null dropped, the rest byte-identical
+    val lines = sinkLines(IngestStream.transform(df))
+    assert(lines.length == 3)
+    assert(lines == IngestStream.transformJson(df).select("value").as[String]
+      .collect().toSeq.sorted)
+  }
+
   test("retention drops only expired date partitions") {
     val out = Files.createTempDirectory("graft-retention").toString
-    Files.createDirectories(Paths.get(s"$out/date=2020-01-01"))
     val today = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toString
-    Files.createDirectories(Paths.get(s"$out/date=$today"))
+    // a name that is no date (Spark's null-date partition, a stray copy)
+    // is kept, and does not stop the expired partitions beside it going
+    val expired = Seq("date=2020-01-01", "date=2019-06-30")
+    val kept = Seq(s"date=$today", "date=__HIVE_DEFAULT_PARTITION__", "date=2024-01-01.bak")
+    (expired ++ kept).foreach(d => Files.createDirectories(Paths.get(s"$out/$d")))
     IngestStream.dropExpiredPartitions(spark, out, keepDays = 30)
-    assert(!Files.exists(Paths.get(s"$out/date=2020-01-01")))
-    assert(Files.exists(Paths.get(s"$out/date=$today")))
+    expired.foreach(d => assert(!Files.exists(Paths.get(s"$out/$d")), d))
+    kept.foreach(d => assert(Files.exists(Paths.get(s"$out/$d")), d))
   }
 }
